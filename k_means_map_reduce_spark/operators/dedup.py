@@ -2596,7 +2596,7 @@ def _mh_err_oracle_sql() -> str:
 # checkpoint serves every warm rep of both. Content is deterministic
 # (portable md5/affine mins); all consumers join/aggregate, so
 # checkpoint-order differences cannot reach any result.
-_SIG24_CACHE = SessionMemo("dedup.pmh_sig24")
+_SIG24_CACHE = SessionMemo("dedup.pmh_sig24", maxsize=8)
 
 
 def _pmh_sig24(spark: SparkSession, sf_dir: str, hs_df: DataFrame) -> DataFrame:

@@ -555,7 +555,6 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     return result
 
 
-_KCORE_K = 3
 _KCORE_ROUNDS = 4
 _KCORE_CACHE = SessionMemo("graph.kcore")
 
@@ -1698,105 +1697,108 @@ def graph_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcasts these wave-scale frames while they fit the configured
     # threshold and falls back to shuffle joins at cluster scale — the
     # stats-driven, scale-adaptive pick (guide §3.1). All pins are
-    # released before returning (the result is memoized; nothing leaks).
+    # released in the `finally` below, on a failed peel too.
     pinned = []
 
     def _mat(df: DataFrame) -> DataFrame:
         df = df.persist()
-        df.count()
         pinned.append(df)
+        df.count()
         return df
 
-    wave = _mat(
-        sup0.where(F.col("support") == 1).select(
-            F.col("eu").alias("u"), F.col("ev").alias("v")
+    try:
+        wave = _mat(
+            sup0.where(F.col("support") == 1).select(
+                F.col("eu").alias("u"), F.col("ev").alias("v")
+            )
         )
-    )
-    tri = _full_triangle_list(spark, sf_dir)  # (w0, x, z), x < z
-    tri_edges = (
-        (F.least("w0", "x"), F.greatest("w0", "x")),
-        (F.least("w0", "z"), F.greatest("w0", "z")),
-        (F.col("x"), F.col("z")),
-    )
+        tri = _full_triangle_list(spark, sf_dir)  # (w0, x, z), x < z
+        tri_edges = (
+            (F.least("w0", "x"), F.greatest("w0", "x")),
+            (F.least("w0", "z"), F.greatest("w0", "z")),
+            (F.col("x"), F.col("z")),
+        )
 
-    def _touches(base: DataFrame, probe: DataFrame, tag: str, want: bool):
-        """Filter `base` triangles by whether ANY of their 3 edges is in
-        `probe`: one pass, three LEFT joins against the (tiny) probe frame
-        carrying a flag column — AQE broadcasts it, so the triangle list is
-        never shuffled."""
-        out = base
-        flags = []
-        for s, (cu, cv) in enumerate(tri_edges):
-            flag = f"_{tag}{s}"
-            pr = probe.select(
-                F.col("u").alias(f"_{tag}u{s}"),
-                F.col("v").alias(f"_{tag}v{s}"),
-                F.lit(1).alias(flag),
-            )
-            out = out.join(
-                pr,
-                (cu == F.col(f"_{tag}u{s}")) & (cv == F.col(f"_{tag}v{s}")),
-                "left",
-            )
-            flags.append(F.col(flag).isNotNull())
-        hit = flags[0] | flags[1] | flags[2]
-        return out.where(hit if want else ~hit).select("w0", "x", "z")
-
-    prior_wave = None
-    for _ in range(2):
-        killed = _touches(tri, wave, "w", want=True)
-        if prior_wave is not None:
-            # triangles touching an EARLIER wave are already dead — they
-            # must not decrement again (the double-accounting guard)
-            killed = _touches(killed, prior_wave, "p", want=False)
-        # the 3-way edge explode consumes killed three times: cut lineage so
-        # the probe joins run once (killed is wave-scale, tiny)
-        killed = killed.localCheckpoint(eager=True)
-        dec = (
-            killed.select(
-                F.least("w0", "x").alias("u"), F.greatest("w0", "x").alias("v")
-            )
-            .unionAll(
-                killed.select(
-                    F.least("w0", "z").alias("u"),
-                    F.greatest("w0", "z").alias("v"),
+        def _touches(base: DataFrame, probe: DataFrame, tag: str, want: bool):
+            """Filter `base` triangles by whether ANY of their 3 edges is in
+            `probe`: one pass, three LEFT joins against the (tiny) probe frame
+            carrying a flag column — AQE broadcasts it, so the triangle list is
+            never shuffled."""
+            out = base
+            flags = []
+            for s, (cu, cv) in enumerate(tri_edges):
+                flag = f"_{tag}{s}"
+                pr = probe.select(
+                    F.col("u").alias(f"_{tag}u{s}"),
+                    F.col("v").alias(f"_{tag}v{s}"),
+                    F.lit(1).alias(flag),
                 )
+                out = out.join(
+                    pr,
+                    (cu == F.col(f"_{tag}u{s}")) & (cv == F.col(f"_{tag}v{s}")),
+                    "left",
+                )
+                flags.append(F.col(flag).isNotNull())
+            hit = flags[0] | flags[1] | flags[2]
+            return out.where(hit if want else ~hit).select("w0", "x", "z")
+
+        prior_wave = None
+        for _ in range(2):
+            killed = _touches(tri, wave, "w", want=True)
+            if prior_wave is not None:
+                # triangles touching an EARLIER wave are already dead — they
+                # must not decrement again (the double-accounting guard)
+                killed = _touches(killed, prior_wave, "p", want=False)
+            # the 3-way edge explode consumes killed three times: cut lineage so
+            # the probe joins run once (killed is wave-scale, tiny)
+            killed = killed.localCheckpoint(eager=True)
+            dec = (
+                killed.select(
+                    F.least("w0", "x").alias("u"), F.greatest("w0", "x").alias("v")
+                )
+                .unionAll(
+                    killed.select(
+                        F.least("w0", "z").alias("u"),
+                        F.greatest("w0", "z").alias("v"),
+                    )
+                )
+                .unionAll(
+                    killed.select(F.col("x").alias("u"), F.col("z").alias("v"))
+                )
+                .groupBy("u", "v")
+                .agg(F.count(F.lit(1)).alias("dcnt"))
             )
-            .unionAll(
-                killed.select(F.col("x").alias("u"), F.col("z").alias("v"))
+            dec = _mat(dec)
+            supd = E.join(dec, ["u", "v"], "left").select(
+                "u",
+                "v",
+                (F.col("support") - F.coalesce(F.col("dcnt"), F.lit(0))).alias(
+                    "support"
+                ),
             )
-            .groupBy("u", "v")
-            .agg(F.count(F.lit(1)).alias("dcnt"))
+            # evidence hook (r13 verdict item 7): the query returns a 1-row
+            # literal, so explain() on the result cannot show the peel shape —
+            # dump each round's support-update plan BEFORE the lineage cut
+            _maybe_dump_plan(supd, "ktruss_round_support")
+            # consumed twice (survivors + next wave): cut lineage
+            supd = supd.localCheckpoint(eager=True)
+            prior_wave = wave
+            wave = _mat(supd.where(F.col("support") == 1).select("u", "v"))
+            E = supd.where(F.col("support") >= 2)
+            counts.append(E.count())
+        nodes = (
+            E.select(F.col("u").alias("node"))
+            .unionAll(E.select(F.col("v").alias("node")))
+            .agg(F.countDistinct("node").cast("bigint").alias("n"))
+            .collect()[0]["n"]
         )
-        dec = _mat(dec)
-        supd = E.join(dec, ["u", "v"], "left").select(
-            "u",
-            "v",
-            (F.col("support") - F.coalesce(F.col("dcnt"), F.lit(0))).alias(
-                "support"
-            ),
-        )
-        # evidence hook (r13 verdict item 7): the query returns a 1-row
-        # literal, so explain() on the result cannot show the peel shape —
-        # dump each round's support-update plan BEFORE the lineage cut
-        _maybe_dump_plan(supd, "ktruss_round_support")
-        # consumed twice (survivors + next wave): cut lineage
-        supd = supd.localCheckpoint(eager=True)
-        prior_wave = wave
-        wave = _mat(supd.where(F.col("support") == 1).select("u", "v"))
-        E = supd.where(F.col("support") >= 2)
-        counts.append(E.count())
-    nodes = (
-        E.select(F.col("u").alias("node"))
-        .unionAll(E.select(F.col("v").alias("node")))
-        .agg(F.countDistinct("node").cast("bigint").alias("n"))
-        .collect()[0]["n"]
-    )
-    # every count above is final — release the wave/dec pins (lesson 30:
-    # bench reps must not accumulate pinned storage; the 1-row result below
-    # is what the memo holds)
-    for df in pinned:
-        df.unpersist()
+    finally:
+        # every count above is final — release the wave/dec pins on
+        # success and on a failed peel alike (lesson 30: bench reps must
+        # not accumulate pinned storage; the 1-row result below is what
+        # the memo holds)
+        for df in pinned:
+            df.unpersist()
     out = spark.range(1).select(
         F.lit(4).cast("int").alias("k"),
         F.lit(3).cast("int").alias("rounds"),

@@ -44,15 +44,6 @@ from ._util import dsum, sql_dsum
 _SUPPLIES_SQL = "SELECT DISTINCT l_partkey, l_suppkey FROM lineitem"
 
 
-def _supplies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Derived part↔supplier link (partsupp substitute): distinct pairs."""
-    return (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_partkey", "l_suppkey")
-        .distinct()
-    )
-
-
 @query(
     "q2_min_acctbal_supplier",
     oracle=f"""

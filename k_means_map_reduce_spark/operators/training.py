@@ -1814,7 +1814,7 @@ def training_perplexity_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # (applicationId, sf_dir) -> persisted distinct (doc, lang, 5-gram md5)
 # postings — the rare-fingerprint filter and both pair sides consume it.
-_XLING_GRAMS_CACHE = SessionMemo("training.xling_grams")
+_XLING_GRAMS_CACHE = SessionMemo("training.xling_grams", maxsize=8)
 
 
 @query(

@@ -1,4 +1,4 @@
-"""Sinks: parquet/csv/json writers + bucketed tables for co-located joins.
+"""Sinks: parquet/csv/orc writers + bucketed tables for co-located joins.
 
 The reference's sinks are per-reducer text files re-parsed by the next stage
 (/root/reference/reducer.py:68-73, mapper.py:72-84). Spark equivalents are
@@ -23,10 +23,6 @@ def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).option("header", True).csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
 
 
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -39,7 +39,10 @@ def main() -> None:
         sys.exit(1)
     suffix = sys.argv[1]
     names = sys.argv[2:]
-    if names and names[0] == "--file":
+    if names[0] == "--file":
+        if len(names) != 2:
+            print(USAGE, file=sys.stderr)
+            sys.exit(1)
         with open(names[1]) as fh:
             names = [line.strip() for line in fh if line.strip()]
     unknown = [n for n in names if n not in QUERIES]

@@ -236,6 +236,51 @@ def test_assign_broadcast_equals_literal(spark):
     assert lit == bc
 
 
+def test_fused_assign_equals_fold_on_edge_rows(spark, monkeypatch):
+    """Below FUSED_ASSIGN_MAX_KDIM assign_clusters emits the flat codegen
+    argmin; it must agree with the higher-order-function fold bit for bit on
+    cid and dist2 — ties, wrong lengths, NULL elements and NaN included."""
+    import random as _random
+    import struct
+
+    from k_means_map_reduce_spark import kmeans as K
+
+    # cid 1 and 2 are duplicates; [0.5, 0.5] is equidistant from cid 0 and 3
+    cents = [[0.0, 0.0], [2.0, 2.0], [2.0, 2.0], [1.0, 1.0], [-3.0, 1e-05]]
+    assert len(cents) * len(cents[0]) <= K.FUSED_ASSIGN_MAX_KDIM
+    rng = _random.Random(5)
+    rows = [
+        (0, [2.0, 2.0]),  # exact tie between duplicated centroids -> cid 1
+        (1, [0.5, 0.5]),  # tie between distinct centroids -> cid 0
+        (2, [1.0]),  # too short
+        (3, [1.0, 2.0, 3.0]),  # too long
+        (4, [1.0, None]),  # NULL element
+        (5, [float("nan"), 0.0]),  # NaN coordinate
+        (6, None),  # NULL vector
+    ] + [(i, [rng.uniform(-5, 5), rng.uniform(-5, 5)]) for i in range(7, 200)]
+
+    def bits(x):
+        return None if x is None else struct.pack("<d", x)
+
+    for vec_type in ("ARRAY<DOUBLE>", "ARRAY<FLOAT>"):
+        df = spark.createDataFrame(rows, f"vec_id BIGINT, vec {vec_type}")
+
+        def assign(df=df):
+            return {
+                r["vec_id"]: (r["cid"], bits(r["dist2"]))
+                for r in K.assign_clusters(df, cents, "vec").collect()
+            }
+
+        fused = assign()
+        with monkeypatch.context() as m:
+            m.setattr(K, "FUSED_ASSIGN_MAX_KDIM", 0)
+            fold = assign()
+        assert fused == fold, vec_type
+        assert fused[0] == (1, bits(0.0)) and fused[1] == (0, bits(0.5))
+        assert all(fused[i] == (0, None) for i in (2, 3, 4, 6))
+        assert fused[5][0] == 0 and math.isnan(struct.unpack("<d", fused[5][1])[0])
+
+
 def test_als_beats_mean_baseline_and_shape(spark, sf_dir):
     """ALS factors must reconstruct training interactions better than the
     global mean (MSE), and the query's output must be 5 ranked parts per

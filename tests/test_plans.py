@@ -564,6 +564,26 @@ def test_pmh_signatures_stay_in_codegen(spark, sf_dir):
     assert "HashAggregate" in r.text
 
 
+def test_kmeans_assignment_fused_below_gate(spark):
+    """assign_clusters at the benchmark shape (k=5, dim=2) must be one flat
+    codegen expression: no CodegenFallback lambda (lesson 26) may remain in
+    the plan. At the embeddings shape (k=8, dim=64) the gate must keep the
+    fold: above k·dim=16 the fused tree loses at small row counts
+    (kmeans.FUSED_ASSIGN_MAX_KDIM)."""
+    from k_means_map_reduce_spark.kmeans import assign_clusters
+
+    small = spark.createDataFrame([([1.0, 2.0],)], "vec array<double>")
+    r = plan_report(assign_clusters(small, [[float(c), 0.0] for c in range(5)]))
+    text = r.text.lower()
+    assert "lambdafunction" not in text
+    assert "transform(" not in text and "array_sort" not in text
+    assert "least(" in text
+
+    wide = spark.createDataFrame([([0.0] * 64,)], "vec array<double>")
+    r = plan_report(assign_clusters(wide, [[float(c)] * 64 for c in range(8)]))
+    assert "array_sort" in r.text and "lambdafunction" in r.text.lower()
+
+
 def test_geo_proximity_joins_on_raw_cell_columns(spark, sf_dir):
     """geo_grid_proximity_join must join on the raw (cx, cy) longs, never
     the interleaved Morton key: a wide expression as an equi-join key is
