@@ -347,7 +347,14 @@ def kmeans_native(
     """DataFrame-native Lloyd's loop (reference master.start, master.py:106-159).
 
     init: "random" (the reference's seeded sample) or "k||" (k-means||,
-    MLlib's default init, re-expressed with DataFrame ops)."""
+    MLlib's default init, re-expressed with DataFrame ops).
+
+    "random" draws its starting centroids with ``rdd.takeSample``, so the
+    draw depends on the seed *and* on how the input is partitioned (e.g.
+    ``createDataFrame`` slices by ``defaultParallelism``, the core count).
+    Lloyd's loop from a uniform sample gives no guarantee of reaching the
+    global optimum: two starting centroids in one cluster can leave a centre
+    spanning two. Use "k||" when recovering the true clusters matters."""
     pts = (
         df.select(F.col(vec_col).cast("array<double>").alias("vec"))
         .where(F.col("vec").isNotNull() & (F.size("vec") > 0))

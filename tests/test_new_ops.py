@@ -5,6 +5,7 @@ compression invariants, plan shapes)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -271,6 +272,10 @@ def test_points_txt_python_datasource_matches_expression_reader(spark, tmp_path)
     assert a == b and len(a) == 201
 
 
+@pytest.mark.skipif(
+    not os.path.exists("/root/reference/Data/Input/points.txt"),
+    reason="reference sample not present",
+)
 def test_points_txt_python_datasource_reads_reference_file(spark):
     from k_means_map_reduce_spark.sources.points_datasource import register
     from k_means_map_reduce_spark.sources.points_txt import read_points_txt
