@@ -479,14 +479,16 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeled by the smallest doc_id in each component (the canonical
     "keep one per cluster" step after pair generation).
 
-    Spark side: iterative min-label propagation — per round, every node
-    takes the min of its own label and its neighbors' labels (one shuffle
-    join + one aggregation per round), stopping when no label changes.
-    Rounds = graph diameter; for dedup graphs (small, dense clusters)
-    that's 2-3. At trillion-edge scale the same loop with the large-star/
-    small-star rewrites (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC'14) converges in O(log^2 n) rounds; the per-round
-    dataflow below is unchanged.
+    Spark side (_min_label_components): a pair graph of at most
+    ONE_TASK_COMPONENTS_MAX_EDGES edges is labeled in one pass by a
+    union-find on the driver; a larger one by iterative min-label
+    propagation — per round, every node takes the min of its own label and
+    its neighbors' labels (one shuffle join + one aggregation per round),
+    stopping when no label changes. Rounds = graph diameter; for dedup
+    graphs (small, dense clusters) that's 2-3. At trillion-edge scale the
+    same loop with the large-star/small-star rewrites (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14) converges in
+    O(log^2 n) rounds; the per-round dataflow below is unchanged.
 
     Oracle: DuckDB recursive CTE propagating labels along edges to a
     fixpoint, then MIN per node — same fixpoint, declarative recursion.
@@ -495,26 +497,78 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _min_label_components(pairs)
 
 
-def _min_label_components(pairs: DataFrame) -> DataFrame:
-    """Min-label propagation to a fixpoint over an undirected pair list.
+# Largest symmetric edge list (2 rows per pair) that _min_label_components
+# labels in ONE pass instead of the per-round distributed loop. Measured on
+# a 4-core box over dedup-shaped graphs (clusters of 2-6 docs; NEXT.md
+# lesson 50), one pass vs loop: 200k edges 0.7-0.9 vs 2.7-2.9 s, 600k
+# edges 2.2-2.5 vs 5.5-5.9 s, 2M edges 7.2-8.4 vs 13.9-15.6 s. The
+# union-find is single-threaded and holds every node in one dict, so the
+# gate sits where it still wins 3x, leaving room for wider boxes' faster
+# loop; 200k edges are ~3 MB on the driver.
+ONE_TASK_COMPONENTS_MAX_EDGES = 200_000
 
-    Per round: every node takes the min of its own label and its neighbors'
-    (one shuffle join + one aggregation), stopping when no label changes.
-    Rounds = graph diameter, so this is the right loop ONLY for
-    small-diameter graphs: dedup pair graphs are dense blobs of diameter
-    2-3 and finish in 2-3 rounds. High-diameter meshes (the DBSCAN core
-    graph: diameter ~70+ at sf0.1, 24 s warm through this loop) use
-    _star_contraction_components instead — O(log² n) rounds irrespective
-    of diameter (a label-of-label shortcut was tried here first and does
-    NOT help: it collapses stale label chains but the frontier still
-    advances one hop per round). The algorithm-selection rule lives in
-    both docstrings and NEXT.md lesson 43.
+
+def _min_label_components(pairs: DataFrame) -> DataFrame:
+    """Connected components of an undirected pair list, each node labeled
+    with the smallest id in its component: (doc_id, component), with the
+    pair columns' id type. Pair ids are non-null (every caller's pairs come
+    out of doc_id equi-joins).
+
+    Algorithm selection (NEXT.md lessons 43 and 50):
+    - one task: at most ONE_TASK_COMPONENTS_MAX_EDGES symmetric edges. One
+      job counts (and caches) the edge list, one single-task job brings it
+      to the driver as Arrow, and a union-find whose root is always the
+      minimum id labels it there (_union_find_min_label): 2 jobs in all,
+      against 14 for the loop on perfbench's 25-pair banding graph. The
+      union-find runs on the driver, not in a mapInArrow task, because a
+      Python worker round trip costs ~0.2 s per job, 5x a JVM-only job.
+      Dedup pair graphs at the tested scales land here.
+    - min-label loop (below): every round, every node takes the min of
+      its own label and its neighbors' (one shuffle join + one
+      aggregation), stopping when no label changes. Rounds = graph
+      diameter, so it fits ONLY small-diameter graphs: dedup pair graphs
+      are dense blobs of diameter 2-3.
+    - star contraction: high-diameter meshes (the DBSCAN core graph:
+      diameter ~70+ at sf0.1, 24 s warm through the loop) call
+      _star_contraction_components instead — O(log² n) rounds irrespective
+      of diameter (a label-of-label shortcut was tried in the loop first
+      and does NOT help: it collapses stale label chains but the frontier
+      still advances one hop per round).
     Shared by the oracled (jaccard-pair) and LSH (banding-pair) variants.
     """
+    spark = pairs.sparkSession
     edges = pairs.toDF("doc_a", "doc_b")
     edges = edges.union(
         edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).toDF("src", "dst").cache()
+    # Count the plan's RDD on the JVM: one job that also fills the cache, in
+    # defaultParallelism tasks (the union has 2 partitions per pair-list
+    # partition, and their scheduling costs more than the rows here).
+    # edges.count() adds an aggregation exchange, and under AQE the cached
+    # scan becomes its own query stage: 3 jobs for the same number.
+    n_edges = (
+        edges.coalesce(spark.sparkContext.defaultParallelism)
+        ._jdf.queryExecution().toRdd().count()
+    )
+    if n_edges <= ONE_TASK_COMPONENTS_MAX_EDGES:
+        import pyarrow as pa
+
+        try:
+            tbl = edges.coalesce(1).toArrow()
+        finally:
+            edges.unpersist()
+        nodes, comps = _union_find_min_label(
+            tbl.column("src").to_pylist(), tbl.column("dst").to_pylist()
+        )
+        id_type = tbl.schema.field("src").type  # int ids stay int32
+        return spark.createDataFrame(
+            pa.table(
+                {
+                    "doc_id": pa.array(nodes, id_type),
+                    "component": pa.array(comps, id_type),
+                }
+            )
+        )
     # localCheckpoint (not cache) so the initial frame never leaks storage
     # across long-lived sessions — per-round frames below follow suit.
     labels = (
@@ -569,6 +623,26 @@ def _min_label_components(pairs: DataFrame) -> DataFrame:
     return result
 
 
+def _union_find_min_label(src: list, dst: list) -> tuple[list, list]:
+    """(nodes, components) of the graph with edges zip(src, dst): a
+    union-find whose smaller root always wins, so each root is its
+    component's minimum id. Path halving keeps finds near-constant."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in zip(src, dst):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    return nodes, [find(n) for n in nodes]
+
+
 @query("dedup_connected_components_lsh")
 def dedup_connected_components_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters at scale: the same min-label propagation as
@@ -576,8 +650,8 @@ def dedup_connected_components_lsh(spark: SparkSession, sf_dir: str) -> DataFram
     (dedup_minhash_banding_pairs, Jaccard ≥ 0.4) instead of the
     block-quadratic jaccard baseline — so BOTH stages are sub-quadratic:
     candidate generation is a band-key equi-join and clustering is one
-    shuffle per diameter round. Rows-only (banding recall is
-    probabilistic); pair-set recall is tested against the brute baseline
+    pass for small graphs, one shuffle per diameter round above that.
+    Rows-only (banding recall is probabilistic); pair-set recall is tested against the brute baseline
     and the component labeling is cross-checked against a driver-side
     union-find in tests/test_dedup.py."""
     pairs = dedup_minhash_banding_pairs(spark, sf_dir).select(
@@ -747,13 +821,17 @@ def _pmh_signatures(base: DataFrame, perms: list[tuple[int, int]]) -> DataFrame:
     stays entirely inside whole-stage codegen and combines map-side (the
     shuffle carries one n-long row per doc per map partition, not the
     shingle sets). Measured at sf0.1 warm: 8-perm tier 0.69 -> 0.53 s,
-    24-perm signature subtree 2x faster standing alone."""
+    24-perm signature subtree 2x faster standing alone.
+
+    The n mins are ONE SQL string parsed JVM-side, not n nested F.* trees
+    (a py4j round-trip per node; NEXT.md lesson 50) — same optimized plan."""
     ex = base.select("doc_id", F.explode("sh").alias("h"))
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % _PMH_P).alias(f"s{j}")
-        for j, (a, b) in enumerate(perms)
-    ]
-    return ex.groupBy("doc_id").agg(*aggs)
+    aggs = ", ".join(
+        f"min(({a} * h + {b}) % {_PMH_P}) AS s{j}" for j, (a, b) in enumerate(perms)
+    )
+    return base.sparkSession.sql(
+        f"SELECT doc_id, {aggs} FROM {{ex}} GROUP BY doc_id", ex=ex
+    )
 
 
 def _banding_oracle_sql() -> str:
@@ -823,24 +901,15 @@ def dedup_minhash_banding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plans across invocations, so repeated calls reuse one cached copy)
     hs_df = _pmh_shingle_sets(spark, sf_dir).persist()
     sig = _pmh_signatures(hs_df, perms)
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ":",
-                            F.col(f"s{_PMH_R * b}").cast("string"),
-                            F.col(f"s{_PMH_R * b + 1}").cast("string"),
-                        ).alias("bh"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
+    # one SQL string for the n_bands-struct explode (see _pmh_signatures)
+    band_structs = ", ".join(
+        f"struct({b} AS band, concat_ws(':', CAST(s{_PMH_R * b} AS STRING), "
+        f"CAST(s{_PMH_R * b + 1} AS STRING)) AS bh)"
+        for b in range(n_bands)
+    )
+    bands = sig.selectExpr(
+        "doc_id", f"explode(array({band_structs})) AS bk"
+    ).selectExpr("doc_id", "bk.band AS band", "bk.bh AS bh")
     # the band postings feed BOTH sides of the candidate self-join: without
     # a persist the signature aggregation re-runs once per side (lesson 15)
     bands = bands.persist()
@@ -870,7 +939,12 @@ def dedup_minhash_banding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # only) and the clusters/survivorship consumers re-derive plans
         # from it — checkpoint blocks reuse without registering the whole
         # pipeline subtree in the CacheManager (the e57148a plan-shape
-        # substitution gotcha).
+        # substitution gotcha). eager=False is NOT lazy under AQE: the
+        # checkpoint takes the RDD of the executed adaptive plan, so every
+        # shuffle/broadcast stage below runs here, at construction: at
+        # sf0.01 this build runs 8 jobs with AQE on, 2 (the broadcasts)
+        # with it off (NEXT.md lesson 50). Only the final stage waits for
+        # the first action.
         .localCheckpoint(eager=False)
     )
     # the memo stores the persisted INTERMEDIATES alongside the output so
@@ -1138,8 +1212,8 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark side composes the two existing sub-quadratic stages: banded
     candidate generation (band-key equi-join, no cross product) feeding
-    iterative min-label propagation (one shuffle join + one agg per
-    diameter round). Labels are smallest-doc_id-in-component, so the
+    _min_label_components (one union-find pass for small pair graphs,
+    min-label propagation per diameter round for large ones). Labels are smallest-doc_id-in-component, so the
     output is engine-independent.
     """
     return _banding_components(spark, sf_dir)
@@ -2904,9 +2978,10 @@ def _star_contraction_components(pairs: DataFrame) -> DataFrame:
     contraction (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14) — O(log^2 n) rounds irrespective of diameter.
 
-    _min_label_components needs DIAMETER rounds (the minimum travels one
-    hop per round; a label-of-label shortcut collapses stale chains but
-    does NOT speed the frontier). Dedup pair graphs are dense blobs of
+    _min_label_components' distributed loop (above its one-pass gate)
+    needs DIAMETER rounds (the minimum travels one hop per round; a
+    label-of-label shortcut collapses stale chains but does NOT speed the
+    frontier). Dedup pair graphs are dense blobs of
     diameter 2-3, so the plain loop wins there; the DBSCAN core graph is
     a long spatial mesh (diameter ~70+ at sf0.1 — the plain loop cost
     24 s warm), where contraction wins decisively.

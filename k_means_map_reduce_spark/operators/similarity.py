@@ -927,6 +927,10 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rel"),
     )
     w_rel = Window.partitionBy("q_id").orderBy(F.col("rel").desc(), "vec_id")
+    # eager=False still runs work here: under AQE a checkpoint takes the
+    # RDD of the executed adaptive plan, so its broadcast and shuffle
+    # stages run at construction; only the final stage waits for an action
+    # (NEXT.md lesson 50). The same holds for `pw` and each round's `picks`.
     sl = (
         scored.withColumn("rnk", F.row_number().over(w_rel))
         .where(F.col("rnk") <= _MMR_POOL)
@@ -945,6 +949,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id", "a", "b",
             F.round(cosine_similarity(F.col("va"), F.col("vb")), 6).alias("s"),
         )
+        # runs its join stages at construction under AQE (see `sl`)
         .localCheckpoint(eager=False)
     )
     sel = (
@@ -989,6 +994,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(t).cast("bigint").alias("pick_order"),
             )
         )
+        # cuts the round's lineage; its shuffle stages run now under AQE
         picks = picks.unionAll(pick_t).localCheckpoint(eager=False)
     # eager: materialize ONCE and cut every upstream lineage (sl/pw blocks
     # become unreferenced); the memoized value is the k*queries-row result

@@ -328,3 +328,92 @@ def test_prefix_filter_length_arithmetic():
         plen = sz - (3 * sz + 4) // 5 + 1
         assert plen == sz - math.ceil(3 * sz / 5) + 1, sz
         assert 1 <= plen <= sz, sz
+
+
+# Graphs for the one-task vs distributed-loop components check: a chain of 6
+# hops whose minimum sits mid-chain, a star, duplicate and reversed pairs with
+# a self-pair, and several disconnected components. One edge list holds them
+# all (ids offset by 1000 per graph), so each path runs once per id type.
+_CC_GRAPHS = {
+    "chain": [(50, 40), (40, 60), (60, 10), (10, 70), (70, 30), (30, 20)],
+    "star": [(100, 5), (100, 200), (300, 100), (100, 400), (500, 100)],
+    "dup_reversed": [(1, 2), (2, 1), (1, 2), (3, 2), (2, 3), (7, 7)],
+    "disconnected": [
+        (9, 8), (8, 7), (20, 21), (22, 21), (40, 41), (41, 42), (42, 43),
+        (43, 44), (44, 39), (60, 61),
+    ],
+}
+
+
+@pytest.mark.parametrize("id_type", ["int", "bigint"])
+def test_one_task_components_match_min_label_loop(spark, monkeypatch, id_type):
+    """_min_label_components' one-task union-find path must label every
+    graph exactly as the distributed min-label loop does (forced by setting
+    the gate to 0), with the smallest id of each component, and keep the
+    pair columns' id type."""
+    from k_means_map_reduce_spark.operators import dedup as D
+
+    pairs = [
+        (a + 1000 * g, b + 1000 * g)
+        for g, graph in enumerate(_CC_GRAPHS.values())
+        for a, b in graph
+    ]
+    df = spark.createDataFrame(pairs, f"doc_a {id_type}, doc_b {id_type}")
+    one_task = D._min_label_components(df)
+    with monkeypatch.context() as m:
+        m.setattr(D, "ONE_TASK_COMPONENTS_MAX_EDGES", 0)
+        loop = D._min_label_components(df)
+    assert one_task.schema == loop.schema
+    assert one_task.schema["component"].dataType.simpleString() == id_type
+    got = dict(map(tuple, one_task.collect()))
+    assert got == dict(map(tuple, loop.collect()))
+    assert sorted(got) == sorted({x for p in pairs for x in p})
+    mins = {
+        "chain": {10}, "star": {1005}, "dup_reversed": {2001, 2007},
+        "disconnected": {3007, 3020, 3039, 3060},
+    }
+    for g, (name, graph) in enumerate(_CC_GRAPHS.items()):
+        labels = {got[x + 1000 * g] for p in graph for x in p}
+        assert labels == mins[name], name
+    assert got[3044] == 3039 and got[3061] == 3060 and got[2003] == 2001
+
+
+def test_minhash_clusters_take_one_task_path(spark, sf_dir):
+    """dedup_minhash_clusters labels its small pair graph in one pass: given
+    the (memoized) banding pairs, building the components launches at most
+    3 jobs (2 today: the edge count and the one-task collect), where the
+    distributed loop launched 14."""
+    from k_means_map_reduce_spark.operators import dedup as D
+
+    QUERIES["dedup_minhash_banding_pairs"](spark, sf_dir).collect()
+    D._BANDING_COMP_CACHE.clear()
+    sc = spark.sparkContext
+    group = "test_minhash_clusters_take_one_task_path"
+    sc.setJobGroup(group, group)
+    try:
+        comp = QUERIES["dedup_minhash_clusters"](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert comp.count() > 0
+    assert n_jobs <= 3, f"{n_jobs} jobs: the distributed loop ran"
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "text_simhash_signatures",
+        "dedup_minhash_portable_pairs",
+        "dedup_minhash_banding_pairs",
+        "dedup_minhash_clusters",
+        "dedup_connected_components",
+    ],
+)
+def test_generated_expression_families_match_oracle(spark, sf_dir, name):
+    """Default-tier DuckDB parity at sf0.001 for the queries built from
+    SQL-string expression families (simhash votes, minhash mins, band
+    structs) and from the one-task components path."""
+    from k_means_map_reduce_spark.oracle import compare_query
+
+    r = compare_query(spark, name, sf_dir)
+    assert r.ok, f"{name}@sf0.001: {r.detail} (rows {r.spark_rows}/{r.oracle_rows})"

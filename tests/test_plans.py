@@ -29,7 +29,7 @@ EAGER_QUERIES = {
     "sim_ann_lsh_topk",
     "sim_ann_ivf_topk",
     "dedup_minhash_lsh_pairs",
-    "dedup_connected_components",  # iterative loop materializes at construction
+    "dedup_connected_components",  # components run their jobs at construction
     "dq_observe_scan_metrics",  # Observation fills when the action runs
     "graph_kcore_members",  # eager peel rounds (rolling unpersist)
     "streaming_tumbling_hourly",  # drains a stream at construction
@@ -545,7 +545,8 @@ def test_pmh_signatures_stay_in_codegen(spark, sf_dir):
     shape (one exchange, no HOFs): N array_min(transform(...)) columns are
     N CodegenFallback interpreted passes (lesson 26). The plan may contain
     neither HOF node, and exactly one exchange (the doc_id partial->final
-    aggregation boundary)."""
+    aggregation boundary). The aggregate list is built from one SQL string
+    (lesson 50); the formatted plan spells nodes in lower case."""
     import re
 
     from k_means_map_reduce_spark.operators import dedup as D
@@ -557,8 +558,10 @@ def test_pmh_signatures_stay_in_codegen(spark, sf_dir):
     )
     sig = D._pmh_signatures(base, D._PMH_PERMS24)
     r = plan_report(sig)
-    assert "ArrayMin" not in r.text and "array_min" not in r.text
-    assert "LambdaFunction" not in r.text and "transform(" not in r.text
+    assert sig.columns == ["doc_id"] + [f"s{j}" for j in range(24)]
+    text = r.text.lower()
+    assert "arraymin" not in text and "array_min" not in text
+    assert "lambdafunction" not in text and "transform(" not in text
     n_shuffles = len(re.findall(r"^\(\d+\) Exchange$", r.text, re.M))
     assert n_shuffles == 1, f"expected 1 exchange, plan has {n_shuffles}"
     assert "HashAggregate" in r.text
