@@ -13,7 +13,10 @@ Argument mapping (process knobs → Spark physical hints):
   keeps the run shape inspectable (M map tasks).
 - ``reducers`` (R): the reference hash-partitions cid % R across reducer
   processes (mapper.py:32-38). Here it sets
-  ``spark.sql.shuffle.partitions`` for the aggregation stage.
+  ``spark.sql.shuffle.partitions`` for the run; the fit caps it at k
+  (reducers beyond k would receive no key) and turns AQE off, so each
+  iteration's aggregation runs as min(R, k) reduce tasks. With AQE on,
+  those R partitions were coalesced into one task.
 - ``centroids`` (K), ``iterations``: forwarded to the Lloyd loop verbatim.
 - positional 5/6 (extensions): input points file (default
   ``Data/Input/points.txt``, the reference's fixed path) and output file
@@ -32,7 +35,7 @@ import os
 import sys
 
 from .kmeans import kmeans_native
-from .session import get_spark
+from .session import get_spark, scoped_conf
 from .sources.points_txt import read_points_txt, write_centroids_txt
 
 USAGE = (
@@ -58,25 +61,21 @@ def main(argv: list[str] | None = None) -> int:
     out_path = argv[5] if len(argv) > 5 else os.path.join("Data", "centroids.txt")
 
     spark = get_spark("kmmr-cli")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(reducers))
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(reducers)}):
         pts = read_points_txt(spark, points_path).repartition(mappers)
         result = kmeans_native(
             pts, vec_col="coordinates", k=k, max_iter=iters, tol=1e-6, seed=42
         )
-        out_dir = os.path.dirname(out_path)
-        if out_dir:
-            os.makedirs(out_dir, exist_ok=True)
-        write_centroids_txt(result.centers, out_path)
-        print(
-            f"wrote {len(result.centers)} centroids to {out_path} "
-            f"({result.iterations} iterations, "
-            f"{'converged' if result.converged else 'max_iter reached'})"
-        )
-        return 0
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    out_dir = os.path.dirname(out_path)
+    if out_dir:
+        os.makedirs(out_dir, exist_ok=True)
+    write_centroids_txt(result.centers, out_path)
+    print(
+        f"wrote {len(result.centers)} centroids to {out_path} "
+        f"({result.iterations} iterations, "
+        f"{'converged' if result.converged else 'max_iter reached'})"
+    )
+    return 0
 
 
 if __name__ == "__main__":

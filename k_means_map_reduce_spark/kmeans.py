@@ -14,7 +14,8 @@ Two implementations:
    ---------------------------------------------- → ----------------------------
    ranged text scan, per-iter re-read
      (/root/reference/mapper.py:15-24,46)         → ``df.cache()`` once
-   random-sample init (master.py:54-65)           → seeded ``rdd.takeSample``
+   random-sample init (master.py:54-65)           → seeded ``rdd.takeSample``'s
+                                                    draw, replayed JVM-side
    nearest-centroid map, broadcast cross-join +
      argmin (mapper.py:45-87)                     → centroids compiled into
                                                     one argmin expression
@@ -52,12 +53,17 @@ from __future__ import annotations
 
 import math
 import os
+import random
+import sys
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.core.rdd import RDD
+from pyspark.rddsampler import RDDSampler
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.vectors import sq_euclidean
+from .session import scoped_conf
 
 
 @dataclass
@@ -187,25 +193,70 @@ def _mean_by_cluster(assigned: DataFrame, dim: int) -> list[tuple[int, int, list
     ]
 
 
+def _replay_take_sample(counts: dict[int, int], num: int, seed: int) -> list[tuple[int, int]]:
+    """The rows ``RDD.takeSample(False, num, seed)`` returns, as (partition,
+    position) pairs in its order, from each partition's row count alone.
+
+    pyspark's ``RDDSampler`` keeps a row when one ``random()`` from
+    ``Random(seed ^ partition)`` (after ten mixing draws) is below the
+    fraction, so the kept positions depend only on the partition sizes.
+    The fraction, the reseed loop and the final shuffle are takeSample's.
+    """
+    total = sum(counts.values())
+    num = min(num, total)  # fraction 1 keeps every row: takeSample's collect-and-shuffle
+    if num == 0:
+        return []
+    rand = random.Random(seed)
+    fraction = RDD._computeFractionForSampleSize(num, total, False)
+
+    def draw(s: int) -> list[tuple[int, int]]:
+        return [
+            (p, i)
+            for p in sorted(counts)
+            for i in RDDSampler(False, fraction, s).func(p, iter(range(counts[p])))
+        ]
+
+    picks = draw(seed)
+    while len(picks) < num:
+        seed = rand.randint(0, sys.maxsize)
+        picks = draw(seed)
+    rand.shuffle(picks)
+    return picks[:num]
+
+
+def _take_sample(df: DataFrame, num: int, seed: int) -> list[Row]:
+    """``df.rdd.takeSample(False, num, seed)`` without Python workers: the
+    same rows in the same order, so the draw still depends on how ``df`` is
+    partitioned. One JVM job counts each partition's rows, the driver
+    replays the draws (one ``random()`` per row), and one more job fetches
+    the chosen rows by ``monotonically_increasing_id()``, which is
+    ``(partition << 33) + position``."""
+    counts = dict(df.groupBy(F.spark_partition_id()).count().collect())
+    picks = [(p << 33) + i for p, i in _replay_take_sample(counts, num, seed)]
+    if not picks:
+        return []
+    fetched = df.where(F.monotonically_increasing_id().isin(picks)).collect()
+    # collect() returns partitions in order, each in row order: ascending ids
+    by_id = dict(zip(sorted(picks), fetched, strict=True))
+    return [by_id[i] for i in picks]
+
+
+def _first_distinct(vecs: list, k: int) -> list[list[float]]:
+    """Up to k distinct vectors, in order of first appearance."""
+    return [list(v) for v in dict.fromkeys(map(tuple, vecs))][:k]
+
+
 def _init_random(pts: DataFrame, k: int, seed: int) -> list[list[float]]:
     """Seeded uniform sample without replacement (reference op #5,
     master.py:54-65) — the reference's random.sample, distributed and seeded.
     Oversample 4x then keep the first k distinct vectors, avoiding a full
     distinct() shuffle just for init."""
-    sample = pts.rdd.takeSample(False, 4 * k, seed=seed)
+    sample = _take_sample(pts, 4 * k, seed)
     if not sample:
         raise ValueError("empty input")
-    centroids: list[list[float]] = []
-    seen = set()
-    for r in sample:
-        key = tuple(r["vec"])
-        if key not in seen:
-            seen.add(key)
-            centroids.append(list(r["vec"]))
-        if len(centroids) == k:
-            break
+    centroids = _first_distinct([r["vec"] for r in sample], k)
     if len(centroids) < k:
-        distinct_sample = pts.distinct().rdd.takeSample(False, k, seed=seed)
+        distinct_sample = _take_sample(pts.distinct(), k, seed)
         if len(distinct_sample) < k:
             raise ValueError(f"k={k} but only {len(distinct_sample)} distinct points")
         centroids = [list(r["vec"]) for r in distinct_sample]
@@ -228,7 +279,7 @@ def _init_kmeans_parallel(
     by default, re-expressed in DataFrame ops — at 100 TB it replaces
     k-means++'s k passes with ~5."""
     ell = oversample if oversample is not None else 2.0 * k
-    first = pts.rdd.takeSample(False, 1, seed=seed)
+    first = _take_sample(pts, 1, seed)
     if not first:
         raise ValueError("empty input")
     candidates: list[list[float]] = [list(first[0]["vec"])]
@@ -349,50 +400,68 @@ def kmeans_native(
     init: "random" (the reference's seeded sample) or "k||" (k-means||,
     MLlib's default init, re-expressed with DataFrame ops).
 
-    "random" draws its starting centroids with ``rdd.takeSample``, so the
-    draw depends on the seed *and* on how the input is partitioned (e.g.
-    ``createDataFrame`` slices by ``defaultParallelism``, the core count).
-    Lloyd's loop from a uniform sample gives no guarantee of reaching the
-    global optimum: two starting centroids in one cluster can leave a centre
-    spanning two. Use "k||" when recovering the true clusters matters."""
+    "random" draws its starting centroids with `_take_sample`: one JVM job
+    counts the rows per partition and one fetches the chosen rows. It is
+    ``rdd.takeSample``'s draw, so it depends on the seed *and* on how the
+    input is partitioned (e.g. ``createDataFrame`` slices by
+    ``defaultParallelism``, the core count). Lloyd's loop from a uniform
+    sample gives no guarantee of reaching the global optimum: two starting
+    centroids in one cluster can leave a centre spanning two. Use "k||" when
+    recovering the true clusters matters.
+
+    Each iteration is one job: the fit turns AQE off (AQE runs each shuffle
+    stage as its own job) and caps ``spark.sql.shuffle.partitions`` at k, as
+    reducers beyond k get no key (the reference routes ``cid % R``). Centers
+    and sizes do not depend on the reducer count; each WSSSE's last bits do,
+    as it sums the per-cluster partials in collected order. Both confs are
+    restored on exit, but they are session-wide: the fit is not safe
+    alongside concurrent queries on the same session."""
     pts = (
         df.select(F.col(vec_col).cast("array<double>").alias("vec"))
         .where(F.col("vec").isNotNull() & (F.size("vec") > 0))
-        .cache()
+        .cache()  # planned here, under the caller's confs: fixes the sample's partitions
     )
+    spark = df.sparkSession
+    reducers = min(int(spark.conf.get("spark.sql.shuffle.partitions")), k)
+    one_job = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(reducers),
+    }
+    with scoped_conf(spark, one_job):
+        try:
+            if init == "k||":
+                centroids = _init_kmeans_parallel(pts, k, seed, rounds=init_rounds)
+            elif init == "random":
+                centroids = _init_random(pts, k, seed)
+            else:
+                raise ValueError(f"unknown init {init!r}")
+            dim = len(centroids[0])
 
-    if init == "k||":
-        centroids = _init_kmeans_parallel(pts, k, seed, rounds=init_rounds)
-    elif init == "random":
-        centroids = _init_random(pts, k, seed)
-    else:
-        raise ValueError(f"unknown init {init!r}")
-    dim = len(centroids[0])
-
-    wssse_history: list[float] = []
-    converged = False
-    it = 0
-    sizes: dict[int, int] = {}
-    for it in range(1, max_iter + 1):
-        assigned = assign_clusters(pts, centroids, "vec")
-        stats = _mean_by_cluster(assigned, dim)
-        new_centroids = list(centroids)  # empty clusters keep old centroid
-        sizes = {cid: 0 for cid in range(k)}
-        for cid, n, mean_vec, _sd in stats:
-            new_centroids[cid] = mean_vec
-            sizes[cid] = n
-        wssse_history.append(sum(s[3] for s in stats))
-        # Convergence (reference op #15, fixed to pair by id): every centroid
-        # moved < tol in Euclidean distance.
-        shift = max(
-            math.sqrt(sum((a - b) ** 2 for a, b in zip(old, new)))
-            for old, new in zip(centroids, new_centroids)
-        )
-        centroids = new_centroids
-        if shift < tol:
-            converged = True
-            break
-    pts.unpersist()
+            wssse_history: list[float] = []
+            converged = False
+            it = 0
+            sizes: dict[int, int] = {}
+            for it in range(1, max_iter + 1):
+                assigned = assign_clusters(pts, centroids, "vec")
+                stats = _mean_by_cluster(assigned, dim)
+                new_centroids = list(centroids)  # empty clusters keep old centroid
+                sizes = {cid: 0 for cid in range(k)}
+                for cid, n, mean_vec, _sd in stats:
+                    new_centroids[cid] = mean_vec
+                    sizes[cid] = n
+                wssse_history.append(sum(s[3] for s in stats))
+                # Convergence (reference op #15, fixed to pair by id): every
+                # centroid moved < tol in Euclidean distance.
+                shift = max(
+                    math.sqrt(sum((a - b) ** 2 for a, b in zip(old, new)))
+                    for old, new in zip(centroids, new_centroids)
+                )
+                centroids = new_centroids
+                if shift < tol:
+                    converged = True
+                    break
+        finally:
+            pts.unpersist()
     return KMeansResult(centroids, it, converged, wssse_history, sizes)
 
 
@@ -479,38 +548,6 @@ def _lloyd_kernel(X, C):
     sums = np.zeros_like(C)
     np.add.at(sums, cid, X)
     return cnt, sums, sd
-
-
-def _take_sample_local(rows, num, seed):
-    """Bit-exact replica of ``RDD.takeSample(False, num, seed)`` for a
-    single-partition RDD, run in-task on the materialized row list.
-
-    Delegates to pyspark's own machinery (pyspark.core.rdd.RDD.takeSample +
-    pyspark.rddsampler.RDDSampler with split=0) so the one-job fast path of
-    kmeans_arrow picks the SAME seeded init the driver-side path would —
-    keeping trajectory parity with kmeans_native (test_arrow_equals_native).
-    """
-    import random as _random
-    import sys as _sys
-
-    from pyspark.core.rdd import RDD as _RDD
-    from pyspark.rddsampler import RDDSampler as _RDDSampler
-
-    initial_count = len(rows)
-    if num == 0 or initial_count == 0:
-        return []
-    rand = _random.Random(seed)
-    if num >= initial_count:
-        samples = list(rows)
-        rand.shuffle(samples)
-        return samples
-    fraction = _RDD._computeFractionForSampleSize(num, initial_count, False)
-    samples = list(_RDDSampler(False, fraction, seed).func(0, iter(rows)))
-    while len(samples) < num:
-        seed = rand.randint(0, _sys.maxsize)
-        samples = list(_RDDSampler(False, fraction, seed).func(0, iter(rows)))
-    rand.shuffle(samples)
-    return samples[0:num]
 
 
 def _lloyd_single(X, C, max_iter, tol):
@@ -639,16 +676,8 @@ def kmeans_arrow(
                 return
             tbl = _pa.Table.from_batches(batches)
             vecs = tbl.column("vec").to_pylist()
-            sample = _take_sample_local(vecs, 4 * _k, _seed)
-            cents: list[list[float]] = []
-            seen: set = set()
-            for v in sample:
-                key = tuple(v)
-                if key not in seen:
-                    seen.add(key)
-                    cents.append(list(v))
-                if len(cents) == _k:
-                    break
+            picks = _replay_take_sample({0: len(vecs)}, 4 * _k, _seed)
+            cents = _first_distinct([vecs[i] for _p, i in picks], _k)
             if len(cents) < _k:
                 # <k distinct in the 4k oversample: defer to the general
                 # path, whose init falls back to a full distinct() sample.
@@ -788,42 +817,3 @@ def kmeans_arrow(
             break
     blocks.unpersist()
     return KMeansResult(centroids, it, converged, wssse_history, sizes)
-
-
-def assign_clusters_broadcast(
-    spark: SparkSession,
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "vec",
-) -> DataFrame:
-    """assign_clusters for large k·dim: broadcast-join + argmin window
-    instead of a compiled literal array.
-
-    The literal-array form (assign_clusters) bakes k·dim doubles into the
-    generated code — unbeatable for k·dim ≤ ~64k values, but codegen size
-    grows linearly and eventually falls back to interpretation. This
-    variant ships the full centroid list as ONE broadcast row holding an
-    ARRAY<ARRAY<DOUBLE>>: points pick it up via a 1-row
-    BroadcastNestedLoopJoin (no row fan-out, no shuffle), and the per-point
-    argmin is an array higher-order expression over the k candidate
-    vectors. This is literally the reference's op #7 (centroids shipped to
-    every mapper in the RPC request, /root/reference/master.py:182-186) in
-    plan form, minus the k-fold row explosion.
-
-    Same contract as assign_clusters: adds cid/dist2, ties break toward the
-    lowest cid (array_position returns the FIRST index of the min). Fully
-    deterministic — no per-row ids, no self-join, so retried tasks or
-    reshuffled inputs cannot diverge between plan branches.
-    """
-    cents = spark.createDataFrame(
-        [([list(map(float, vec)) for vec in centroids],)],
-        "cvecs ARRAY<ARRAY<DOUBLE>>",
-    )
-    dists = F.transform(F.col("cvecs"), lambda c: sq_euclidean(F.col(vec_col), c))
-    return (
-        df.join(F.broadcast(cents))
-        .withColumn("_d", dists)
-        .withColumn("dist2", F.array_min("_d"))
-        .withColumn("cid", (F.array_position(F.col("_d"), F.col("dist2")) - 1).cast("int"))
-        .drop("cvecs", "_d")
-    )

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -44,3 +46,21 @@ def get_spark(app_name: str = "k-means-map-reduce-spark", master: str | None = N
         )
     )
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, settings: Mapping[str, str]) -> Iterator[None]:
+    """Set session confs for the ``with`` block, then restore each one (or
+    unset it, if it had no value) on every exit path. Session confs are
+    shared, so queries run concurrently on the same session see them too."""
+    prev = {key: spark.conf.get(key, None) for key in settings}
+    try:
+        for key, value in settings.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)

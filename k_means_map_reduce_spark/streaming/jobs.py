@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import scoped_conf
 from ..sources.catalog import TABLE_SCHEMAS
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -1185,27 +1186,22 @@ def stream_user_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = f"user_stats_tws_{uuid.uuid4().hex[:8]}"
     checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{sink}_", dir=_tmp_root())
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(conf_key, None)
-    try:
-        spark.conf.set(
-            conf_key,
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        q = (
-            stats.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    }
+    try:
+        with scoped_conf(spark, rocksdb):
+            q = (
+                stats.writeStream.format("memory")
+                .queryName(sink)
+                .outputMode("update")
+                .option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        if prior is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prior)
         shutil.rmtree(checkpoint, ignore_errors=True)
     return _drain_user_stats_sink(spark, sink)
 

@@ -39,7 +39,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..kmeans import assign_clusters
+from ..kmeans import _init_random, assign_clusters
 
 
 @dataclass
@@ -86,25 +86,14 @@ def kmeans_streaming(
 
     ``df`` must be re-readable with a stable schema (it is re-written chunked
     to a temp dir that simulates arriving files). Initial centers default to
-    a seeded distinct sample (reference op #5 semantics).
+    kmeans_native's random init (`kmeans._init_random`, reference op #5).
     """
     pts = df.select(
         F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("vec")
     ).where(F.col("vec").isNotNull() & (F.size("vec") > 0))
 
     if init_centers is None:
-        sample = pts.rdd.takeSample(False, 4 * k, seed=seed)
-        centers: list[list[float]] = []
-        seen: set[tuple] = set()
-        for r in sample:
-            key = tuple(r["vec"])
-            if key not in seen:
-                seen.add(key)
-                centers.append(list(r["vec"]))
-            if len(centers) == k:
-                break
-        if len(centers) < k:
-            raise ValueError(f"k={k} but fewer distinct points in init sample")
+        centers = _init_random(pts.select("vec"), k, seed)
     else:
         centers = [list(c) for c in init_centers]
         k = len(centers)

@@ -182,8 +182,9 @@ def test_arrow_single_task_equals_distributed(spark, sf_dir, monkeypatch):
 
 def test_kmeans_parallel_init_recovers_blobs(spark):
     """k-means|| init + Lloyd recovers well-separated blobs exactly (one
-    center per blob), and its final WSSSE matches random-init's on the same
-    data (both find the global optimum here). Also deterministic per seed."""
+    center per blob) and is deterministic per seed. Random init promises
+    less: it is deterministic per seed and partitioning, and Lloyd's from it
+    cannot end below the optimum k|| reaches here."""
     import random as _random
 
     from k_means_map_reduce_spark.kmeans import kmeans_native
@@ -209,35 +210,9 @@ def test_kmeans_parallel_init_recovers_blobs(spark):
         ]
         assert len(near) == 1, (c, r1.centers)
     rr = kmeans_native(df, k=4, max_iter=25, tol=1e-9, seed=42, init="random")
-    assert abs(r1.wssse_history[-1] - rr.wssse_history[-1]) < 1e-6 * max(
-        1.0, rr.wssse_history[-1]
-    )
-
-
-def test_assign_broadcast_equals_literal(spark):
-    """The broadcast-join assignment (large-k path) must agree exactly with
-    the compiled-literal assignment, ties included."""
-    import random as _random
-
-    from k_means_map_reduce_spark.kmeans import (
-        assign_clusters,
-        assign_clusters_broadcast,
-    )
-
-    rng = _random.Random(3)
-    rows = [(i, [rng.uniform(-5, 5), rng.uniform(-5, 5)]) for i in range(300)]
-    # a duplicated centroid pair forces dist2 ties → must break to lower cid
-    cents = [[0.0, 0.0], [2.0, 2.0], [2.0, 2.0], [-3.0, 1.0]]
-    df = spark.createDataFrame(rows, "vec_id BIGINT, vec ARRAY<DOUBLE>")
-    lit = {
-        r["vec_id"]: (r["cid"], round(r["dist2"], 12))
-        for r in assign_clusters(df, cents, "vec").collect()
-    }
-    bc = {
-        r["vec_id"]: (r["cid"], round(r["dist2"], 12))
-        for r in assign_clusters_broadcast(spark, df, cents, "vec").collect()
-    }
-    assert lit == bc
+    rr2 = kmeans_native(df, k=4, max_iter=25, tol=1e-9, seed=42, init="random")
+    assert (rr.centers, rr.wssse_history) == (rr2.centers, rr2.wssse_history)
+    assert rr.wssse_history[-1] >= r1.wssse_history[-1] * (1 - 1e-6)
 
 
 def test_fused_assign_equals_fold_on_edge_rows(spark, monkeypatch):
@@ -323,3 +298,108 @@ def test_als_beats_mean_baseline_and_shape(spark, sf_dir):
         per_cust.setdefault(r["custkey"], []).append(r["rnk"])
     assert len(per_cust) == 20
     assert all(sorted(v) == [1, 2, 3, 4, 5] for v in per_cust.values())
+
+
+def test_take_sample_matches_rdd_take_sample(spark, monkeypatch):
+    """_take_sample replays RDD.takeSample(False, num, seed) from JVM-side
+    partition counts: the same rows in the same order, for any partitioning,
+    seed and size, through the reseed loop, and on an empty frame."""
+    from pyspark.core.rdd import RDD
+
+    from k_means_map_reduce_spark import kmeans as K
+
+    def frame(n, slices):
+        return spark.range(0, n, 1, slices).selectExpr(
+            "id", "array(CAST(id AS DOUBLE), CAST(id % 7 AS DOUBLE)) AS vec"
+        )
+
+    # (partitions, seed, num), num up to above the row count (40)
+    for slices, seed, num in [(1, 42, 1), (3, 1, 20), (7, 7, 4), (3, 42, 55)]:
+        df = frame(40, slices)
+        want = df.rdd.takeSample(False, num, seed)
+        assert K._take_sample(df, num, seed) == want, (slices, seed, num)
+    empty = frame(0, 3)
+    assert K._take_sample(empty, 3, 42) == empty.rdd.takeSample(False, 3, 42) == []
+
+    # At this fraction seed 1's first draw is short of num, so both sides
+    # reseed; the spy records every seed the replay draws with.
+    monkeypatch.setattr(
+        RDD, "_computeFractionForSampleSize", staticmethod(lambda num, total, wr: 0.05)
+    )
+    drawn = set()
+
+    class SpySampler(K.RDDSampler):
+        def __init__(self, with_replacement, fraction, seed):
+            drawn.add(seed)
+            super().__init__(with_replacement, fraction, seed)
+
+    monkeypatch.setattr(K, "RDDSampler", SpySampler)
+    df = frame(40, 3)
+    for seed in (42, 1):
+        assert K._take_sample(df, 2, seed) == df.rdd.takeSample(False, 2, seed), seed
+    assert drawn - {42, 1}, "no case reached the reseed loop"
+
+
+def test_native_fit_runs_no_python(spark, monkeypatch):
+    """kmeans_native never leaves the JVM: both inits and the loop run with
+    DataFrame.rdd disabled."""
+    from pyspark.sql import DataFrame
+
+    def no_rdd(self):
+        raise AssertionError("kmeans_native reached DataFrame.rdd")
+
+    df = _blobs(spark, [[0.0, 0.0], [5.0, 5.0], [0.0, 5.0]], n_per=20)
+    monkeypatch.setattr(DataFrame, "rdd", property(no_rdd))
+    for init in ("random", "k||"):
+        r = kmeans_native(df, vec_col="vec", k=3, max_iter=5, seed=42, init=init)
+        assert len(r.centers) == 3 and sum(r.sizes.values()) == 60
+
+
+def test_native_fit_one_job_per_iteration(spark):
+    """A 3-partition, k=5, 10-iteration fit launches at most 15 jobs: two for
+    the init (partition counts, row fetch) and one per iteration. A
+    takeSample init, or AQE splitting each iteration's shuffle into two
+    jobs, breaks the bound."""
+    rng = random.Random(5)
+    rows = [([rng.uniform(0, 100), rng.uniform(0, 100)],) for _ in range(3000)]
+    sc = spark.sparkContext
+    df = spark.createDataFrame(sc.parallelize(rows, 3), "vec ARRAY<DOUBLE>")
+    group = "test_native_fit_one_job_per_iteration"
+    sc.setJobGroup(group, group)
+    try:
+        r = kmeans_native(df, vec_col="vec", k=5, max_iter=10, tol=0.0, seed=42)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert r.iterations == 10
+    assert n_jobs <= 15, f"{n_jobs} jobs for a 10-iteration fit"
+
+
+def test_native_fit_restores_confs(spark, monkeypatch):
+    """The fit runs with AQE off and at most k shuffle partitions, and puts
+    both confs back after a normal fit and after a failing one."""
+    from k_means_map_reduce_spark import kmeans as K
+    from k_means_map_reduce_spark.session import scoped_conf
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    df = _blobs(spark, [[0.0, 0.0], [5.0, 5.0]], n_per=20)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "7"}):
+        before = [spark.conf.get(key) for key in keys]
+        K.kmeans_native(df, vec_col="vec", k=3, max_iter=3, seed=42)
+        assert [spark.conf.get(key) for key in keys] == before
+
+        seen = []
+
+        def fail(assigned, dim):
+            seen.append([spark.conf.get(key) for key in keys])
+            raise RuntimeError("injected")
+
+        monkeypatch.setattr(K, "_mean_by_cluster", fail)
+        with pytest.raises(RuntimeError, match="injected"):
+            K.kmeans_native(df, vec_col="vec", k=3, max_iter=3, seed=42)
+        assert seen == [["false", "3"]]
+        assert [spark.conf.get(key) for key in keys] == before
+    # a key that had no value is unset again, not left at the scoped value
+    with scoped_conf(spark, {"spark.kmmr.test.scoped": "1"}):
+        assert spark.conf.get("spark.kmmr.test.scoped") == "1"
+    assert spark.conf.get("spark.kmmr.test.scoped", None) is None
