@@ -541,15 +541,10 @@ def _min_label_components(pairs: DataFrame) -> DataFrame:
     edges = edges.union(
         edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).toDF("src", "dst").cache()
-    # Count the plan's RDD on the JVM: one job that also fills the cache, in
-    # defaultParallelism tasks (the union has 2 partitions per pair-list
-    # partition, and their scheduling costs more than the rows here).
+    # Count the plan's RDD on the JVM: one job that also fills the cache.
     # edges.count() adds an aggregation exchange, and under AQE the cached
     # scan becomes its own query stage: 3 jobs for the same number.
-    n_edges = (
-        edges.coalesce(spark.sparkContext.defaultParallelism)
-        ._jdf.queryExecution().toRdd().count()
-    )
+    n_edges = edges._jdf.queryExecution().toRdd().count()
     if n_edges <= ONE_TASK_COMPONENTS_MAX_EDGES:
         import pyarrow as pa
 
@@ -784,31 +779,33 @@ def _pmh_sql_prefix(perms: list[tuple[int, int]]) -> str:
 
 def _pmh_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh): distinct portable 32-bit shingle hashes per document —
-    the Spark mirror of the oracle's `shingles` CTE. Shingle hashing is an
-    interpreted HOF chain; fan the single-row-group scan out so it
-    parallelizes (same rationale as textops' chunking queries)."""
+    the Spark mirror of the oracle's `shingles` CTE.
+
+    Linear per document (NEXT.md lesson 52): the tokens are projected once
+    as a column (`array_remove` drops empty tokens without a lambda) and the
+    shingle lambda reads that column. A lambda over the token EXPRESSION
+    re-splits the whole text three times per shingle. The size filter is
+    pushed under the token projection, so the text is split twice per row.
+
+    The single-row-group scan is fanned out BY doc_id at defaultParallelism
+    (as textops.portable_simhash_sigs): the hashing parallelizes, and every
+    consumer's `GROUP BY doc_id` finds its input already partitioned, so no
+    32-partition exchange lands in a persisted plan, where AQE cannot
+    coalesce it."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-    toks = F.filter(F.split(F.trim(F.lower("text")), r"\s+"), lambda t: t != "")
-    n_sh = F.size(toks) - 2
-    shingle_hash = lambda i: F.conv(  # noqa: E731
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    " ",
-                    F.element_at(toks, i + 1),
-                    F.element_at(toks, i + 2),
-                    F.element_at(toks, i + 3),
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
-    sh = F.array_distinct(F.transform(F.sequence(F.lit(0), n_sh - 1), shingle_hash))
-    return d.where(F.size(toks) >= 3).select("doc_id", sh.alias("sh"))
+    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    toks = d.selectExpr(
+        "doc_id", r"array_remove(split(trim(lower(text)), '\\s+'), '') AS toks"
+    ).where("size(toks) >= 3")
+    # one SQL string for the lambda (NEXT.md lesson 50): element_at is
+    # 1-based, so shingle i covers tokens i+1..i+3
+    return toks.selectExpr(
+        "doc_id",
+        "array_distinct(transform(sequence(0, size(toks) - 3), i -> CAST(conv("
+        "substring(md5(concat_ws(' ', element_at(toks, i + 1), "
+        "element_at(toks, i + 2), element_at(toks, i + 3))), 1, 8), 16, 10)"
+        " AS BIGINT))) AS sh",
+    )
 
 
 def _pmh_signatures(base: DataFrame, perms: list[tuple[int, int]]) -> DataFrame:
@@ -898,7 +895,10 @@ def dedup_minhash_banding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_bands = len(perms) // _PMH_R
     # both the signature build and the verify step read the shingle sets:
     # persist so the md5 HOF chain runs once (CacheManager dedups identical
-    # plans across invocations, so repeated calls reuse one cached copy)
+    # plans across invocations, so repeated calls reuse one cached copy).
+    # The sets are hash-partitioned by doc_id, so the executed plan of the
+    # signature GROUP BY doc_id has no exchange (the initial plan still
+    # shows one; lesson 47) and `bands` keeps their partitioning.
     hs_df = _pmh_shingle_sets(spark, sf_dir).persist()
     sig = _pmh_signatures(hs_df, perms)
     # one SQL string for the n_bands-struct explode (see _pmh_signatures)
@@ -942,8 +942,10 @@ def dedup_minhash_banding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # substitution gotcha). eager=False is NOT lazy under AQE: the
         # checkpoint takes the RDD of the executed adaptive plan, so every
         # shuffle/broadcast stage below runs here, at construction: at
-        # sf0.01 this build runs 8 jobs with AQE on, 2 (the broadcasts)
-        # with it off (NEXT.md lesson 50). Only the final stage waits for
+        # sf0.01 this build runs 7 jobs with AQE on, 2 (the broadcasts)
+        # with it off (NEXT.md lesson 50), none wider than
+        # defaultParallelism tasks (the doc_id partitioning of
+        # _pmh_shingle_sets; lesson 52). Only the final stage waits for
         # the first action.
         .localCheckpoint(eager=False)
     )

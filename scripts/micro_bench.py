@@ -2,6 +2,12 @@
 perf work (bench.py's single warm pass swings with machine noise; min-of-3
 on an idle box is the comparable number).
 
+Each rep times the query's whole work: every session memo is cleared first
+(`_memo.clear_all_memos()`, outside the timed window), so a rep cannot read
+an earlier rep's memoized artifacts, and the result is brought back with
+`toPandas()`, so every output column is evaluated. `count()` would time a
+column-pruned plan instead (perfbench/README.md, "Lessons").
+
 Usage: python scripts/micro_bench.py q1 q2 ... [--sf DIR] [--n 3]
 """
 
@@ -26,6 +32,7 @@ def main() -> None:
         else:
             args.append(a)
 
+    from k_means_map_reduce_spark._memo import clear_all_memos
     from k_means_map_reduce_spark.registry import QUERIES
     from k_means_map_reduce_spark.session import get_spark
 
@@ -35,11 +42,12 @@ def main() -> None:
 
     for name in args:
         fn = QUERIES[name]
-        fn(spark, sf_dir).count()  # cold (plan+codegen), unmeasured
+        fn(spark, sf_dir).toPandas()  # cold (plan+codegen), unmeasured
         ts = []
         for _ in range(n):
+            clear_all_memos()
             t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
+            fn(spark, sf_dir).toPandas()
             ts.append(time.perf_counter() - t0)
         ts.sort()
         print(f"{name}: min={ts[0]:.3f} med={ts[len(ts) // 2]:.3f} all={[round(t, 3) for t in ts]}", flush=True)

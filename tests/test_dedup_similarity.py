@@ -407,12 +407,16 @@ def test_minhash_clusters_take_one_task_path(spark, sf_dir):
         "dedup_minhash_banding_pairs",
         "dedup_minhash_clusters",
         "dedup_connected_components",
+        "dedup_minhash_estimate_error",
+        "dedup_banding_br_ablation",
     ],
 )
 def test_generated_expression_families_match_oracle(spark, sf_dir, name):
     """Default-tier DuckDB parity at sf0.001 for the queries built from
     SQL-string expression families (simhash votes, minhash mins, band
-    structs) and from the one-task components path."""
+    structs, the shingle lambda) and from the one-task components path.
+    The estimate-error and b×r ablation queries read the memoized shingle
+    sets through their own signature and verify paths."""
     from k_means_map_reduce_spark.oracle import compare_query
 
     r = compare_query(spark, name, sf_dir)

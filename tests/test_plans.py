@@ -8,6 +8,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -565,6 +567,58 @@ def test_pmh_signatures_stay_in_codegen(spark, sf_dir):
     n_shuffles = len(re.findall(r"^\(\d+\) Exchange$", r.text, re.M))
     assert n_shuffles == 1, f"expected 1 exchange, plan has {n_shuffles}"
     assert "HashAggregate" in r.text
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """Every `lambdafunction(...)` call in a plan string, parentheses
+    balanced."""
+    bodies = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        bodies.append(plan[m.start() : i])
+    return bodies
+
+
+def test_minhash_banding_is_linear_and_sized(spark, sf_dir):
+    """dedup_minhash_banding_pairs' time follows its rows (NEXT.md lesson 52):
+    - the shingle lambda reads the projected token column, so no lambda
+      re-splits or re-lowercases the text per shingle (quadratic per doc);
+    - the documents are hash-partitioned by doc_id at defaultParallelism,
+      so no stage of the build and full evaluation runs more tasks than
+      that (a 32-partition exchange under a persist keeps its 32 tasks),
+      and the memoized pair list has at most defaultParallelism
+      partitions."""
+    from k_means_map_reduce_spark.operators import dedup as D
+
+    plan = D._pmh_shingle_sets(spark, sf_dir)._jdf.queryExecution()
+    bodies = _lambda_bodies(plan.optimizedPlan().toString().lower())
+    assert bodies, "the shingle projection lost its lambda"
+    for body in bodies:
+        assert "split(" not in body and "lower(" not in body, body
+
+    sc = spark.sparkContext
+    D._BANDING_PAIRS_CACHE.clear()
+    group = "test_minhash_banding_is_linear_and_sized"
+    sc.setJobGroup(group, group)
+    try:
+        out = QUERIES["dedup_minhash_banding_pairs"](spark, sf_dir)
+        assert len(out.toPandas()) > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stage_ids = {
+        s for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    }
+    # a stage skipped here may be an older job's stage the store has dropped
+    infos = {s: tracker.getStageInfo(s) for s in stage_ids}
+    ran = {s: i.numCompletedTasks for s, i in infos.items() if i is not None}
+    width = sc.defaultParallelism
+    assert max(ran.values()) <= width, f"stage tasks {ran} > {width}"
+    assert out.rdd.getNumPartitions() <= width
 
 
 def test_kmeans_assignment_fused_below_gate(spark):
