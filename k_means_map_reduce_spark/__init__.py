@@ -64,10 +64,10 @@ _DEFAULT_SF_DIR = "/root/testdata/sf0.01"
 
 
 def sql(spark, query: str, sf_dir: str | None = None):
-    """One-call SQL front-end: register every catalog table as a temp view
-    and run `query` through Spark SQL. The ANSI surface a reference user
-    gets for free by switching engines — same Catalyst plans as the
-    DataFrame API (spark.sql and DataFrame ops compile identically).
+    """One-call SQL front-end: run `query` through Spark SQL with the
+    catalog tables it names registered as temp views. The ANSI surface a
+    reference user gets for free by switching engines — same Catalyst plans
+    as the DataFrame API (spark.sql and DataFrame ops compile identically).
 
     `sf_dir` defaults to $SPARK_GRAFT_SF_DIR (the same knob bench.py and
     the tests honor), falling back to the sf0.01 test tables.
@@ -79,5 +79,4 @@ def sql(spark, query: str, sf_dir: str | None = None):
 
     if sf_dir is None:
         sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", _DEFAULT_SF_DIR)
-    register_views(spark, sf_dir)
-    return spark.sql(query)
+    return register_views(spark, sf_dir, query)

@@ -734,31 +734,6 @@ def kmeans_arrow(
     centroids = _init_random(pts, k, seed)
     dim = len(centroids[0])
 
-    if n_points * dim * 8 <= local_bytes:
-        # Stats overestimated (or degenerate-init retry) but the dense
-        # matrix does fit one task: run the loop where the data is.
-        c0 = [list(c) for c in centroids]
-
-        def run_single(rows_iter, _c0=c0, _mi=max_iter, _tol=tol):
-            import numpy as _np
-
-            block = [r["vec"] for r in rows_iter]
-            if block:
-                yield _lloyd_single(
-                    _np.asarray(block, dtype=_np.float64),
-                    _np.asarray(_c0, dtype=_np.float64),
-                    _mi,
-                    _tol,
-                )
-
-        out = pts.coalesce(1).rdd.mapPartitions(run_single).collect()
-        pts.unpersist()
-        final_c, it, converged, wssse_history, cnt_list = out[0]
-        return KMeansResult(
-            final_c, it, converged, wssse_history,
-            {cid: n for cid, n in enumerate(cnt_list)},
-        )
-
     # Materialize each partition ONCE as a dense numpy block and cache the
     # block RDD. Every iteration is then a single treeAggregate over cached
     # matrices — no Catalyst analysis, no Arrow re-serialization, no

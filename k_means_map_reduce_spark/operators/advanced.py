@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..registry import query, sql_query
 from ..sources import load_table, register_views
 from ._util import dsum, sql_dsum
 
@@ -71,9 +71,9 @@ def stats_percentiles_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+stats_variance_corr = sql_query(
     "stats_variance_corr",
-    oracle="""
+    """
     SELECT
       COUNT(*) AS n,
       ROUND(stddev_samp(o_totalprice), 2) AS sd_total,
@@ -82,43 +82,21 @@ def stats_percentiles_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     """,
 )
-def stats_variance_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Moments. Both engines use numerically-stable single-pass updates;
-    rounding absorbs the last-ulp differences of partial-merge order."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.stddev_samp("o_totalprice"), 2).alias("sd_total"),
-        F.round(F.var_samp("o_totalprice"), 0).alias("var_total"),
-        F.round(F.corr("o_totalprice", "o_custkey"), 6).alias("corr_price_cust"),
-    )
 
 
-@query(
+subquery_scalar_above_avg = sql_query(
     "subquery_scalar_above_avg",
-    oracle="""
+    """
     SELECT o_orderkey, o_totalprice
     FROM orders
     WHERE o_totalprice > 1.5 * (SELECT AVG(o_totalprice) FROM orders)
     """,
 )
-def subquery_scalar_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar subquery: Catalyst evaluates the inner agg once and folds it
-    into the outer filter (subquery broadcast, no per-row re-evaluation)."""
-    o = load_table(spark, sf_dir, "orders")
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_totalprice
-        FROM orders
-        WHERE o_totalprice > 1.5 * (SELECT AVG(o_totalprice) FROM orders)
-        """
-    )
 
 
-@query(
+subquery_correlated_max_order = sql_query(
     "subquery_correlated_max_order",
-    oracle="""
+    """
     SELECT c_custkey, o_orderkey, o_totalprice
     FROM customer, orders
     WHERE o_custkey = c_custkey
@@ -128,40 +106,16 @@ def subquery_scalar_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND c_mktsegment = 'BUILDING'
     """,
 )
-def subquery_correlated_max_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated scalar subquery (each customer's max-price order). Catalyst
-    decorrelates it into an aggregate + join — the plan a human would write —
-    instead of re-running the inner query per row."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT c_custkey, o_orderkey, o_totalprice
-        FROM customer JOIN orders ON o_custkey = c_custkey
-        WHERE o_totalprice = (
-            SELECT MAX(o2.o_totalprice) FROM orders o2 WHERE o2.o_custkey = c_custkey
-          )
-          AND c_mktsegment = 'BUILDING'
-        """
-    )
 
 
-@query(
+subquery_in_high_value_customers = sql_query(
     "subquery_in_high_value_customers",
-    oracle="""
+    """
     SELECT o_orderkey, o_custkey, o_totalprice
     FROM orders
     WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_acctbal > 9000.0)
     """,
 )
-def subquery_in_high_value_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_custkey, o_totalprice
-        FROM orders
-        WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_acctbal > 9000.0)
-        """
-    )
 
 
 @query(
@@ -230,8 +184,9 @@ def conditional_agg_order_priority(spark: SparkSession, sf_dir: str) -> DataFram
 def sql_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape through the SQL front-end: all four predicates push to
     the parquet scan; the aggregation is a single scan, no shuffle."""
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return register_views(
+        spark,
+        sf_dir,
         f"""
         SELECT {_spark_dsum_sql('l_extendedprice * l_discount')} AS revenue_delta
         FROM lineitem
@@ -247,9 +202,9 @@ def _spark_dsum_sql(expr: str) -> str:
     return f"CAST(SUM(CAST(ROUND(({expr}), 6) AS DECIMAL(18,6))) AS DOUBLE)"
 
 
-@query(
+stats_regression_by_flag = sql_query(
     "stats_regression_by_flag",
-    oracle=f"""
+    f"""
     WITH sums AS (
       SELECT l_returnflag,
         COUNT(*) AS n,
@@ -265,35 +220,6 @@ def _spark_dsum_sql(expr: str) -> str:
     FROM sums
     """,
 )
-def stats_regression_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear-regression aggregates (slope/intercept of price on quantity
-    per return flag) computed from exact decimal power sums rather than
-    engine-native regr_slope/regr_intercept: streaming covariance updates
-    are summation-order-dependent in floating point, so the native
-    aggregates can differ across engines (and across Spark partitionings!)
-    in the last ulps. The four power sums are exact decimals, and the
-    closed-form (n·Σxy − ΣxΣy)/(n·Σx² − (Σx)²) over identical doubles is
-    IEEE-deterministic. One aggregation pass, map-side partials."""
-    l = load_table(spark, sf_dir, "lineitem")
-    x, y = F.col("l_quantity"), F.col("l_extendedprice")
-    sums = l.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        dsum(x).alias("sx"),
-        dsum(y).alias("sy"),
-        dsum(x * y).alias("sxy"),
-        dsum(x * x).alias("sxx"),
-    )
-    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
-    return sums.select(
-        "l_returnflag",
-        "n",
-        F.round(slope, 6).alias("slope"),
-        F.round((F.col("sy") - slope * F.col("sx")) / F.col("n"), 6).alias(
-            "intercept"
-        ),
-    )
 
 
 @query("sample_stratified_orders")
@@ -313,9 +239,9 @@ def sample_stratified_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+histogram_order_totalprice = sql_query(
     "histogram_order_totalprice",
-    oracle="""
+    """
     WITH bounds AS (
       SELECT MIN(o_totalprice) AS mn, MAX(o_totalprice) AS mx FROM orders
     ),
@@ -332,38 +258,6 @@ def sample_stratified_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY bucket, mn, mx
     """,
 )
-def histogram_order_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-width 20-bucket histogram of order totals with data-derived
-    bounds. The bounds are a broadcast 1-row aggregate (no collect); bucket
-    assignment is a pure projection, so the plan is scan → cross-join
-    broadcast → one aggregation. Cross-engine determinism: both engines
-    derive identical mn/mx doubles, hence identical width, per-row quotient
-    and floor — bucket edges can't flip on a ulp. Degenerate input (all
-    values equal ⇒ zero width) short-circuits to bucket 0 in both engines
-    instead of dividing by zero."""
-    o = load_table(spark, sf_dir, "orders")
-    bounds = o.agg(
-        F.min("o_totalprice").alias("mn"), F.max("o_totalprice").alias("mx")
-    )
-    width = (F.col("mx") - F.col("mn")) / 20.0
-    bucket = (
-        F.when(F.col("mx") == F.col("mn"), F.lit(0))
-        .otherwise(
-            F.least(
-                F.floor((F.col("o_totalprice") - F.col("mn")) / width), F.lit(19)
-            )
-        )
-        .cast("int")
-    )
-    return (
-        o.crossJoin(F.broadcast(bounds))
-        .select(
-            bucket.alias("bucket"),
-            F.round(F.col("mn") + bucket * width, 6).alias("bucket_lo"),
-        )
-        .groupBy("bucket", "bucket_lo")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
 
 
 @query(
@@ -489,8 +383,7 @@ def sql_recursive_hierarchy_levels(spark: SparkSession, sf_dir: str) -> DataFram
     customer dim. The same SQL text runs on DuckDB (dialect delta: DIV vs
     //), making this a front-end parity check, not just an operator check.
     """
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(_HIERARCHY_LEVELS_SQL.format(div="DIV"))
+    return register_views(spark, sf_dir, _HIERARCHY_LEVELS_SQL.format(div="DIV"))
 
 
 _SUBTREE_TOTALS_SQL = """
@@ -527,13 +420,12 @@ def sql_recursive_subtree_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same SQL text on both engines modulo the integer-division token.
     """
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(_SUBTREE_TOTALS_SQL.format(div="DIV"))
+    return register_views(spark, sf_dir, _SUBTREE_TOTALS_SQL.format(div="DIV"))
 
 
-@query(
+stats_weighted_median_price = sql_query(
     "stats_weighted_median_price",
-    oracle="""
+    """
     WITH w AS (
       SELECT l_returnflag,
              l_extendedprice AS price,
@@ -554,49 +446,11 @@ def sql_recursive_subtree_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cum GROUP BY l_returnflag
     """,
 )
-def stats_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantity-weighted median price per return flag — the weighted
-    order statistic percentile_approx cannot express: the price at which
-    half the UNITS (not half the rows) are cheaper. Division-free
-    threshold (2*cumweight >= total over integer weights), so there is
-    no interpolation or float comparison for engines to disagree on.
-
-    Scale shape: one partition-sorted cumulative sum per group + a
-    conditional min — the same single-shuffle envelope as any windowed
-    rollup; for extreme groups, swap in the mergeable integer histogram
-    (hist_quantiles_daily_merge) and read the weighted quantile off the
-    bins.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    w = l.select(
-        "l_returnflag",
-        F.col("l_extendedprice").alias("price"),
-        F.col("l_quantity").cast("long").alias("qty"),
-    )
-    wc = (
-        Window.partitionBy("l_returnflag")
-        .orderBy("price", "qty")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wt = Window.partitionBy("l_returnflag")
-    cum = w.select(
-        "l_returnflag",
-        "price",
-        "qty",
-        F.sum("qty").over(wc).alias("cw"),
-        F.sum("qty").over(wt).alias("total"),
-    )
-    return cum.groupBy("l_returnflag").agg(
-        F.max("total").cast("long").alias("total_qty"),
-        F.round(
-            F.min(F.when(2 * F.col("cw") >= F.col("total"), F.col("price"))), 6
-        ).alias("weighted_median_price"),
-    )
 
 
-@query(
+parts_abc_classification = sql_query(
     "parts_abc_classification",
-    oracle="""
+    """
     WITH rev AS (
       SELECT l_partkey,
              SUM(CAST(ROUND(l_extendedprice * (1.0 - l_discount), 6)
@@ -624,62 +478,11 @@ def stats_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM classed GROUP BY abc_class
     """,
 )
-def parts_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ABC inventory classification: parts ranked by revenue, class A =
-    the head covering 80% of cumulative revenue, B to 95%, C the tail —
-    the warehouse-ops counterpart of orders_pareto_concentration (classes
-    per item, not shares per percentile). The cumulative sum runs over
-    DECIMALS (exact; a double prefix sum's accumulation order is engine
-    internal) and only the two threshold comparisons touch doubles —
-    identical products both engines; partkey breaks revenue ties so the
-    prefix order is total.
-
-    Scale shape: per-part rollup (one fact shuffle), then a rank over the
-    part AGGREGATE. The ordered prefix sum is a single-partition window
-    at the extreme — at catalog scale, bucket by revenue range first
-    (equi-depth histogram) and classify within buckets.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    rev = l.groupBy("l_partkey").agg(
-        F.sum(
-            F.round(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), 6)
-            .cast("decimal(18,6)")
-        ).alias("r")
-    )
-    wc = Window.orderBy(F.desc("r"), "l_partkey").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wt = Window.partitionBy()
-    ranked = rev.select(
-        "l_partkey",
-        "r",
-        F.sum("r").over(wc).alias("cum"),
-        F.sum("r").over(wt).alias("total"),
-    )
-    cls = (
-        F.when(
-            F.col("cum").cast("double") <= F.lit(0.8) * F.col("total").cast("double"),
-            "A",
-        )
-        .when(
-            F.col("cum").cast("double") <= F.lit(0.95) * F.col("total").cast("double"),
-            "B",
-        )
-        .otherwise("C")
-    )
-    return (
-        ranked.select(cls.alias("abc_class"), "r")
-        .groupBy("abc_class")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_parts"),
-            F.sum("r").cast("double").alias("class_revenue"),
-        )
-    )
 
 
-@query(
+suppliers_herfindahl_by_nation = sql_query(
     "suppliers_herfindahl_by_nation",
-    oracle="""
+    """
     WITH srev AS (
       SELECT s.s_nationkey, l.l_suppkey,
              SUM(CAST(ROUND(l.l_extendedprice * (1.0 - l.l_discount), 6)
@@ -701,52 +504,6 @@ def parts_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n.n_name
     """,
 )
-def suppliers_herfindahl_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Herfindahl-Hirschman concentration index of supplier revenue within
-    each nation (HHI = sum of squared market shares x 10000; > 2500 =
-    highly concentrated) — the antitrust/market-structure statistic, and
-    the scalar summary behind orders_pareto_concentration's curves.
-    share^2 is a product of identical doubles both engines (share =
-    decimal-exact revenue / decimal-exact total); each squared share is
-    rounded then DECIMAL-summed. POW(x, 2) compiles to x*x in both
-    engines (integer exponent), keeping pow()'s general-case rounding
-    out of play.
-
-    Scale shape: supplier dim broadcasts into the fact rollup; everything
-    after runs on (nation, supplier) aggregates.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    srev = (
-        l.join(s, l.l_suppkey == s.s_suppkey)
-        .groupBy("s_nationkey", "l_suppkey")
-        .agg(
-            F.sum(
-                F.round(
-                    F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), 6
-                ).cast("decimal(18,6)")
-            ).alias("r")
-        )
-    )
-    tot = srev.groupBy("s_nationkey").agg(
-        F.sum("r").alias("t"), F.count(F.lit(1)).alias("n_suppliers")
-    )
-    share = F.col("r").cast("double") / F.col("t").cast("double")
-    return (
-        srev.join(tot, "s_nationkey")
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.max("n_suppliers").cast("long").alias("n_suppliers"),
-            F.round(
-                F.sum(
-                    F.round(F.pow(share, 2) * F.lit(10000.0), 6).cast("decimal(18,6)")
-                ).cast("double"),
-                4,
-            ).alias("hhi"),
-        )
-    )
 
 
 @query(
@@ -832,9 +589,9 @@ def orders_halfsample_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+orders_chi2_priority_status = sql_query(
     "orders_chi2_priority_status",
-    oracle="""
+    """
     WITH obs AS (
       SELECT o_orderpriority AS pri, o_orderstatus AS st,
              CAST(COUNT(*) AS BIGINT) AS n
@@ -862,54 +619,11 @@ def orders_halfsample_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cells
     """,
 )
-def orders_chi2_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square test of independence between order priority and order
-    status — the categorical-association test (are rush orders more
-    likely to be open?), completing the inference family (z-test, KS,
-    runs of drift chi-square). The full contingency grid materializes
-    every (priority, status) cell including zero-count ones (expected
-    counts exist for them; dropping them understates chi2); all inputs
-    are integer counts, each cell's term rounds to 6dp then DECIMAL-sums.
-
-    Scale shape: one fact rollup to the contingency table; marginals are
-    rollups of THAT table; the grid is |priorities| x |statuses| rows.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    obs = o.groupBy(
-        F.col("o_orderpriority").alias("pri"), F.col("o_orderstatus").alias("st")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    rows_ = obs.groupBy("pri").agg(F.sum("n").alias("nr"))
-    cols_ = obs.groupBy("st").agg(F.sum("n").alias("nc"))
-    tot = obs.agg(F.sum("n").alias("nn"))
-    cells = (
-        rows_.crossJoin(cols_)
-        .crossJoin(F.broadcast(tot))
-        .join(obs, ["pri", "st"], "left")
-        .select(
-            "pri",
-            "st",
-            F.coalesce(F.col("n"), F.lit(0)).alias("n"),
-            (
-                F.col("nr").cast("double")
-                * F.col("nc").cast("double")
-                / F.col("nn").cast("double")
-            ).alias("e"),
-        )
-    )
-    nd = F.col("n").cast("double")
-    term = F.round((nd - F.col("e")) * (nd - F.col("e")) / F.col("e"), 6)
-    n_rows = rows_.count()
-    n_cols = cols_.count()
-    return cells.agg(
-        F.count(F.lit(1)).cast("long").alias("n_cells"),
-        F.lit((n_rows - 1) * (n_cols - 1)).cast("long").alias("dof"),
-        F.round(F.sum(term.cast("decimal(18,6)")).cast("double"), 4).alias("chi2"),
-    )
 
 
-@query(
+stats_multiple_regression = sql_query(
     "stats_multiple_regression",
-    oracle="""
+    """
     WITH m AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(CAST(ROUND(l_quantity, 6) AS DECIMAL(18,6))) AS DOUBLE) AS s1,
@@ -942,53 +656,3 @@ def orders_chi2_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c
     """,
 )
-def stats_multiple_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-feature linear regression (extendedprice ~ quantity + discount)
-    in closed form: Cramer's rule on the centered 2x2 covariance system —
-    the multivariate upgrade of stats_regression_by_flag's simple slope,
-    fitted distributed in ONE aggregation pass (the nine decimal-exact
-    power sums are the sufficient statistics; the algebra happens on a
-    single row). Every division/multiplication runs the identical operand
-    chain in both engines; no matrix library, no iteration.
-
-    Scale shape: one scan, map-side-partial decimal sums, a 1-row
-    epilogue — the same envelope as any global aggregate. The normal-
-    equations approach generalizes to p features with p(p+3)/2 sums while
-    the data is scanned once (beyond ~30 features you'd switch to
-    distributed gradient descent; the sufficient-statistics trick is THE
-    scale play for small-p regression).
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    ds = lambda c: F.sum(F.round(c, 6).cast("decimal(18,6)")).cast("double")  # noqa: E731
-    q, dc, y = F.col("l_quantity"), F.col("l_discount"), F.col("l_extendedprice")
-    m = l.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        ds(q).alias("s1"),
-        ds(dc).alias("s2"),
-        ds(y).alias("sy"),
-        ds(q * q).alias("s11"),
-        ds(q * dc).alias("s12"),
-        ds(dc * dc).alias("s22"),
-        ds(q * y).alias("s1y"),
-        ds(dc * y).alias("s2y"),
-    )
-    nd = F.col("n").cast("double")
-    v11 = F.col("s11") - F.col("s1") * F.col("s1") / nd
-    v12 = F.col("s12") - F.col("s1") * F.col("s2") / nd
-    v22 = F.col("s22") - F.col("s2") * F.col("s2") / nd
-    v1y = F.col("s1y") - F.col("s1") * F.col("sy") / nd
-    v2y = F.col("s2y") - F.col("s2") * F.col("sy") / nd
-    det = v11 * v22 - v12 * v12
-    # Collinear/constant features make det=0: ANSI Spark throws
-    # DIVIDE_BY_ZERO on double/0 while DuckDB yields NULL — guard so both
-    # engines emit NULL betas (intercept NULL-propagates identically).
-    b1 = F.when(det != 0.0, (v1y * v22 - v2y * v12) / det)
-    b2 = F.when(det != 0.0, (v2y * v11 - v1y * v12) / det)
-    return m.select(
-        "n",
-        F.round(b1, 6).alias("beta_quantity"),
-        F.round(b2, 6).alias("beta_discount"),
-        F.round(
-            F.col("sy") / nd - b1 * (F.col("s1") / nd) - b2 * (F.col("s2") / nd), 4
-        ).alias("intercept"),
-    )

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .._memo import SessionMemo, memo_persist
-from ..registry import query
+from ..registry import query, sql_query
 from ..sources import load_table
 from ._util import dsum, sql_dsum
 
@@ -266,9 +266,9 @@ def events_rolling_7d_distinct_users(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-@query(
+events_winsorized_value_stats = sql_query(
     "events_winsorized_value_stats",
-    oracle="""
+    """
     WITH ranked AS (
       SELECT event_type, value,
              cume_dist() OVER (PARTITION BY event_type ORDER BY value) AS cd
@@ -291,49 +291,6 @@ def events_rolling_7d_distinct_users(spark: SparkSession, sf_dir: str) -> DataFr
     GROUP BY e.event_type, b.lo, b.hi
     """,
 )
-def events_winsorized_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winsorized per-type value stats: clip into [p05, p95] where the
-    thresholds are ORDER STATISTICS (max value with cume_dist <= 0.05 /
-    min with >= 0.95) — rank-based, so both engines land on an actual data
-    value with zero interpolation arithmetic to disagree on. The clipped
-    mean uses the decimal-sum discipline.
-
-    Outlier clipping before aggregation is standard curation hygiene (a
-    handful of corrupt values must not move a quality gate). Scale note:
-    the bounds pass here is one window over (type, value) pairs; at
-    100 TB you'd swap it for approx_percentile or a mergeable quantile
-    sketch and keep the clip/aggregate pass unchanged — the thresholds
-    are the only approximate part.
-    """
-    e = load_table(spark, sf_dir, "events").select("event_type", "value")
-    w = Window.partitionBy("event_type").orderBy("value")
-    ranked = e.withColumn("cd", F.cume_dist().over(w))
-    bounds = ranked.groupBy("event_type").agg(
-        F.coalesce(
-            F.max(F.when(F.col("cd") <= 0.05, F.col("value"))), F.min("value")
-        ).alias("lo"),
-        F.min(F.when(F.col("cd") >= 0.95, F.col("value"))).alias("hi"),
-    )
-    clipped = e.join(F.broadcast(bounds), "event_type").withColumn(
-        "cv", F.least(F.greatest(F.col("value"), F.col("lo")), F.col("hi"))
-    )
-    return (
-        clipped.groupBy("event_type", "lo", "hi")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (
-                F.sum(F.round(F.col("cv"), 6).cast("decimal(18,6)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("winsorized_mean"),
-        )
-        .select(
-            "event_type",
-            "n_events",
-            F.round("lo", 6).alias("p05_value"),
-            F.round("hi", 6).alias("p95_value"),
-            "winsorized_mean",
-        )
-    )
 
 
 _BASKETS_CACHE = SessionMemo("analytics.baskets")
@@ -1016,9 +973,9 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+pattern_rising_order_streaks = sql_query(
     "pattern_rising_order_streaks",
-    oracle="""
+    """
     WITH seq AS (
       SELECT
         o_custkey, o_orderkey, o_orderdate, o_totalprice,
@@ -1046,47 +1003,6 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING MAX(streak_len) >= 4
     """,
 )
-def pattern_rising_order_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MATCH_RECOGNIZE-style sequence detection without a pattern engine:
-    customers whose order totals rose strictly for >= 4 consecutive orders,
-    with their longest rising run — the gaps-and-islands idiom (a falling
-    step increments an island counter; runs group by island).
-
-    Scale shape: one shuffle on o_custkey serves BOTH window passes and the
-    island rollup (same partition key, Catalyst reuses the sort), then a
-    tiny aggregate. Sequence order ties break on o_orderkey so both engines
-    see the same order sequence. This is how SQL engines without
-    MATCH_RECOGNIZE (Spark included) express linear-pattern queries — no
-    self-join chains, cost O(n log n) per partition.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    wseq = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    seq = o.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderdate",
-        "o_totalprice",
-        F.when(
-            F.col("o_totalprice") > F.lag("o_totalprice").over(wseq), F.lit(1)
-        )
-        .otherwise(F.lit(0))
-        .alias("is_rise"),
-    )
-    islands = seq.select(
-        "o_custkey",
-        "is_rise",
-        F.sum(F.lit(1) - F.col("is_rise"))
-        .over(wseq.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("island"),
-    )
-    streaks = islands.groupBy("o_custkey", "island").agg(
-        (F.sum("is_rise") + F.lit(1)).cast("long").alias("streak_len")
-    )
-    return (
-        streaks.groupBy("o_custkey")
-        .agg(F.max("streak_len").cast("long").alias("max_streak"))
-        .where(F.col("max_streak") >= 4)
-    )
 
 
 @query(
@@ -1490,9 +1406,9 @@ def events_anomaly_daily_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+orders_pareto_concentration = sql_query(
     "orders_pareto_concentration",
-    oracle=f"""
+    f"""
     WITH spend AS (
       SELECT o_custkey, {sql_dsum("o_totalprice")} AS s
       FROM orders GROUP BY o_custkey
@@ -1516,38 +1432,6 @@ def events_anomaly_daily_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE cum >= 0.8 * total
     """,
 )
-def orders_pareto_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue concentration (the 80/20 check): how many of the
-    highest-spending customers it takes to cover 80% of total revenue,
-    and what fraction of the customer base that is.
-
-    Scale shape: orders reduce to one decimal spend per customer; the
-    cumulative window then runs over the CUSTOMER aggregate. That window
-    is a global sort — correct here because the input is already one row
-    per customer; at extreme customer counts the same answer comes from a
-    spend-histogram prefix sum (the equi-depth histogram machinery in
-    histogram_equidepth_totalprice) without total ordering. Decimal
-    cumulation makes the >= 0.8*total cut exact, so both engines cross
-    the threshold on the identical customer.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    spend = o.groupBy("o_custkey").agg(dsum("o_totalprice").alias("s"))
-    wseq = Window.orderBy(F.col("s").desc(), "o_custkey")
-    wcum = wseq.rowsBetween(Window.unboundedPreceding, 0)
-    wall = Window.partitionBy()
-    ranked = spend.select(
-        F.row_number().over(wseq).alias("rk"),
-        F.sum(F.col("s").cast("decimal(18,6)")).over(wcum).cast("double").alias("cum"),
-        F.sum(F.col("s").cast("decimal(18,6)")).over(wall).cast("double").alias("total"),
-        F.count(F.lit(1)).over(wall).alias("n_cust"),
-    )
-    return ranked.where(F.col("cum") >= 0.8 * F.col("total")).agg(
-        F.min("rk").cast("long").alias("n_top_customers"),
-        F.max("n_cust").cast("long").alias("n_customers"),
-        F.round(F.min("rk").cast("double") / F.max("n_cust"), 6).alias(
-            "top_share_of_customers"
-        ),
-    )
 
 
 @query(
@@ -1733,9 +1617,9 @@ def orders_backlog_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+returns_rate_by_brand = sql_query(
     "returns_rate_by_brand",
-    oracle=f"""
+    f"""
     SELECT
       p_brand,
       COUNT(*) AS n_lineitems,
@@ -1749,38 +1633,11 @@ def orders_backlog_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY p_brand
     """,
 )
-def returns_rate_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Return-rate quality report per brand: share of lineitems flagged
-    returned and the value coming back — the merchandising-quality signal
-    (q10 finds who returns; this finds WHAT gets returned).
-
-    Scale shape: part broadcasts onto the fact, one rollup at brand
-    grain with conditional aggregates sharing the single scan.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part")
-    returned = F.col("l_returnflag") == "R"
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).alias("n_lineitems"),
-            F.sum(F.when(returned, 1).otherwise(0)).cast("long").alias("n_returned"),
-            F.round(
-                F.sum(F.when(returned, 1).otherwise(0)).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("return_rate"),
-            dsum(F.when(returned, F.col("l_extendedprice")).otherwise(F.lit(0.0))).alias(
-                "returned_value"
-            ),
-        )
-    )
 
 
-@query(
+tax_effective_rate_by_status = sql_query(
     "tax_effective_rate_by_status",
-    oracle=f"""
+    f"""
     SELECT
       l_returnflag,
       l_linestatus,
@@ -1792,25 +1649,11 @@ def returns_rate_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag, l_linestatus
     """,
 )
-def tax_effective_rate_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Effective tax rate per (returnflag, linestatus) cell: value-weighted
-    tax share — q1's sibling measure over the one lineitem column no
-    other query exercises (l_tax). One scan, decimal-exact numerator and
-    denominator, IEEE-deterministic ratio of identical doubles.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    tax = dsum(F.col("l_extendedprice") * F.col("l_tax"))
-    gross = dsum("l_extendedprice")
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        tax.alias("tax_collected"),
-        gross.alias("gross_value"),
-        F.round(tax / gross, 6).alias("effective_rate"),
-    )
 
 
-@query(
+lines_per_order_distribution = sql_query(
     "lines_per_order_distribution",
-    oracle="""
+    """
     WITH sizes AS (
       SELECT l_orderkey, COUNT(*) AS n_lines FROM lineitem GROUP BY l_orderkey
     )
@@ -1821,24 +1664,11 @@ def tax_effective_rate_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n_lines
     """,
 )
-def lines_per_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution of order sizes (how many orders have k lineitems) —
-    the group-size histogram, i.e. an aggregation OF an aggregation. The
-    first rollup bounds everything after it: downstream rows are one per
-    distinct size (~7 here). This distribution is what justified the
-    'pairs bounded by basket size' claims in the basket/triangle
-    operators — now it is a driver-checked fact, not an assumption.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    sizes = li.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("n_lines"))
-    return sizes.groupBy(F.col("n_lines").cast("long").alias("n_lines")).agg(
-        F.count(F.lit(1)).alias("n_orders")
-    )
 
 
-@query(
+events_burstiness_fano = sql_query(
     "events_burstiness_fano",
-    oracle="""
+    """
     WITH daily AS (
       SELECT
         event_type,
@@ -1862,35 +1692,6 @@ def lines_per_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM moments
     """,
 )
-def events_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Burstiness of daily event volume per type via the Fano factor
-    (variance-to-mean ratio of daily counts): ~1 means Poisson-like
-    arrivals, >1 means bursty/overdispersed traffic — the dispersion
-    diagnostic behind anomaly thresholds (it says whether the z-score
-    model's equal-variance assumption even holds).
-
-    Scale shape: the fact reduces to (type, day) integer counts; moments
-    are exact integer sums, so every division acts on identical doubles
-    in both engines.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    m = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_days"),
-        F.sum(F.col("n").cast("long")).cast("double").alias("s1"),
-        F.sum((F.col("n") * F.col("n")).cast("long")).cast("double").alias("s2"),
-    )
-    mean = F.col("s1") / F.col("n_days")
-    return m.select(
-        "event_type",
-        F.col("n_days").cast("long").alias("n_days"),
-        F.round(mean, 6).alias("mean_daily"),
-        F.round((F.col("s2") / F.col("n_days") - mean * mean) / mean, 6).alias(
-            "fano_factor"
-        ),
-    )
 
 
 @query(
@@ -2334,9 +2135,9 @@ def timeseries_classical_decomposition(spark: SparkSession, sf_dir: str) -> Data
     )
 
 
-@query(
+orders_gini_coefficient = sql_query(
     "orders_gini_coefficient",
-    oracle="""
+    """
     WITH spend AS (
       SELECT o_custkey,
              CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
@@ -2359,49 +2160,11 @@ def timeseries_classical_decomposition(spark: SparkSession, sf_dir: str) -> Data
     FROM ranked
     """,
 )
-def orders_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini coefficient of customer spend — the standard inequality
-    summary next to orders_pareto_concentration's top-x% shares:
-    G = 2*sum(i*x_i)/(n*sum(x)) - (n+1)/n over ascending-sorted spend.
-    All mass stays integer cents (rank x cents products sum in bigint);
-    doubles appear only in the final closed form, identical both engines.
-    Ties rank by custkey — deterministic.
-
-    Scale shape: per-customer rollup (one fact shuffle), then a rank over
-    the customer aggregate. The global sort is real but runs on the
-    AGGREGATE (customers, not orders); at extreme cardinality swap the
-    exact rank for the equi-depth histogram approximation
-    (histogram_equidepth_totalprice) — Gini from decile means.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    spend = o.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
-    )
-    wr = Window.orderBy("cents", "o_custkey")
-    wall = Window.partitionBy()
-    ranked = spend.select(
-        "cents",
-        F.row_number().over(wr).alias("i"),
-        F.count(F.lit(1)).over(wall).alias("n"),
-        F.sum("cents").over(wall).alias("total"),
-    )
-    nd = F.max("n").cast("double")
-    td = F.max("total").cast("double")
-    return ranked.agg(
-        F.max("n").cast("long").alias("n_customers"),
-        F.max("total").cast("long").alias("total_cents"),
-        F.round(
-            (F.lit(2.0) * F.sum(F.col("i") * F.col("cents")).cast("double"))
-            / (nd * td)
-            - (nd + F.lit(1.0)) / nd,
-            6,
-        ).alias("gini"),
-    )
 
 
-@query(
+events_user_entropy = sql_query(
     "events_user_entropy",
-    oracle="""
+    """
     WITH counts AS (
       SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS c
       FROM events GROUP BY 1, 2
@@ -2421,32 +2184,6 @@ def orders_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM terms GROUP BY user_id
     """,
 )
-def events_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shannon entropy (nats) of each user's event-type mix — the
-    behavioral-diversity feature (0 = single-type bot-like activity,
-    ln(5) = uniform across all types) that feeds churn/anomaly models.
-    Per-term -p*ln(p) rounded to 6dp then decimal-summed (the
-    transcendental discipline); the final score rounds one digit coarser.
-
-    Scale shape: two hash aggs sharing the user_id key (type counts, then
-    totals) and a same-key join — one fact shuffle, then work proportional
-    to users x types.
-    """
-    e = load_table(spark, sf_dir, "events")
-    counts = e.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    tot = counts.groupBy("user_id").agg(F.sum("c").alias("n"))
-    p = F.col("c").cast("double") / F.col("n").cast("double")
-    terms = counts.join(tot, "user_id").select(
-        "user_id", F.round(-p * F.log(p), 6).alias("term")
-    )
-    return terms.groupBy("user_id").agg(
-        F.round(F.sum(F.col("term").cast("decimal(18,6)")).cast("double"), 5).alias(
-            "entropy_nats"
-        ),
-        F.count(F.lit(1)).cast("long").alias("n_types"),
-    )
 
 
 _DECAY_ARMS_SQL = " ".join(
@@ -3245,9 +2982,9 @@ def events_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+parts_discount_quantity_corr = sql_query(
     "parts_discount_quantity_corr",
-    oracle="""
+    """
     WITH lines AS (
       SELECT p_brand,
              CAST(ROUND(l_discount * 100) AS BIGINT) AS disc_pct,
@@ -3271,47 +3008,6 @@ def events_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE (n * sx2 - sx * sx) > 0 AND (n * sy2 - sy * sy) > 0
     """,
 )
-def parts_discount_quantity_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Price-elasticity proxy: per-brand Pearson correlation between the
-    discount offered and the quantity bought. Discounts become integer
-    percent points (2-decimal doubles x100 round exactly), quantities are
-    integral — every power sum is exact bigint and the correlation's
-    closed form touches doubles only at the final ratio/sqrt. Brands with
-    a degenerate (zero-variance) side drop via an exact integer guard,
-    never a float epsilon.
-
-    Scale shape: one fact pass with map-side partial sums to the brand
-    grain; the part join is the only shuffle (broadcastable dim at most
-    SFs via AQE).
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part")
-    lines = l.join(p, F.col("p_partkey") == F.col("l_partkey")).select(
-        "p_brand",
-        F.round(F.col("l_discount") * 100).cast("long").alias("disc_pct"),
-        F.col("l_quantity").cast("long").alias("qty"),
-    )
-    sums = lines.groupBy("p_brand").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("disc_pct").alias("sx"),
-        F.sum("qty").alias("sy"),
-        F.sum(F.col("disc_pct") * F.col("qty")).alias("sxy"),
-        F.sum(F.col("disc_pct") * F.col("disc_pct")).alias("sx2"),
-        F.sum(F.col("qty") * F.col("qty")).alias("sy2"),
-    )
-    varx = F.col("n") * F.col("sx2") - F.col("sx") * F.col("sx")
-    vary = F.col("n") * F.col("sy2") - F.col("sy") * F.col("sy")
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    return (
-        sums.where((varx > 0) & (vary > 0))
-        .select(
-            "p_brand",
-            F.col("n").alias("n_lines"),
-            F.round(
-                num / F.sqrt(varx.cast("double") * vary.cast("double")), 6
-            ).alias("disc_qty_corr"),
-        )
-    )
 
 
 @query(

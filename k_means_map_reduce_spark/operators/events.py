@@ -17,8 +17,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .._memo import SessionMemo, memo_persist
-from ..registry import query
-from ..sources import load_table
+from ..registry import query, sql_query
+from ..sources import load_table, register_views
 from ._util import dsum, sql_dsum
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -217,8 +217,7 @@ def events_funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataF
     """Sequential funnel (view → click → purchase, strictly ordered in event
     time) computed with three keyed min-aggregations + joins — each stage
     shuffles only (user_id, ts) pairs. Identical SQL runs on both engines."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_FUNNEL_SQL)
+    return register_views(spark, sf_dir, _FUNNEL_SQL)
 
 
 @query(
@@ -403,9 +402,9 @@ def events_window_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+events_transition_matrix = sql_query(
     "events_transition_matrix",
-    oracle="""
+    """
     WITH seq AS (
       SELECT user_id, event_type,
              lead(event_type) OVER (
@@ -424,37 +423,6 @@ def events_window_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM trans
     """,
 )
-def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over per-user event streams:
-    P(next_type | type) from adjacent event pairs — the behavioral-model
-    fingerprint (and the input to sequence-anomaly scoring).
-
-    One window over (user, time) — the exchange every per-user sequence op
-    shares — then a 25-cell aggregation; the probability normalization is
-    an unordered partition-sum window over those 25 rows. Deterministic
-    adjacency via the (ts, event_id) tie-break.
-    """
-    from pyspark.sql import Window as W
-
-    e = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.select(
-        "event_type", F.lead("event_type").over(w).alias("next_type")
-    ).where(F.col("next_type").isNotNull())
-    trans = (
-        seq.groupBy(
-            F.col("event_type").alias("from_type"),
-            F.col("next_type").alias("to_type"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    wp = W.partitionBy("from_type")
-    return trans.select(
-        "from_type",
-        "to_type",
-        "n",
-        F.round(F.col("n").cast("double") / F.sum("n").over(wp), 6).alias("prob"),
-    )
 
 
 @query(
@@ -815,9 +783,9 @@ def events_stickiness_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+events_hourly_profile = sql_query(
     "events_hourly_profile",
-    oracle="""
+    """
     WITH per_hour AS (
       SELECT
         event_type,
@@ -836,28 +804,6 @@ def events_stickiness_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per_hour p JOIN totals t USING (event_type)
     """,
 )
-def events_hourly_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hour-of-day activity profile per event type (the intraday
-    seasonality companion to events_dow_seasonality) — each hour's share
-    of the type's total volume, the shape capacity planning and
-    bot-detection both read.
-
-    Scale shape: one map-side-partial rollup to (type, hour), then
-    arithmetic over <= 24 x types rows with the totals broadcast.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    per_hour = ev.groupBy(
-        "event_type", F.hour("ts").alias("hour_of_day")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    totals = per_hour.groupBy("event_type").agg(
-        F.sum("n").cast("long").alias("total")
-    )
-    return per_hour.join(F.broadcast(totals), "event_type").select(
-        "event_type",
-        F.col("hour_of_day").cast("long").alias("hour_of_day"),
-        F.col("n").cast("long").alias("n_events"),
-        F.round(F.col("n").cast("double") / F.col("total"), 6).alias("share"),
-    )
 
 
 @query(
@@ -1093,9 +1039,9 @@ def events_rolling_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+events_top_percentile_users = sql_query(
     "events_top_percentile_users",
-    oracle="""
+    """
     WITH per_user AS (
       SELECT event_type, user_id, COUNT(*) AS n_events
       FROM events GROUP BY 1, 2
@@ -1113,37 +1059,6 @@ def events_rolling_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rk <= CAST(ceil(0.01 * n_users) AS BIGINT)
     """,
 )
-def events_top_percentile_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy-user extraction: the top 1% most active users per event type
-    — the population that dominates load and gets rate limits, selected
-    by RANK CUT (row_number <= ceil(0.01 * n_users)), not a value
-    threshold: order statistics on integer counts with a user_id
-    tie-break make the selected SET engine-independent even when many
-    users tie at the cut count (a "count >= p99-value" rule would
-    include all ties and change size run-to-run as data grows).
-
-    Scale shape: the fact collapses to (type, user) counts map-side; the
-    rank runs per type over the user rollup and the cut pushes down as a
-    WindowGroupLimit — only ~1% of user rows survive the window.
-    """
-    e = load_table(spark, sf_dir, "events")
-    per_user = e.groupBy("event_type", "user_id").agg(
-        F.count(F.lit(1)).alias("n_events")
-    )
-    wr = Window.partitionBy("event_type").orderBy(
-        F.col("n_events").desc(), "user_id"
-    )
-    wc = Window.partitionBy("event_type")
-    ranked = per_user.select(
-        "event_type",
-        "user_id",
-        "n_events",
-        F.row_number().over(wr).alias("rk"),
-        F.count(F.lit(1)).over(wc).alias("n_users"),
-    )
-    return ranked.where(
-        F.col("rk") <= F.ceil(0.01 * F.col("n_users")).cast("long")
-    ).select("event_type", "user_id", "n_events", F.col("rk").cast("long").alias("rk"))
 
 
 @query(
@@ -1616,9 +1531,9 @@ def events_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+events_user_activity_gini = sql_query(
     "events_user_activity_gini",
-    oracle="""
+    """
     WITH per_user AS (
       SELECT user_id, CAST(COUNT(*) AS BIGINT) AS x
       FROM events GROUP BY user_id
@@ -1638,43 +1553,6 @@ def events_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked GROUP BY n
     """,
 )
-def events_user_activity_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini coefficient of per-user event counts — the activity-
-    concentration number ("do 10% of users generate 90% of traffic?")
-    platform-health dashboards track. Computed via the sorted-rank
-    closed form G = (2 sum(i*x_i) - (n+1) sum(x)) / (n sum(x)) with
-    ranks ROW_NUMBER over (count, user_id) — the battery's integer-rank
-    rule, so numerator and denominator stay exact BIGINTs and divide
-    once.
-
-    At 100 TB: one fact pass into the per-user rollup (map-side
-    combine); the global rank window runs over user-scale rows, never
-    fact rows — the two-phase variant (range-partitioned sort + offset
-    per partition) is the documented path if even users outgrow one
-    task.
-    """
-    e = load_table(spark, sf_dir, "events")
-    per_user = e.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("x")
-    )
-    w = Window.orderBy("x", "user_id")
-    ranked = per_user.select(
-        "x",
-        F.row_number().over(w).cast("bigint").alias("i"),
-        F.count(F.lit(1)).over(Window.partitionBy()).cast("bigint").alias("n"),
-    )
-    num = (2 * F.sum(F.col("i") * F.col("x")) - (F.col("n") + 1) * F.sum("x")).cast(
-        "double"
-    )
-    den = (F.col("n") * F.sum("x")).cast("double")
-    return ranked.groupBy("n").agg(
-        F.sum("x").cast("bigint").alias("total_events"),
-        F.when(
-            (F.col("n") >= 2) & (F.sum("x") > 0), F.round(num / den, 6)
-        ).alias("gini"),
-    ).select(
-        F.col("n").alias("n_users"), "total_events", "gini"
-    )
 
 
 # per-user (signup, first-purchase, last-event) days — shared by the

@@ -23,9 +23,9 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..registry import query, sql_query
 from ..sources import load_table
-from ._util import dsum, sql_dsum
+from ._util import sql_dsum
 
 
 _KEYS = ["day", "user_id"]
@@ -101,9 +101,9 @@ def incremental_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+incremental_scd2_dimension = sql_query(
     "incremental_scd2_dimension",
-    oracle="""
+    """
     WITH v1 AS (
       SELECT c_custkey, c_mktsegment, c_acctbal FROM customer
     ),
@@ -135,70 +135,3 @@ def incremental_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM v1 WHERE c_custkey NOT IN (SELECT c_custkey FROM changed)
     """,
 )
-def incremental_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slowly-changing-dimension TYPE 2 build: given yesterday's dimension
-    snapshot (v1) and today's source extract (v2, derived
-    deterministically — segment migration for custkey%11, balance posting
-    for custkey%7), emit the versioned dimension: changed keys get their
-    old row CLOSED (valid_to = load date) plus a new open row; unchanged
-    keys keep one open row. This is the warehouse-standard history
-    mechanism behind join_scd2_order_segment's as-of lookups.
-
-    Scale shape: change detection is one key-partitioned join comparing
-    attribute values (at scale, fingerprints — see snapshot_diff_orders;
-    here fields compare directly so the oracle is trivially identical);
-    the three output branches are projections of the two snapshots
-    semi/anti-joined against the small changed-key set — no row ever
-    shuffles more than once, and history grows only by the change rate.
-    """
-    c = load_table(spark, sf_dir, "customer")
-    v1 = c.select("c_custkey", "c_mktsegment", "c_acctbal")
-    v2 = c.select(
-        "c_custkey",
-        F.when(F.col("c_custkey") % 11 == 0, "MIGRATED")
-        .otherwise(F.col("c_mktsegment"))
-        .alias("c_mktsegment"),
-        F.when(
-            F.col("c_custkey") % 7 == 0, F.round(F.col("c_acctbal") + 100.0, 2)
-        )
-        .otherwise(F.col("c_acctbal"))
-        .alias("c_acctbal"),
-    )
-    n2 = v2.select(
-        F.col("c_custkey").alias("k"),
-        F.col("c_mktsegment").alias("seg2"),
-        F.col("c_acctbal").alias("bal2"),
-    )
-    changed = (
-        v1.join(n2, F.col("c_custkey") == F.col("k"))
-        .where(
-            (F.col("c_mktsegment") != F.col("seg2"))
-            | (F.col("c_acctbal") != F.col("bal2"))
-        )
-        .select("c_custkey")
-    )
-    closed = v1.join(changed, "c_custkey").select(
-        "c_custkey",
-        "c_mktsegment",
-        "c_acctbal",
-        F.lit("2024-01-01").alias("valid_from"),
-        F.lit("2024-02-01").alias("valid_to"),
-        F.lit(False).alias("is_current"),
-    )
-    opened = v2.join(changed, "c_custkey").select(
-        "c_custkey",
-        "c_mktsegment",
-        "c_acctbal",
-        F.lit("2024-02-01").alias("valid_from"),
-        F.lit("9999-12-31").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-    )
-    unchanged = v1.join(changed, "c_custkey", "left_anti").select(
-        "c_custkey",
-        "c_mktsegment",
-        "c_acctbal",
-        F.lit("2024-01-01").alias("valid_from"),
-        F.lit("9999-12-31").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-    )
-    return closed.unionAll(opened).unionAll(unchanged)

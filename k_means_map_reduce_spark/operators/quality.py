@@ -22,19 +22,18 @@ from `orders` so DuckDB reproduces the exact same diff.
 
 from __future__ import annotations
 
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .._memo import SessionMemo, memo_persist
-from ..registry import query
+from ..registry import query, sql_query
 from ..sources import load_table
 
 
-@query(
+dq_checks_orders = sql_query(
     "dq_checks_orders",
-    oracle="""
+    """
     SELECT 'null_custkey' AS check_name,
            COUNT(*) FILTER (WHERE o_custkey IS NULL) AS violations,
            COUNT(*) AS n_rows
@@ -63,52 +62,6 @@ from ..sources import load_table
     FROM orders
     """,
 )
-def dq_checks_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Constraint battery over orders: nulls, uniqueness, FK integrity,
-    domain ranges — one (check_name, violations, n_rows) row each.
-
-    Conditional aggregates share a single scan (Catalyst merges the
-    map-side partials); the FK check is a broadcast-dim anti-join counting
-    survivors. A clean pipeline asserts every `violations` is 0 — the
-    driver hash-compare pins the exact counts either way.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-
-    scan_checks = o.agg(
-        F.count(F.when(F.col("o_custkey").isNull(), 1)).alias("null_custkey"),
-        (F.count(F.lit(1)) - F.countDistinct("o_orderkey")).alias("duplicate_orderkey"),
-        F.count(
-            F.when(
-                (F.col("o_orderdate") < F.lit("1990-01-01").cast("date"))
-                | (F.col("o_orderdate") > F.lit("2030-12-31").cast("date")),
-                1,
-            )
-        ).alias("orderdate_out_of_range"),
-        F.count(F.when(F.col("o_totalprice") <= 0, 1)).alias("nonpositive_totalprice"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-    dangling = (
-        o.join(c.select("c_custkey"),
-               o["o_custkey"] == c["c_custkey"], "left_anti")
-        .agg(F.count(F.lit(1)).alias("dangling_custkey_fk"))
-    )
-    wide = scan_checks.crossJoin(F.broadcast(dangling))
-    per_check = [
-        wide.select(
-            F.lit(name).alias("check_name"),
-            F.col(name).cast("long").alias("violations"),
-            F.col("n_rows").cast("long").alias("n_rows"),
-        )
-        for name in [
-            "null_custkey",
-            "duplicate_orderkey",
-            "dangling_custkey_fk",
-            "orderdate_out_of_range",
-            "nonpositive_totalprice",
-        ]
-    ]
-    return reduce(DataFrame.unionByName, per_check)
 
 
 _DIFF_V1 = "o_orderkey % 10 != 0"  # v1 lacks keys ending in 0
@@ -636,9 +589,9 @@ def dq_freshness_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@query(
+dq_referential_orphan_rates = sql_query(
     "dq_referential_orphan_rates",
-    oracle="""
+    """
     SELECT 'orders.o_custkey->customer' AS fk_edge,
       (SELECT COUNT(*) FROM orders) AS n_child,
       (SELECT COUNT(*) FROM orders o
@@ -668,49 +621,6 @@ def dq_freshness_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
       (SELECT COUNT(DISTINCT l_suppkey) FROM lineitem)
     """,
 )
-def dq_referential_orphan_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Referential-integrity profile over every FK edge of the star schema
-    in one report: child rows, orphan rows (anti-join), and distinct
-    child keys per edge — the cross-table complement of
-    dq_checks_orders' single-table battery (an all-zero orphan column is
-    the PROOF the star joins are safe to run without null-handling).
-
-    At 100 TB: each edge is one anti-join keyed on the FK (AQE picks
-    broadcast vs shuffle per dimension size) plus counts with map-side
-    combine; edges are independent and union at the 4-row report grain.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
-    c = load_table(spark, sf_dir, "customer")
-    p = load_table(spark, sf_dir, "part")
-    s = load_table(spark, sf_dir, "supplier")
-
-    def edge(name, child, fk, parent, pk):
-        orphans = child.join(
-            parent.select(pk), child[fk] == parent[pk], "left_anti"
-        )
-        return (
-            child.agg(
-                F.count(F.lit(1)).alias("n_child"),
-                F.countDistinct(fk).alias("n_child_keys"),
-            )
-            .crossJoin(orphans.agg(F.count(F.lit(1)).alias("n_orphans")))
-            .select(
-                F.lit(name).alias("fk_edge"),
-                "n_child",
-                "n_orphans",
-                "n_child_keys",
-            )
-        )
-
-    return (
-        edge("orders.o_custkey->customer", o, "o_custkey", c, "c_custkey")
-        .unionAll(edge("lineitem.l_orderkey->orders", l, "l_orderkey", o, "o_orderkey"))
-        .unionAll(edge("lineitem.l_partkey->part", l, "l_partkey", p, "p_partkey"))
-        .unionAll(
-            edge("lineitem.l_suppkey->supplier", l, "l_suppkey", s, "s_suppkey")
-        )
-    )
 
 
 @query(
@@ -811,9 +721,9 @@ def dq_outlier_iqr_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+privacy_l_diversity_check = sql_query(
     "privacy_l_diversity_check",
-    oracle="""
+    """
     WITH groups AS (
       SELECT c_nationkey, c_mktsegment,
         CAST(COUNT(*) AS BIGINT) AS n,
@@ -832,34 +742,6 @@ def dq_outlier_iqr_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM groups
     """,
 )
-def privacy_l_diversity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """l-diversity audit (l=3), the standard companion of the k-anonymity
-    check: within each quasi-identifier group (nation, segment), the
-    SENSITIVE attribute (balance band, the same banding
-    privacy_k_anonymity_check treats as quasi-ID) must take at least 3
-    distinct values — a group that is k-anonymous but balance-homogeneous
-    still leaks the sensitive value, which k-anonymity alone misses.
-
-    Pure integer banding, distinct counts, and one exact ratio.
-
-    At 100 TB: one dimension pass into a 125-group rollup (two-phase
-    distinct), then a 1-row census.
-    """
-    c = load_table(spark, sf_dir, "customer")
-    band = F.floor(F.col("c_acctbal") / 1000.0).cast("bigint")
-    groups = c.groupBy("c_nationkey", "c_mktsegment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.countDistinct(band).cast("bigint").alias("diversity"),
-    )
-    viol = F.count(F.when(F.col("diversity") < 3, 1))
-    return groups.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_groups"),
-        viol.cast("bigint").alias("n_violating"),
-        F.min("diversity").cast("bigint").alias("min_diversity"),
-        F.round(viol.cast("double") / F.count(F.lit(1)), 6).alias(
-            "violating_share"
-        ),
-    )
 
 
 # (nation, segment, bucket) counts — every t-closeness distribution

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..registry import query, sql_query
 from ..sources import load_table, register_views
 from ._util import davg, dsum, sql_davg, sql_dsum
 
@@ -200,9 +200,9 @@ def join_left_outer_customer_orders(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@query(
+join_semi_customers_with_big_orders = sql_query(
     "join_semi_customers_with_big_orders",
-    oracle="""
+    """
     SELECT c_custkey, c_name, c_acctbal
     FROM customer
     WHERE EXISTS (
@@ -211,12 +211,6 @@ def join_left_outer_customer_orders(spark: SparkSession, sf_dir: str) -> DataFra
     )
     """,
 )
-def join_semi_customers_with_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").where(F.col("o_totalprice") > 300000.0)
-    return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
-        "c_custkey", "c_name", "c_acctbal"
-    )
 
 
 @query(
@@ -270,9 +264,9 @@ def join_theta_price_above_retail(spark: SparkSession, sf_dir: str) -> DataFrame
 # --------------------------------------------------------------------------
 
 
-@query(
+agg_global_stats = sql_query(
     "agg_global_stats",
-    oracle=f"""
+    f"""
     SELECT
       COUNT(*) AS n_rows,
       COUNT(DISTINCT l_orderkey) AS n_orders,
@@ -284,17 +278,6 @@ def join_theta_price_above_retail(spark: SparkSession, sf_dir: str) -> DataFrame
     FROM lineitem
     """,
 )
-def agg_global_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_table(spark, sf_dir, "lineitem")
-    return l.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("l_orderkey").alias("n_orders"),
-        F.countDistinct("l_partkey").alias("n_parts"),
-        dsum("l_quantity").alias("sum_qty"),
-        F.min("l_extendedprice").alias("min_price"),
-        F.max("l_extendedprice").alias("max_price"),
-        davg("l_discount").alias("avg_discount"),
-    )
 
 
 @query(
@@ -363,35 +346,23 @@ def agg_cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+topk_expensive_orders = sql_query(
     "topk_expensive_orders",
-    oracle="""
+    """
     SELECT o_orderkey, o_totalprice, o_orderpriority
     FROM orders
     ORDER BY o_totalprice DESC, o_orderkey
     LIMIT 25
     """,
 )
-def topk_expensive_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global top-k: Spark plans orderBy+limit as TakeOrderedAndProject —
-    per-partition top-k then a k-row merge on the driver, no full sort."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.select("o_orderkey", "o_totalprice", "o_orderpriority")
-        .orderBy(F.col("o_totalprice").desc(), "o_orderkey")
-        .limit(25)
-    )
 
 
-@query(
+distinct_flag_status = sql_query(
     "distinct_flag_status",
-    oracle="""
+    """
     SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
     """,
 )
-def distinct_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_table(spark, sf_dir, "lineitem")
-    return l.select("l_returnflag", "l_linestatus").distinct()
 
 
 # --------------------------------------------------------------------------
@@ -399,9 +370,9 @@ def distinct_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+q4_order_priority_late = sql_query(
     "q4_order_priority_late",
-    oracle="""
+    """
     SELECT o_orderpriority, COUNT(*) AS n_orders
     FROM orders
     WHERE o_orderdate >= TIMESTAMP '1996-07-01'
@@ -413,24 +384,6 @@ def distinct_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     """,
 )
-def q4_order_priority_late(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: left-semi join (EXISTS with a correlated inequality)
-    then a tiny hash agg. The semi join needs only l_orderkey+l_shipdate on
-    the probe side — column pruning keeps the shuffle narrow."""
-    o = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp_ntz"))
-        & (F.col("o_orderdate") < F.lit("1996-10-01").cast("timestamp_ntz"))
-    )
-    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    return (
-        o.join(
-            l,
-            (o.o_orderkey == l.l_orderkey) & (l.l_shipdate > o.o_orderdate),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
 
 
 @query(
@@ -477,9 +430,9 @@ def q10_returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+join_full_outer_segment_totals = sql_query(
     "join_full_outer_segment_totals",
-    oracle=f"""
+    f"""
     WITH seg AS (
       SELECT c_mktsegment AS segment, COUNT(*) AS n_customers
       FROM customer GROUP BY c_mktsegment
@@ -495,50 +448,22 @@ def q10_returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM seg FULL OUTER JOIN big ON seg.segment = big.segment
     """,
 )
-def join_full_outer_segment_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full outer join of two aggregates (one side can be missing keys)."""
-    c = load_table(spark, sf_dir, "customer")
-    seg = c.groupBy(F.col("c_mktsegment").alias("segment")).agg(
-        F.count(F.lit(1)).alias("n_customers")
-    )
-    big = (
-        c.where(F.col("c_acctbal") > 9990.0)
-        .groupBy(F.col("c_mktsegment").alias("segment"))
-        .agg(F.count(F.lit(1)).alias("n_rich"))
-    )
-    return (
-        seg.join(big, "segment", "full_outer")
-        .select(
-            "segment",
-            F.coalesce("n_customers", F.lit(0)).alias("n_customers"),
-            F.coalesce("n_rich", F.lit(0)).alias("n_rich"),
-        )
-    )
 
 
-@query(
+join_right_outer_supplier_nation = sql_query(
     "join_right_outer_supplier_nation",
-    oracle="""
+    """
     SELECT n_name, CAST(COUNT(s_suppkey) AS BIGINT) AS n_suppliers
     FROM supplier
     RIGHT JOIN nation ON s_nationkey = n_nationkey
     GROUP BY n_name
     """,
 )
-def join_right_outer_supplier_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Right outer join: every nation appears, supplier-less ones count 0."""
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    return (
-        s.join(n, s.s_nationkey == n.n_nationkey, "right")
-        .groupBy("n_name")
-        .agg(F.count("s_suppkey").alias("n_suppliers"))
-    )
 
 
-@query(
+join_cross_region_segment = sql_query(
     "join_cross_region_segment",
-    oracle="""
+    """
     SELECT r_name, c_mktsegment AS segment, n_customers
     FROM region
     CROSS JOIN (
@@ -546,16 +471,6 @@ def join_right_outer_supplier_nation(spark: SparkSession, sf_dir: str) -> DataFr
     )
     """,
 )
-def join_cross_region_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit cartesian product (tiny × tiny — the only sane cross join;
-    Spark plans BroadcastNestedLoopJoin)."""
-    r = load_table(spark, sf_dir, "region").select("r_name")
-    seg = (
-        load_table(spark, sf_dir, "customer")
-        .groupBy(F.col("c_mktsegment").alias("segment"))
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
-    return r.crossJoin(seg).select("r_name", "segment", "n_customers")
 
 
 @query(
@@ -611,8 +526,9 @@ def sql_scripting_param_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     The declarative body inside the script still goes through Catalyst
     unchanged — scripting controls WHICH plan runs, not how it runs.
     """
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return register_views(
+        spark,
+        sf_dir,
         """
         BEGIN
           DECLARE n_l BIGINT;
@@ -659,8 +575,9 @@ def sql_pipe_syntax_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan underneath — the pipe form is parse-time sugar, which is exactly
     what the oracle (classic SQL) verifies.
     """
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return register_views(
+        spark,
+        sf_dir,
         """
         FROM lineitem
         |> WHERE l_shipdate <= :ship_cut
@@ -706,8 +623,9 @@ def sql_lateral_topn_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     key. Ties break on orderkey; DuckDB runs the identical SQL text
     modulo nothing (both dialects accept this form).
     """
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return register_views(
+        spark,
+        sf_dir,
         """
         SELECT c.c_custkey, c.c_mktsegment,
                t.o_orderkey, t.o_totalprice, t.rk
@@ -726,9 +644,9 @@ def sql_lateral_topn_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+agg_group_by_all = sql_query(
     "agg_group_by_all",
-    oracle="""
+    """
     SELECT o_orderstatus, o_orderpriority,
       CAST(COUNT(*) AS BIGINT) AS n_orders,
       CAST(SUM(CAST(ROUND(o_totalprice, 6) AS DECIMAL(18,6))) AS DOUBLE)
@@ -737,33 +655,11 @@ def sql_lateral_topn_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ALL
     """,
 )
-def agg_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUP BY ALL (Spark 4 / DuckDB shared SQL surface): every
-    non-aggregate select item becomes a grouping key — the analyst
-    shorthand both engines now parse IDENTICALLY, so the oracle is the
-    same SQL text verbatim (the strongest cross-engine surface check:
-    not just equal results, equal syntax).
-
-    At 100 TB: a plain hash aggregate with map-side combine — GROUP BY
-    ALL is parse-time sugar, the Catalyst plan is identical to the
-    explicit column list.
-    """
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority,
-          CAST(COUNT(*) AS BIGINT) AS n_orders,
-          CAST(SUM(CAST(ROUND(o_totalprice, 6) AS DECIMAL(18,6))) AS DOUBLE)
-            AS revenue
-        FROM orders
-        GROUP BY ALL
-        """
-    )
 
 
-@query(
+agg_exact_mode_by_segment = sql_query(
     "agg_exact_mode_by_segment",
-    oracle="""
+    """
     WITH counts AS (
       SELECT c_mktsegment AS segment, o_orderpriority AS priority,
         CAST(COUNT(*) AS BIGINT) AS n
@@ -780,40 +676,6 @@ def agg_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked WHERE rk = 1
     """,
 )
-def agg_exact_mode_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact MODE with a DETERMINISTIC tie-break: the most frequent order
-    priority per market segment, ties broken by priority name — the
-    portable restatement of mode()/any_value(), whose tie behavior is
-    engine-defined and therefore un-oracle-able as a builtin. ROW_NUMBER
-    over (count DESC, value) is the battery's total-order rule.
-
-    At 100 TB: one fact-dim join into a 25-cell rollup (map-side
-    combine); the rank window runs over those cells.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    from pyspark.sql import Window
-
-    counts = (
-        o.join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .groupBy(
-            F.col("c_mktsegment").alias("segment"),
-            F.col("o_orderpriority").alias("priority"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-    w = Window.partitionBy("segment").orderBy(F.col("n").desc(), "priority")
-    return (
-        counts.select(
-            "segment", "priority", "n", F.row_number().over(w).alias("rk")
-        )
-        .where(F.col("rk") == 1)
-        .select(
-            "segment",
-            F.col("priority").alias("mode_priority"),
-            F.col("n").alias("mode_count"),
-        )
-    )
 
 
 @query(

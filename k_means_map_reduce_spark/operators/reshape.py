@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources import load_table
+from ..sources import load_table, register_views
 from ._util import sql_dsum
 
 _BANDS = [
@@ -212,8 +212,9 @@ def lateral_udtf_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield tok, cnt
 
     spark.udtf.register("top_tokens_udtf", TopTokens)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(
+    return register_views(
+        spark,
+        sf_dir,
         "SELECT d.doc_id, t.tok, t.cnt "
-        "FROM documents d, LATERAL top_tokens_udtf(d.text, 3) t"
+        "FROM documents d, LATERAL top_tokens_udtf(d.text, 3) t",
     )

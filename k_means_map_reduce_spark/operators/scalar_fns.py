@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..registry import query, sql_query
 from ..sources import load_table
 from ._util import dsum
 
@@ -79,9 +79,9 @@ def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+scalar_math_funcs = sql_query(
     "scalar_math_funcs",
-    oracle="""
+    """
     SELECT
       l_orderkey,
       l_linenumber,
@@ -95,18 +95,6 @@ def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_linenumber = 1
     """,
 )
-def scalar_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_table(spark, sf_dir, "lineitem").where(F.col("l_linenumber") == 1)
-    return l.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.round(F.sqrt("l_extendedprice"), 6).alias("sqrt_price"),
-        F.round(F.pow("l_discount", F.lit(2)), 10).alias("disc_sq"),
-        F.abs(F.col("l_quantity") - 25.0).alias("qty_dev"),
-        F.ceil("l_extendedprice").cast("bigint").alias("price_ceil"),
-        F.floor("l_extendedprice").cast("bigint").alias("price_floor"),
-        F.round(F.log(F.col("l_extendedprice") + 1.0), 6).alias("log_price"),
-    )
 
 
 @query(
@@ -282,9 +270,9 @@ def events_variant_props_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+scalar_edit_distance_pairs = sql_query(
     "scalar_edit_distance_pairs",
-    oracle="""
+    """
     WITH pairs AS (
       SELECT
         a.p_brand AS brand,
@@ -304,40 +292,6 @@ def events_variant_props_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY brand
     """,
 )
-def scalar_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit-distance record linkage: Levenshtein distance between part names
-    inside each (brand, type) blocking group, rolled up per brand — the
-    classic blocked-comparison shape (never an unblocked cross join) that
-    complements join_fuzzy_part_names' trigram-Jaccard tier with an exact
-    character-level metric. Both engines implement unit-cost Levenshtein,
-    so distances agree integer-for-integer.
-
-    Scale shape: the self-join keys on the blocking columns, so pair count
-    is sum of squares of BLOCK sizes, not corpus size squared; blocks are
-    bounded by the brand x type vocabulary. Distance sums are integer
-    (exact); the average divides exact operands.
-    """
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_name", "p_brand", "p_type")
-    a = p.alias("a")
-    b = p.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.p_brand") == F.col("b.p_brand"))
-        & (F.col("a.p_type") == F.col("b.p_type"))
-        & (F.col("a.p_partkey") < F.col("b.p_partkey")),
-    ).select(
-        F.col("a.p_brand").alias("brand"),
-        F.levenshtein(F.col("a.p_name"), F.col("b.p_name")).alias("dist"),
-    )
-    return pairs.groupBy("brand").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.min("dist").cast("long").alias("min_dist"),
-        F.max("dist").cast("long").alias("max_dist"),
-        F.round(F.sum(F.col("dist").cast("long")).cast("double") / F.count(F.lit(1)), 6).alias(
-            "avg_dist"
-        ),
-        F.sum(F.when(F.col("dist") <= 10, 1).otherwise(0)).cast("long").alias("near_pairs"),
-    )
 
 
 @query(
@@ -487,9 +441,9 @@ def scalar_interval_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+agg_boolean_surface = sql_query(
     "agg_boolean_surface",
-    oracle="""
+    """
     SELECT c_mktsegment AS segment,
       bool_and(c_acctbal > -999.0) AS all_above_floor,
       bool_or(c_acctbal < 0.0) AS any_negative,
@@ -499,23 +453,3 @@ def scalar_interval_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer GROUP BY 1
     """,
 )
-def agg_boolean_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boolean-aggregate surface (bool_and / bool_or / count_if) per
-    segment — the assertion-style aggregates data-quality rules compile
-    to (Spark's every/some/any_value family; DuckDB's bool_and/bool_or).
-    count_if is expressed as COUNT(CASE ...) so both engines share the
-    formulation; all outputs are exact booleans/integers (nothing to
-    round).
-
-    At 100 TB: one conditional aggregate with map-side combine — the
-    cheapest possible full-scan shape.
-    """
-    c = load_table(spark, sf_dir, "customer")
-    return c.groupBy(F.col("c_mktsegment").alias("segment")).agg(
-        F.bool_and(F.col("c_acctbal") > -999.0).alias("all_above_floor"),
-        F.bool_or(F.col("c_acctbal") < 0.0).alias("any_negative"),
-        F.count(F.when(F.col("c_acctbal") > 9000.0, 1))
-        .cast("bigint")
-        .alias("n_rich"),
-        F.bool_and(F.col("c_custkey").isNotNull()).alias("keys_complete"),
-    )

@@ -2,108 +2,65 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..registry import query
-from ..sources import load_table
+from ..registry import sql_query
 
 
-def _building(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load_table(spark, sf_dir, "customer")
-        .where(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-
-
-def _rich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load_table(spark, sf_dir, "customer")
-        .where(F.col("c_acctbal") > 5000.0)
-        .select("c_custkey")
-    )
-
-
-@query(
+set_union_all_building_rich = sql_query(
     "set_union_all_building_rich",
-    oracle="""
+    """
     SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
     UNION ALL
     SELECT c_custkey FROM customer WHERE c_acctbal > 5000.0
     """,
 )
-def set_union_all_building_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _building(spark, sf_dir).union(_rich(spark, sf_dir))
 
 
-@query(
+set_union_distinct_building_rich = sql_query(
     "set_union_distinct_building_rich",
-    oracle="""
+    """
     SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
     UNION
     SELECT c_custkey FROM customer WHERE c_acctbal > 5000.0
     """,
 )
-def set_union_distinct_building_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _building(spark, sf_dir).union(_rich(spark, sf_dir)).distinct()
 
 
-@query(
+set_intersect_building_rich = sql_query(
     "set_intersect_building_rich",
-    oracle="""
+    """
     SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
     INTERSECT
     SELECT c_custkey FROM customer WHERE c_acctbal > 5000.0
     """,
 )
-def set_intersect_building_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _building(spark, sf_dir).intersect(_rich(spark, sf_dir))
 
 
-@query(
+set_except_building_rich = sql_query(
     "set_except_building_rich",
-    oracle="""
+    """
     SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
     EXCEPT
     SELECT c_custkey FROM customer WHERE c_acctbal > 5000.0
     """,
 )
-def set_except_building_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _building(spark, sf_dir).subtract(_rich(spark, sf_dir))
 
 
-@query(
+set_intersect_all_priorities = sql_query(
     "set_intersect_all_priorities",
-    oracle="""
+    """
     SELECT o_orderpriority FROM orders WHERE o_orderstatus = 'F'
     INTERSECT ALL
     SELECT o_orderpriority FROM orders WHERE o_orderstatus = 'O'
     """,
 )
-def set_intersect_all_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bag-semantics intersection (INTERSECT ALL): each priority value
-    survives min(count_left, count_right) times — the multiset algebra
-    DISTINCT-based set ops can't express. Plans as one aggregation per
-    side plus a count-min merge, no row explosion."""
-    o = load_table(spark, sf_dir, "orders")
-    left = o.where(F.col("o_orderstatus") == "F").select("o_orderpriority")
-    right = o.where(F.col("o_orderstatus") == "O").select("o_orderpriority")
-    return left.intersectAll(right)
 
 
-@query(
+set_except_all_priorities = sql_query(
     "set_except_all_priorities",
-    oracle="""
+    """
     SELECT o_orderpriority FROM orders WHERE o_orderstatus = 'F'
     EXCEPT ALL
     SELECT o_orderpriority FROM orders WHERE o_orderstatus = 'O'
     """,
 )
-def set_except_all_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bag-semantics difference (EXCEPT ALL): multiplicities subtract
-    (max(count_left - count_right, 0) copies survive)."""
-    o = load_table(spark, sf_dir, "orders")
-    left = o.where(F.col("o_orderstatus") == "F").select("o_orderpriority")
-    right = o.where(F.col("o_orderstatus") == "O").select("o_orderpriority")
-    return left.exceptAll(right)

@@ -14,8 +14,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .._memo import SessionMemo, memo_persist
-from ..registry import query
-from ..sources import load_table, register_views
+from ..registry import query, sql_query
+from ..sources import load_table
 
 
 @query(
@@ -49,14 +49,20 @@ def approx_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the executed plan.
     """
     l = load_table(spark, sf_dir, "lineitem")
-    agg = l.agg(
+    # Two one-row aggregates, cross-joined. In one agg with the
+    # countDistincts, Spark's Expand rewrite gives every distinct-key group
+    # its own HLL++ buffer (130 s at sf0.1 against 3 s apart, 4-core box).
+    approx = l.agg(
         F.approx_count_distinct("l_orderkey", rsd=0.01).alias("approx_orders"),
         F.approx_count_distinct("l_partkey", rsd=0.01).alias("approx_parts"),
         F.approx_count_distinct("l_suppkey", rsd=0.01).alias("approx_supps"),
+    )
+    exact = l.agg(
         F.countDistinct("l_orderkey").alias("exact_orders"),
         F.countDistinct("l_partkey").alias("exact_parts"),
         F.countDistinct("l_suppkey").alias("exact_supps"),
     )
+    agg = approx.crossJoin(exact)
 
     def ok(approx: str, exact: str):
         err = F.abs(F.col(approx) - F.col(exact)).cast("double")
@@ -130,9 +136,9 @@ def approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+grouping_sets_sales = sql_query(
     "grouping_sets_sales",
-    oracle="""
+    """
     SELECT
       COALESCE(l_returnflag, 'ALL') AS flag,
       COALESCE(l_linestatus, 'ALL') AS status,
@@ -142,20 +148,6 @@ def approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
     """,
 )
-def grouping_sets_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS + grouping_id through the SQL front-end."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT
-          COALESCE(l_returnflag, 'ALL') AS flag,
-          COALESCE(l_linestatus, 'ALL') AS status,
-          CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS INT) AS gid,
-          COUNT(*) AS n
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        """
-    )
 
 
 @query(

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .._memo import SessionMemo, memo_persist
-from ..registry import query
+from ..registry import query, sql_query
 from ..sources import load_table
 
 # integer cents for 2dp money columns: x*100 rounds to the exact integer in
@@ -48,9 +48,9 @@ def _cents(col: str) -> F.Column:
 _CENTS_SQL = "CAST(ROUND({c} * 100, 0) AS BIGINT)"
 
 
-@query(
+stats_spearman_price_quantity = sql_query(
     "stats_spearman_price_quantity",
-    oracle="""
+    """
     WITH sold AS (
       SELECT l_partkey, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty
       FROM lineitem GROUP BY 1
@@ -74,55 +74,6 @@ _CENTS_SQL = "CAST(ROUND({c} * 100, 0) AS BIGINT)"
     FROM ranked GROUP BY 1
     """,
 )
-def stats_spearman_price_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-brand Spearman rank correlation between a part's retail price and
-    its total sold quantity (does pricing rank-order demand?).
-
-    Ranks are ROW_NUMBER over (value, partkey) — all distinct by
-    construction, so the closed form rho = 1 - 6*sum(d^2)/(n(n^2-1)) is
-    exact and every term up to the final division is BIGINT. This is the
-    deterministic tie-broken variant, not the midrank estimator.
-
-    At 100 TB: the fact collapses to a per-part quantity rollup first; the
-    rank windows partition by brand over part-dimension rows.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part")
-    sold = l.groupBy("l_partkey").agg(
-        F.sum(F.col("l_quantity").cast("bigint")).alias("qty")
-    )
-    ranked = (
-        p.join(sold, F.col("l_partkey") == F.col("p_partkey"))
-        .select(
-            "p_brand",
-            F.row_number()
-            .over(
-                Window.partitionBy("p_brand").orderBy(
-                    "p_retailprice", "p_partkey"
-                )
-            )
-            .cast("bigint")
-            .alias("rx"),
-            F.row_number()
-            .over(Window.partitionBy("p_brand").orderBy("qty", "p_partkey"))
-            .cast("bigint")
-            .alias("ry"),
-        )
-    )
-    d2 = (F.col("rx") - F.col("ry")) * (F.col("rx") - F.col("ry"))
-    g = ranked.groupBy("p_brand").agg(
-        F.count(F.lit(1)).alias("n"), F.sum(d2).alias("d2_sum")
-    )
-    n = F.col("n")
-    rho = F.lit(1.0) - (6 * F.col("d2_sum")).cast("double") / (
-        n * (n * n - 1)
-    ).cast("double")
-    return g.select(
-        "p_brand",
-        "n",
-        "d2_sum",
-        F.when(n >= 2, F.round(rho, 6)).alias("spearman_rho"),
-    )
 
 
 @query(
@@ -1698,9 +1649,9 @@ def stats_jarque_bera_by_segment(
     )
 
 
-@query(
+stats_cohens_d_segments = sql_query(
     "stats_cohens_d_segments",
-    oracle=f"""
+    f"""
     WITH cents AS (
       SELECT c_mktsegment AS seg, {_CENTS_SQL.format(c='c_acctbal')} AS v
       FROM customer
@@ -1739,64 +1690,11 @@ def stats_jarque_bera_by_segment(
     FROM d_
     """,
 )
-def stats_cohens_d_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's d (pooled-SD standardized mean difference) and the
-    small-sample Hedges' g correction between the AUTOMOBILE and BUILDING
-    segments' balances — the EFFECT-SIZE companion the test battery
-    (Welch t, Mann-Whitney) reports next to its p-values: how big is the
-    difference, not just whether it exists.
-
-    Determinism: the same integer-cents power-sum recipe as
-    stats_welch_t_segments (one conditional-aggregate pass); sqrt is
-    exact; the 6dp round lands on identical doubles. Degenerate guards:
-    one-row or constant groups yield NULL d.
-
-    At 100 TB: one dimension scan, a 1-row conditional rollup, pure
-    closed-form arithmetic after.
-    """
-    c = load_table(spark, sf_dir, "customer")
-    cents = c.where(
-        F.col("c_mktsegment").isin("AUTOMOBILE", "BUILDING")
-    ).select(F.col("c_mktsegment").alias("seg"), _cents("c_acctbal").alias("v"))
-    is1 = F.col("seg") == "AUTOMOBILE"
-    is2 = F.col("seg") == "BUILDING"
-    vdec = F.col("v").cast("decimal(19,0)")
-    g = cents.agg(
-        F.count(F.when(is1, 1)).alias("n1"),
-        F.sum(F.when(is1, F.col("v"))).cast("bigint").alias("s1"),
-        F.sum(F.when(is1, vdec * vdec)).cast("double").alias("ss1"),
-        F.count(F.when(is2, 1)).alias("n2"),
-        F.sum(F.when(is2, F.col("v"))).cast("bigint").alias("s2"),
-        F.sum(F.when(is2, vdec * vdec)).cast("double").alias("ss2"),
-    )
-    n1d = F.col("n1").cast("double")
-    n2d = F.col("n2").cast("double")
-    mean_diff = F.col("s1").cast("double") / n1d - F.col("s2").cast("double") / n2d
-    ssw = (
-        F.col("ss1") - F.col("s1").cast("double") * F.col("s1").cast("double") / n1d
-    ) + (
-        F.col("ss2") - F.col("s2").cast("double") * F.col("s2").cast("double") / n2d
-    )
-    sp = F.when(
-        (F.col("n1") >= 2) & (F.col("n2") >= 2) & (F.col("n1") + F.col("n2") > 2),
-        F.sqrt(ssw / (F.col("n1") + F.col("n2") - 2).cast("double")),
-    )
-    d_ = g.select("n1", "n2", mean_diff.alias("mean_diff"), sp.alias("sp"))
-    d_stat = F.col("mean_diff") / F.col("sp")
-    corr = F.lit(1.0) - F.lit(3.0) / (
-        F.lit(4.0) * (F.col("n1") + F.col("n2")) - 9
-    )
-    return d_.select(
-        F.col("n1").cast("bigint").alias("n1"),
-        F.col("n2").cast("bigint").alias("n2"),
-        F.when(F.col("sp") > 0, F.round(d_stat, 6)).alias("cohens_d"),
-        F.when(F.col("sp") > 0, F.round(d_stat * corr, 6)).alias("hedges_g"),
-    )
 
 
-@query(
+stats_friedman_nation_segment = sql_query(
     "stats_friedman_nation_segment",
-    oracle="""
+    """
     WITH cells AS (
       SELECT c_nationkey AS blk, c_mktsegment AS seg,
         CAST(SUM(CAST(ROUND(c_acctbal, 6) AS DECIMAL(18,6))) AS DOUBLE)
@@ -1832,69 +1730,6 @@ def stats_cohens_d_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM consts
     """,
 )
-def stats_friedman_nation_segment(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Friedman rank test: do market segments rank consistently across
-    nation blocks on mean account balance? Q = 12/(n k(k+1)) * sum R_j^2
-    - 3n(k+1) over within-block ranks — the repeated-measures sibling of
-    Kruskal-Wallis (blocks remove the between-nation variation).
-
-    Only COMPLETE blocks participate (nations holding all k segments —
-    at tiny SFs sparse nation x segment cells would otherwise corrupt
-    the rank sums; the complete-block rule is the test's own
-    requirement). Ranks are ROW_NUMBER over (mean, segment) — the
-    battery's integer-rank rule; cell means are exact decimal sums over
-    counts, so the rank key is the identical double in both engines;
-    sum R_j^2 stays BIGINT.
-
-    At 100 TB: one dimension pass into nations x segments cells, a
-    blk-partitioned rank window over those ~125 rows, then a k-row
-    rollup.
-    """
-    c = load_table(spark, sf_dir, "customer")
-    cells = c.groupBy(
-        F.col("c_nationkey").alias("blk"), F.col("c_mktsegment").alias("seg")
-    ).agg(
-        (
-            F.sum(F.round(F.col("c_acctbal"), 6).cast("decimal(18,6)")).cast(
-                "double"
-            )
-            / F.count(F.lit(1))
-        ).alias("mean_bal")
-    )
-    k_ = cells.agg(F.countDistinct("seg").alias("k"))
-    complete = (
-        cells.crossJoin(F.broadcast(k_))
-        .groupBy("blk", "k")
-        .agg(F.count(F.lit(1)).alias("nseg"))
-        .where(F.col("nseg") == F.col("k"))
-        .select("blk")
-    )
-    w = Window.partitionBy("blk").orderBy("mean_bal", "seg")
-    ranked = cells.join(F.broadcast(complete), "blk").select(
-        "seg", F.row_number().over(w).alias("rk")
-    )
-    rsums = ranked.groupBy("seg").agg(F.sum("rk").cast("bigint").alias("rj"))
-    nb = complete.agg(F.count(F.lit(1)).alias("nb"))
-    consts = (
-        rsums.agg(F.sum(F.col("rj") * F.col("rj")).cast("bigint").alias("sum_rj2"))
-        .crossJoin(F.broadcast(nb))
-        .crossJoin(F.broadcast(k_))
-    )
-    nbd = F.col("nb").cast("double")
-    kd = F.col("k").cast("double")
-    q = (
-        F.lit(12.0) * F.col("sum_rj2").cast("double") / (nbd * kd * (kd + 1))
-        - F.lit(3.0) * nbd * (kd + 1)
-    )
-    return consts.select(
-        F.col("nb").cast("bigint").alias("n_blocks"),
-        F.col("k").cast("bigint").alias("k"),
-        F.when((F.col("nb") >= 1) & (F.col("k") >= 2), F.round(q, 6)).alias(
-            "q_stat"
-        ),
-    )
 
 
 @query(
@@ -2067,9 +1902,9 @@ def stats_sign_test_nation_balance(
     )
 
 
-@query(
+stats_nemenyi_posthoc_segments = sql_query(
     "stats_nemenyi_posthoc_segments",
-    oracle="""
+    """
     WITH cells AS (
       SELECT c_nationkey AS blk, c_mktsegment AS seg,
         CAST(SUM(CAST(ROUND(c_acctbal, 6) AS DECIMAL(18,6))) AS DOUBLE)
@@ -2104,72 +1939,6 @@ def stats_sign_test_nation_balance(
     CROSS JOIN consts
     """,
 )
-def stats_nemenyi_posthoc_segments(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Nemenyi post-hoc pairwise comparisons following the Friedman test
-    (stats_friedman_nation_segment): for every segment pair, the
-    rank-sum difference standardized by sqrt(n k (k+1) / 6) — the
-    statistic compared against the studentized-range critical value to
-    decide WHICH treatments differ once Friedman rejects.
-
-    Shares Friedman's block machinery verbatim (complete nation blocks,
-    ROW_NUMBER ranks over identical decimal-mean doubles) so both tests
-    are consistent by construction; rank sums stay BIGINT and the z
-    denominator is sqrt of a value computed from the same exact
-    integers in both engines (correctly-rounded sqrt of identical
-    doubles — lesson 3).
-
-    At 100 TB: the dimension rollup is nations x segments (~125 rows);
-    the pairwise join runs over k=5 rank-sum rows.
-    """
-    c = load_table(spark, sf_dir, "customer")
-    cells = c.groupBy(
-        F.col("c_nationkey").alias("blk"), F.col("c_mktsegment").alias("seg")
-    ).agg(
-        (
-            F.sum(F.round(F.col("c_acctbal"), 6).cast("decimal(18,6)")).cast(
-                "double"
-            )
-            / F.count(F.lit(1))
-        ).alias("mean_bal")
-    )
-    k_ = cells.agg(F.countDistinct("seg").alias("k"))
-    complete = (
-        cells.crossJoin(F.broadcast(k_))
-        .groupBy("blk", "k")
-        .agg(F.count(F.lit(1)).alias("nseg"))
-        .where(F.col("nseg") == F.col("k"))
-        .select("blk")
-    )
-    w = Window.partitionBy("blk").orderBy("mean_bal", "seg")
-    ranked = cells.join(F.broadcast(complete), "blk").select(
-        "seg", F.row_number().over(w).alias("rk")
-    )
-    rsums = ranked.groupBy("seg").agg(F.sum("rk").cast("bigint").alias("rj"))
-    nb = complete.agg(F.count(F.lit(1)).alias("nb"))
-    a = rsums.select(F.col("seg").alias("seg_a"), F.col("rj").alias("rank_sum_a"))
-    b = rsums.select(F.col("seg").alias("seg_b"), F.col("rj").alias("rank_sum_b"))
-    pairs = (
-        a.join(b, F.col("seg_a") < F.col("seg_b"))
-        .crossJoin(F.broadcast(nb))
-        .crossJoin(F.broadcast(k_))
-    )
-    z = F.abs(
-        (F.col("rank_sum_a") - F.col("rank_sum_b")).cast("double")
-    ) / F.sqrt(
-        F.col("nb").cast("double")
-        * F.col("k").cast("double")
-        * (F.col("k") + 1).cast("double")
-        / F.lit(6.0)
-    )
-    return pairs.select(
-        "seg_a",
-        "seg_b",
-        "rank_sum_a",
-        "rank_sum_b",
-        F.when(F.col("nb") > 0, F.round(z, 6)).alias("z_stat"),
-    )
 
 
 # (applicationId, sf_dir) -> persisted 25-cell (segment, priority) counts —
@@ -2460,9 +2229,9 @@ def stats_cramers_v_segment_priority(
     )
 
 
-@query(
+stats_cochran_q_segments = sql_query(
     "stats_cochran_q_segments",
-    oracle="""
+    """
     WITH cells AS (
       SELECT c_nationkey AS blk, c_mktsegment AS seg,
         CAST(SUM(CAST(ROUND(c_acctbal, 6) AS DECIMAL(18,6))) AS DOUBLE)
@@ -2506,85 +2275,11 @@ def stats_cramers_v_segment_priority(
     FROM consts
     """,
 )
-def stats_cochran_q_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cochran's Q test — the binary-outcome sibling of Friedman: across
-    complete nation blocks, does the PROPORTION of segments whose mean
-    balance beats the grand mean differ between segments?
-    Q = (k-1)(k sum C_j^2 - N^2) / (k sum R_i - sum R_i^2) over the 0/1
-    outcome matrix (R_i row sums, C_j column sums, N total successes).
-
-    Determinism: the binarization threshold (grand mean of cell means)
-    is an exact-decimal quotient, identical in both engines; everything
-    after is INTEGER arithmetic — numerator and denominator are exact
-    BIGINTs, divided once. The complete-block rule matches Friedman's.
-
-    At 100 TB: one dimension pass into the 125-cell rollup; every later
-    stage runs on <= 125 rows.
-    """
-    c = load_table(spark, sf_dir, "customer")
-    cells = c.groupBy(
-        F.col("c_nationkey").alias("blk"), F.col("c_mktsegment").alias("seg")
-    ).agg(
-        (
-            F.sum(F.round(F.col("c_acctbal"), 6).cast("decimal(18,6)")).cast(
-                "double"
-            )
-            / F.count(F.lit(1))
-        ).alias("mean_bal")
-    )
-    k_ = cells.agg(F.countDistinct("seg").alias("k"))
-    complete = (
-        cells.crossJoin(F.broadcast(k_))
-        .groupBy("blk", "k")
-        .agg(F.count(F.lit(1)).alias("nseg"))
-        .where(F.col("nseg") == F.col("k"))
-        .select("blk")
-    )
-    kept = cells.join(F.broadcast(complete), "blk")
-    grand = kept.agg(
-        (
-            F.sum(F.round(F.col("mean_bal"), 6).cast("decimal(18,6)")).cast(
-                "double"
-            )
-            / F.count(F.lit(1))
-        ).alias("gm")
-    )
-    bin_ = kept.crossJoin(F.broadcast(grand)).select(
-        "blk",
-        "seg",
-        F.when(F.col("mean_bal") > F.col("gm"), 1).otherwise(0).alias("x"),
-    )
-    rows_ = bin_.groupBy("blk").agg(F.sum("x").cast("bigint").alias("ri"))
-    cols_ = bin_.groupBy("seg").agg(F.sum("x").cast("bigint").alias("cj"))
-    col_consts = cols_.agg(
-        F.sum("cj").cast("bigint").alias("ntot"),
-        F.sum(F.col("cj") * F.col("cj")).cast("bigint").alias("sum_cj2"),
-    )
-    row_consts = rows_.agg(
-        F.sum("ri").cast("bigint").alias("sum_ri"),
-        F.sum(F.col("ri") * F.col("ri")).cast("bigint").alias("sum_ri2"),
-    )
-    consts = (
-        col_consts.crossJoin(F.broadcast(row_consts))
-        .crossJoin(F.broadcast(k_))
-    )
-    denom = F.col("k") * F.col("sum_ri") - F.col("sum_ri2")
-    q = (
-        ((F.col("k") - 1)
-         * (F.col("k") * F.col("sum_cj2") - F.col("ntot") * F.col("ntot")))
-        .cast("double")
-        / denom.cast("double")
-    )
-    return consts.select(
-        F.col("k").cast("bigint").alias("k"),
-        F.col("ntot").alias("n_successes"),
-        F.when(denom > 0, F.round(q, 6)).alias("q_stat"),
-    )
 
 
-@query(
+stats_page_trend_segments = sql_query(
     "stats_page_trend_segments",
-    oracle="""
+    """
     WITH cells AS (
       SELECT c_nationkey AS blk, c_mktsegment AS seg,
         CAST(SUM(CAST(ROUND(c_acctbal, 6) AS DECIMAL(18,6))) AS DOUBLE)
@@ -2627,85 +2322,11 @@ def stats_cochran_q_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM consts
     """,
 )
-def stats_page_trend_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Page's trend test (the ordered-alternative Friedman): is mean
-    customer account balance MONOTONE across market segments in their
-    lexicographic label order, judged over nation blocks? L = sum_j
-    ord_j * R_j with ord_j the a-priori treatment position and R_j the
-    within-block rank sum; z = (L - n k (k+1)^2 / 4) /
-    sqrt(n k^2 (k+1)(k^2-1) / 144). The hypothesized order is the FIXED
-    lexicographic segment order — deterministic and documented (a real
-    deployment would pass its domain ordering; the statistic's machinery
-    is identical).
-
-    Shares the Friedman entry's complete-block discipline
-    (stats_friedman_nation_segment): only nations holding all k segments
-    participate, ranks are ROW_NUMBER over (mean, seg) so L and every
-    rank sum stay exact BIGINTs; the z denominator's sqrt is the one
-    transcendental (exact per lesson 10).
-
-    At 100 TB: one dimension rollup into ~125 nation x segment cells,
-    a blk-partitioned rank window over those, then a k-row reduce.
-    """
-    c = load_table(spark, sf_dir, "customer")
-    cells = c.groupBy(
-        F.col("c_nationkey").alias("blk"), F.col("c_mktsegment").alias("seg")
-    ).agg(
-        (
-            F.sum(F.round(F.col("c_acctbal"), 6).cast("decimal(18,6)")).cast(
-                "double"
-            )
-            / F.count(F.lit(1))
-        ).alias("mean_bal")
-    )
-    k_ = cells.agg(F.countDistinct("seg").cast("bigint").alias("k"))
-    complete = (
-        cells.crossJoin(F.broadcast(k_))
-        .groupBy("blk", "k")
-        .agg(F.count(F.lit(1)).alias("nseg"))
-        .where(F.col("nseg") == F.col("k"))
-        .select("blk")
-    )
-    w = Window.partitionBy("blk").orderBy("mean_bal", "seg")
-    ranked = cells.join(F.broadcast(complete), "blk").select(
-        "seg", F.row_number().over(w).alias("rk")
-    )
-    rsums = ranked.groupBy("seg").agg(F.sum("rk").cast("bigint").alias("rj"))
-    ordered = rsums.select(
-        "rj", F.row_number().over(Window.orderBy("seg")).alias("ord")
-    )
-    nb = complete.agg(F.count(F.lit(1)).cast("bigint").alias("nb"))
-    consts = (
-        ordered.agg(
-            F.sum(F.col("ord") * F.col("rj")).cast("bigint").alias("page_l")
-        )
-        .crossJoin(F.broadcast(nb))
-        .crossJoin(F.broadcast(k_))
-    )
-    nbd = F.col("nb").cast("double")
-    kd = F.col("k").cast("double")
-    mu = nbd * kd * ((F.col("k") + 1) * (F.col("k") + 1)).cast("double") / 4.0
-    var = (
-        nbd
-        * (F.col("k") * F.col("k")).cast("double")
-        * (F.col("k") + 1).cast("double")
-        * (F.col("k") * F.col("k") - 1).cast("double")
-        / 144.0
-    )
-    z = (F.col("page_l").cast("double") - mu) / F.sqrt(var)
-    return consts.select(
-        F.col("nb").alias("n_blocks"),
-        F.col("k"),
-        F.col("page_l"),
-        F.when((F.col("nb") >= 1) & (F.col("k") >= 3), F.round(z, 6)).alias(
-            "z_stat"
-        ),
-    )
 
 
-@query(
+stats_ansari_bradley_segments = sql_query(
     "stats_ansari_bradley_segments",
-    oracle="""
+    """
     WITH pool AS (
       SELECT c_custkey AS id,
         CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS g1,
@@ -2753,78 +2374,6 @@ def stats_page_trend_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM scored
     """,
 )
-def stats_ansari_bradley_segments(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Ansari-Bradley two-sample SCALE test: do BUILDING and MACHINERY
-    customers' account balances differ in dispersion (not location)?
-    Scores rank the pooled sample from BOTH ends — score = min(r, N+1-r)
-    — so extreme values get LOW scores and a sample concentrated in the
-    middle accumulates a HIGH score sum. Completes the scale-inference
-    family beside Levene / Brown-Forsythe / Bartlett (moment-based);
-    this is the rank-based, distribution-free member.
-
-    Determinism: the battery's integer-rank rule (ROW_NUMBER over
-    (cents, custkey) — the deterministic tie-broken variant, NOT SciPy's
-    midranks), so the AB statistic is an exact BIGINT. The normal
-    moments differ by pool parity (even: E = n1(N+2)/4, Var =
-    n1 n2 (N+2)(N-2)/(48(N-1)); odd: E = n1(N+1)^2/(4N), Var =
-    n1 n2 (N+1)(3+N^2)/(48 N^2)) — both engines branch on the same
-    parity and multiply identical doubles in the same order (N^2 exceeds
-    BIGINT products at warehouse scale, so moments multiply as doubles).
-
-    At 100 TB: the two-segment filter prunes at scan; one global rank
-    window over the surviving rows — the documented scale path is the
-    two-phase distributed rank (per-partition counts then offset).
-    """
-    c = load_table(spark, sf_dir, "customer")
-    pool = c.where(
-        F.col("c_mktsegment").isin("BUILDING", "MACHINERY")
-    ).select(
-        F.col("c_custkey").alias("id"),
-        F.when(F.col("c_mktsegment") == "BUILDING", 1).otherwise(0).alias("g1"),
-        _cents("c_acctbal").alias("v"),
-    )
-    wr = Window.orderBy("v", "id")
-    wall = Window.partitionBy()
-    ranked = pool.select(
-        "g1",
-        F.row_number().over(wr).alias("r"),
-        F.count(F.lit(1)).over(wall).cast("bigint").alias("n"),
-    )
-    scored = ranked.select(
-        "g1", "n", F.least(F.col("r"), F.col("n") + 1 - F.col("r")).alias("score")
-    )
-    agg = scored.agg(
-        F.sum("g1").cast("bigint").alias("n1"),
-        (F.count(F.lit(1)) - F.sum("g1")).cast("bigint").alias("n2"),
-        F.sum(F.when(F.col("g1") == 1, F.col("score")).otherwise(0))
-        .cast("bigint")
-        .alias("ab_stat"),
-        F.any_value("n").alias("n"),
-    )
-    n1d = F.col("n1").cast("double")
-    n2d = F.col("n2").cast("double")
-    nd = F.col("n").cast("double")
-    even = F.col("n") % 2 == 0
-    mu = F.when(even, n1d * (nd + 2.0) / 4.0).otherwise(
-        n1d * ((F.col("n") + 1) * (F.col("n") + 1)).cast("double") / (4.0 * nd)
-    )
-    var = F.when(
-        even, n1d * n2d * (nd + 2.0) * (nd - 2.0) / (48.0 * (nd - 1.0))
-    ).otherwise(
-        n1d * n2d * (nd + 1.0) * (3.0 + nd * nd) / (48.0 * nd * nd)
-    )
-    z = (F.col("ab_stat").cast("double") - mu) / F.sqrt(var)
-    return agg.select(
-        "n1",
-        "n2",
-        "ab_stat",
-        F.when(
-            (F.col("n1") >= 1) & (F.col("n2") >= 1) & (F.col("n") >= 3),
-            F.round(z, 6),
-        ).alias("z_stat"),
-    )
 
 
 # (segment, day, revenue-cents) rollup shared by the runs-test's median
@@ -3305,9 +2854,9 @@ def stats_effect_sizes_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+stats_cochran_armitage_trend = sql_query(
     "stats_cochran_armitage_trend",
-    oracle="""
+    """
     WITH g AS (
       SELECT CAST(SUBSTR(o_orderpriority, 1, 1) AS BIGINT) AS s,
         CAST(COUNT(*) AS BIGINT) AS n_i,
@@ -3334,52 +2883,6 @@ def stats_effect_sizes_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM g
     """,
 )
-def stats_cochran_armitage_trend(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Cochran-Armitage trend test: does the fraction of FINALIZED orders
-    (o_orderstatus = 'F') trend monotonically across the ORDERED priority
-    levels (scores 1-URGENT .. 5-LOW, the leading digit)? The binary-
-    outcome-vs-ordered-groups member of the battery — chi-square GOF
-    ignores order, Jonckheere-Terpstra handles continuous responses;
-    this is the proportions-trend classic.
-
-    T = sum s_i r_i; under H0, E[T] = p * sum s_i n_i and
-    Var(T) = p(1-p)(sum s_i^2 n_i - (sum s_i n_i)^2 / N) with p = R/N.
-    Every sum is an exact BIGINT (scores 1..5, counts); E, Var, z divide
-    identical doubles once (magnitudes <= 2^53, exactly representable),
-    round-6. Degenerate guard: all-F or no-F data zeroes Var -> NULL z.
-
-    At 100 TB: one conditional aggregate over orders with map-side
-    combine into 5 rows — nothing else.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    g = o.groupBy(
-        F.substring("o_orderpriority", 1, 1).cast("bigint").alias("s")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_i"),
-        F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0))
-        .cast("bigint")
-        .alias("r_i"),
-    )
-    n = F.sum("n_i").cast("bigint")
-    rt = F.sum("r_i").cast("bigint")
-    t = F.sum(F.col("s") * F.col("r_i")).cast("bigint")
-    sn = F.sum(F.col("s") * F.col("n_i")).cast("bigint")
-    ssn = F.sum(F.col("s") * F.col("s") * F.col("n_i")).cast("bigint")
-    p = rt.cast("double") / n.cast("double")
-    var = (
-        p
-        * (1.0 - p)
-        * (ssn.cast("double") - sn.cast("double") * sn.cast("double") / n.cast("double"))
-    )
-    z = (t.cast("double") - rt.cast("double") * sn.cast("double") / n.cast("double")) / F.sqrt(var)
-    return g.agg(
-        n.alias("n"),
-        rt.alias("r_total"),
-        t.alias("t_stat"),
-        F.when((rt > 0) & (rt < n), F.round(z, 6)).alias("z_stat"),
-    )
 
 
 @query(
@@ -3502,9 +3005,9 @@ def stats_jonckheere_terpstra_priority(
     )
 
 
-@query(
+stats_quade_nation_segment = sql_query(
     "stats_quade_nation_segment",
-    oracle="""
+    """
     WITH cells AS (
       SELECT c_nationkey AS blk, c_mktsegment AS seg,
         CAST(SUM(CAST(ROUND(c_acctbal, 6) AS DECIMAL(18,6))) AS DOUBLE)
@@ -3550,88 +3053,6 @@ def stats_jonckheere_terpstra_priority(
     FROM parts
     """,
 )
-def stats_quade_nation_segment(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Quade test over the Friedman complete-block machinery: blocks
-    (nations) are WEIGHTED by the rank of their cell-value RANGE, so
-    blocks where segments differ a lot count more — the more powerful
-    small-k alternative to Friedman (which weights all blocks equally).
-
-    With 2x-scaled centered ranks S_ij = Q_i * (2 r_ij - (k+1)) every
-    intermediate stays an exact BIGINT (the /2 cancels in the F ratio):
-    F = (b-1) * B' / (b A' - B') with A' = sum S_ij^2 and
-    B' = sum_j (sum_i S_ij)^2. Cell means are the Friedman entry's
-    exact-decimal doubles; within-block ranks tie-break by segment,
-    range ranks by nation key (deterministic variant, documented).
-    Degenerate guard: constant cells make b A' = B' -> NULL (the
-    all-tied case where Quade is undefined).
-
-    At 100 TB: identical shape to Friedman — one dimension pass into
-    ~125 cells, two small windows, integer rollups.
-    """
-    c = load_table(spark, sf_dir, "customer")
-    cells = c.groupBy(
-        F.col("c_nationkey").alias("blk"), F.col("c_mktsegment").alias("seg")
-    ).agg(
-        (
-            F.sum(F.round(F.col("c_acctbal"), 6).cast("decimal(18,6)")).cast(
-                "double"
-            )
-            / F.count(F.lit(1))
-        ).alias("mean_bal")
-    )
-    k_ = cells.agg(F.countDistinct("seg").alias("k"))
-    complete = (
-        cells.crossJoin(F.broadcast(k_))
-        .groupBy("blk", "k")
-        .agg(F.count(F.lit(1)).alias("nseg"))
-        .where(F.col("nseg") == F.col("k"))
-        .select("blk")
-    )
-    wb = Window.partitionBy("blk").orderBy("mean_bal", "seg")
-    ranked = cells.join(F.broadcast(complete), "blk").select(
-        "blk", "seg", "mean_bal", F.row_number().over(wb).alias("rk")
-    )
-    ranges = ranked.groupBy("blk").agg(
-        (F.max("mean_bal") - F.min("mean_bal")).alias("rng")
-    )
-    qs = ranges.select(
-        "blk", F.row_number().over(Window.orderBy("rng", "blk")).alias("q")
-    )
-    s2 = (
-        ranked.join(F.broadcast(qs), "blk")
-        .crossJoin(F.broadcast(k_))
-        .select(
-            "seg",
-            (F.col("q") * (2 * F.col("rk") - (F.col("k") + 1)))
-            .cast("bigint")
-            .alias("s"),
-        )
-    )
-    a2 = s2.agg(F.sum(F.col("s") * F.col("s")).cast("bigint").alias("a2"))
-    b2 = (
-        s2.groupBy("seg")
-        .agg(F.sum("s").cast("bigint").alias("tj"))
-        .agg(F.sum(F.col("tj") * F.col("tj")).cast("bigint").alias("b2"))
-    )
-    nb = complete.agg(F.count(F.lit(1)).cast("bigint").alias("b"))
-    parts = (
-        a2.crossJoin(F.broadcast(b2))
-        .crossJoin(F.broadcast(nb))
-        .crossJoin(F.broadcast(k_))
-    )
-    denom = F.col("b") * F.col("a2") - F.col("b2")
-    f_ = (
-        (F.col("b") - 1).cast("double")
-        * F.col("b2").cast("double")
-        / denom.cast("double")
-    )
-    return parts.select(
-        F.col("b").cast("bigint").alias("n_blocks"),
-        F.col("k").cast("bigint").alias("k"),
-        F.when(denom > 0, F.round(f_, 6)).alias("f_stat"),
-    )
 
 
 # BUILDING/MACHINERY day-grain revenue shared by both HL pair-grid sides
@@ -4421,9 +3842,9 @@ def stats_conover_squared_ranks(
     )
 
 
-@query(
+stats_cuzick_trend_priority = sql_query(
     "stats_cuzick_trend_priority",
-    oracle=f"""
+    f"""
     WITH vals AS (
       SELECT CAST(SUBSTR(o_orderpriority, 1, 1) AS BIGINT) AS s,
         {_CENTS_SQL.format(c='o_totalprice')} AS v,
@@ -4454,55 +3875,6 @@ def stats_conover_squared_ranks(
     FROM sums
     """,
 )
-def stats_cuzick_trend_priority(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Cuzick's Wilcoxon-type trend test across the ordered priority
-    groups on totalprice: T = sum s_i R_i over GLOBAL ranks R with group
-    scores s = 1..5; E[T] = (N+1)/2 * sum s_i,
-    Var = (N+1)/12 * (N sum s_i^2 - (sum s_i)^2). The rank-sum trend
-    sibling of Jonckheere-Terpstra (pairwise counts) and
-    Cochran-Armitage (proportions) — one global rank instead of JT's
-    running group counts, so it is the cheaper screen when only a z is
-    needed.
-
-    Determinism: strict ranks over (cents, orderkey); T and the score
-    sums are exact BIGINTs (T <= 5 * N(N+1)/2 ~ 6e10 at sf0.1 — BIGINT
-    safe to ~1.3e9 rows, DECIMAL beyond); one division, round-6.
-
-    At 100 TB: one global sort (two-phase at extreme scale), one
-    aggregate.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    vals = o.select(
-        F.substring("o_orderpriority", 1, 1).cast("bigint").alias("s"),
-        _cents("o_totalprice").alias("v"),
-        F.col("o_orderkey").alias("id"),
-    )
-    ranked = vals.select(
-        "s",
-        F.row_number().over(Window.orderBy("v", "id")).cast("bigint").alias(
-            "r"
-        ),
-    )
-    sums = ranked.agg(
-        F.sum(F.col("s") * F.col("r")).cast("bigint").alias("t"),
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("s").cast("bigint").alias("ss"),
-        F.sum(F.col("s") * F.col("s")).cast("bigint").alias("ss2"),
-    )
-    n = F.col("n")
-    e_t = F.col("ss").cast("double") * (n + 1).cast("double") / 2.0
-    var = (n + 1).cast("double") / 12.0 * (
-        n.cast("double") * F.col("ss2").cast("double")
-        - F.col("ss").cast("double") * F.col("ss").cast("double")
-    )
-    z = (F.col("t").cast("double") - e_t) / F.sqrt(var)
-    return sums.select(
-        "n",
-        "t",
-        F.when(n >= 2, F.round(z, 6)).alias("z_stat"),
-    )
 
 
 @query(

@@ -948,17 +948,17 @@ def dedup_shared_chunk_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks = F.filter(
             F.split(F.trim(F.lower("text")), r"\s+"), lambda t: t != ""
         )
-        n_full = (F.size(toks) / 8).cast("long")
-        chunk_arr = F.transform(
-            F.sequence(F.lit(0), n_full - 1),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i * 8 + 1, 8))),
+        # posexplode reads the projected `toks` column, so each chunk slices
+        # the token array instead of re-splitting the text
+        chunk_arr = F.expr(
+            "CASE WHEN size(toks) >= 8 THEN transform("
+            "sequence(0, size(toks) div 8 - 1),"
+            " i -> md5(concat_ws(' ', slice(toks, i * 8 + 1, 8))))"
+            " ELSE array() END"
         )
         chunks = (
-            d.select(
-                "doc_id",
-                F.when(n_full > 0, chunk_arr).otherwise(F.array()).alias("ch"),
-            )
-            .select("doc_id", F.posexplode("ch").alias("chunk_idx", "chunk_hash"))
+            d.select("doc_id", toks.alias("toks"))
+            .select("doc_id", F.posexplode(chunk_arr).alias("chunk_idx", "chunk_hash"))
             .persist()
         )
         _CHUNKS_CACHE.put(spark, sf_dir, chunks)
@@ -1931,19 +1931,14 @@ def text_ngram_novelty_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split(F.lower(F.regexp_replace(F.trim("text"), r"\s+", " ")), " "),
         lambda t: t != "",
     )
-    grams_arr = F.transform(
-        F.sequence(F.lit(1), F.size(ws) - 2),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(ws, i),
-            F.element_at(ws, i + 1),
-            F.element_at(ws, i + 2),
-        ),
+    grams_arr = F.expr(
+        "array_distinct(transform(sequence(1, size(ws) - 2),"
+        " i -> concat_ws(' ', ws[i - 1], ws[i], ws[i + 1])))"
     )
     grams = (
-        d.withColumn("ws", ws)
+        d.select("source", ws.alias("ws"))
         .where(F.size("ws") >= 3)
-        .select("source", F.explode(F.array_distinct(grams_arr)).alias("gram"))
+        .select("source", F.explode(grams_arr).alias("gram"))
         .distinct()
     )
     spread = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("n_sources"))

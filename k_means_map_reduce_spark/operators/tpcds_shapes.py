@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .._memo import SessionMemo, memo_persist
-from ..registry import query
+from ..registry import query, sql_query
 from ..sources import load_table
 from ._util import davg, dsum, sql_davg, sql_dsum
 
@@ -259,9 +259,9 @@ def ds_yoy_customer_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+ds_time_band_counts = sql_query(
     "ds_time_band_counts",
-    oracle="""
+    """
     SELECT
       COUNT(*) FILTER (WHERE EXTRACT(hour FROM ts) BETWEEN 0 AND 5)  AS night,
       COUNT(*) FILTER (WHERE EXTRACT(hour FROM ts) BETWEEN 6 AND 11) AS morning,
@@ -275,28 +275,6 @@ def ds_yoy_customer_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     """,
 )
-def ds_time_band_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q88's signature: many independent band-filtered counts
-    answered by ONE scan of the fact — the anti-pattern it replaces is N
-    self-joined subqueries (one per band), which q88 is literally written
-    as. Conditional aggregation turns 6 scans into 1; Catalyst computes
-    all six partials map-side in a single pass.
-    """
-    e = load_table(spark, sf_dir, "events")
-    h = F.hour("ts")
-    band = lambda lo, hi: (h >= lo) & (h <= hi)  # noqa: E731
-    return e.agg(
-        F.count(F.when(band(0, 5), 1)).alias("night"),
-        F.count(F.when(band(6, 11), 1)).alias("morning"),
-        F.count(F.when(band(12, 17), 1)).alias("afternoon"),
-        F.count(F.when(band(18, 23), 1)).alias("evening"),
-        F.count(
-            F.when(band(18, 23) & (F.col("event_type") == "purchase"), 1)
-        ).alias("evening_purchases"),
-        F.countDistinct(
-            F.when(band(18, 23), F.col("user_id"))
-        ).alias("evening_users"),
-    )
 
 
 @query(
@@ -872,9 +850,9 @@ def _sql_cov(n: str, s: str, ss: str) -> str:
     )
 
 
-@query(
+ds_q17_quantity_cov = sql_query(
     "ds_q17_quantity_cov",
-    oracle=f"""
+    f"""
     WITH g AS (
       SELECT p_brand,
       {_Q17_STATS}
@@ -894,64 +872,6 @@ def _sql_cov(n: str, s: str, ss: str) -> str:
     FROM g
     """,
 )
-def ds_q17_quantity_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-brand quantity mean / stdev / coefficient-of-variation for sold
-    vs returned lineitems (TPC-DS q17's signature: compare quantity
-    dispersion across the sales and returns channels per item group).
-
-    Determinism: quantities are integral, so power sums are exact BIGINT;
-    mean/var/stdev/cov are then IEEE ops on identical doubles in both
-    engines (sqrt is correctly rounded), with n>=1 / n>=2 CASE guards so
-    ANSI division never fires on a degenerate group and GREATEST(var, 0)
-    absorbing negative cancellation dust.
-
-    At 100 TB: ONE fact scan with conditional aggregation (map-side
-    partials into a 25-row brand rollup) — never one pass per channel.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part")
-    q = F.col("l_quantity").cast("bigint")
-    sold = F.col("l_returnflag") != "R"
-    g = (
-        l.join(p, F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy("p_brand")
-        .agg(
-            F.count(F.when(sold, 1)).alias("n_sold"),
-            F.sum(F.when(sold, q)).alias("s_sold"),
-            F.sum(F.when(sold, q * q)).alias("ss_sold"),
-            F.count(F.when(~sold, 1)).alias("n_returned"),
-            F.sum(F.when(~sold, q)).alias("s_ret"),
-            F.sum(F.when(~sold, q * q)).alias("ss_ret"),
-        )
-    )
-
-    def mean_of(n: str, s: str):
-        return F.when(
-            F.col(n) >= 1,
-            F.round(F.col(s).cast("double") / F.col(n).cast("double"), 6),
-        )
-
-    def cov_of(n: str, s: str, ss: str):
-        nd = F.col(n).cast("double")
-        sd = F.col(s).cast("double")
-        ssd = F.col(ss).cast("double")
-        var = (ssd - sd * sd / nd) / (F.col(n) - 1)
-        return F.when(
-            F.col(n) >= 2,
-            F.round(
-                F.sqrt(F.greatest(var, F.lit(0.0))) / (sd / nd), 6
-            ),
-        )
-
-    return g.select(
-        "p_brand",
-        "n_sold",
-        mean_of("n_sold", "s_sold").alias("mean_qty_sold"),
-        cov_of("n_sold", "s_sold", "ss_sold").alias("cov_sold"),
-        "n_returned",
-        mean_of("n_returned", "s_ret").alias("mean_qty_returned"),
-        cov_of("n_returned", "s_ret", "ss_ret").alias("cov_returned"),
-    )
 
 
 @query(
@@ -1485,9 +1405,9 @@ def ds_q31_channel_growth_compare(spark: SparkSession, sf_dir: str) -> DataFrame
     ).select("n_name", "qidx", g_hi.alias("growth_hi"), g_lo.alias("growth_lo"))
 
 
-@query(
+ds_q92_excess_discount = sql_query(
     "ds_q92_excess_discount",
-    oracle="""
+    """
     WITH pavg AS (
       SELECT l_partkey AS pk,
         CAST(SUM(CAST(ROUND(l_discount, 6) AS DECIMAL(18,6))) AS DOUBLE)
@@ -1505,33 +1425,6 @@ def ds_q31_channel_growth_compare(spark: SparkSession, sf_dir: str) -> DataFrame
     GROUP BY 1
     """,
 )
-def ds_q92_excess_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Excess-discount revenue per brand (TPC-DS q92's signature: lineitems
-    whose discount exceeds 1.3x their part's average discount — the
-    correlated aggregate subquery restated as a per-part rollup joined
-    back onto the fact).
-
-    The threshold compares the fact's exact 2dp discount against
-    1.3 * (decimal-sum / count) — identical doubles in both engines, and
-    the discrete discount grid never lands on the product, so no
-    boundary ties. At 100 TB: the per-part average is a map-side-combined
-    rollup; the fact joins it on the part key it is already bucketed by.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part")
-    pavg = l.groupBy(F.col("l_partkey").alias("pk")).agg(
-        (dsum("l_discount") / F.count(F.lit(1))).alias("avg_disc")
-    )
-    return (
-        l.join(pavg, F.col("pk") == F.col("l_partkey"))
-        .where(F.col("l_discount") > 1.3 * F.col("avg_disc"))
-        .join(p, F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).alias("n_excess"),
-            dsum("l_extendedprice").alias("excess_revenue"),
-        )
-    )
 
 
 @query(
@@ -1575,9 +1468,9 @@ def ds_q90_am_pm_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+ds_q36_margin_hierarchy = sql_query(
     "ds_q36_margin_hierarchy",
-    oracle="""
+    """
     WITH fact AS (
       SELECT n_name, c_mktsegment AS segment,
         CAST(ROUND(l_extendedprice * (1 - l_discount), 6) AS DECIMAL(18,6))
@@ -1609,71 +1502,6 @@ def ds_q90_am_pm_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM rolled
     """,
 )
-def ds_q36_margin_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gross-margin hierarchy drilldown (TPC-DS q36's signature: a ROLLUP
-    over a two-level dimension hierarchy, lochierarchy =
-    grouping(level1)+grouping(level2), and a rank of the margin ratio
-    WITHIN each parent grain via the PARTITION BY (lochierarchy,
-    CASE WHEN lochierarchy = 0 THEN parent END) idiom). Hierarchy here is
-    nation -> market segment; margin is discounted-over-list revenue.
-
-    Ratios divide two decimal-exact sums as identical doubles, rounded
-    6dp BEFORE ranking; the rank adds (nation, segment) tie-breaks so the
-    order is total. Rolled-up names emit as 'ALL' (never NULL) for
-    cross-engine dtype parity.
-
-    At 100 TB: ONE fact pass into the rollup lattice (Spark's Expand
-    keeps partial aggregation map-side); the ranking windows run over the
-    ~(nations x segments) lattice, not the fact.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    fact = (
-        l.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n), F.col("n_nationkey") == F.col("c_nationkey"))
-        .select(
-            "n_name",
-            F.col("c_mktsegment").alias("segment"),
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("net"),
-            F.col("l_extendedprice").alias("gross"),
-        )
-    )
-    rolled = fact.rollup("n_name", "segment").agg(
-        (F.grouping("n_name") + F.grouping("segment")).alias("lochierarchy"),
-        F.round(dsum("net") / dsum("gross"), 6).alias("margin_ratio"),
-    )
-    shaped = rolled.select(
-        F.coalesce("n_name", F.lit("ALL")).alias("nation"),
-        F.coalesce("segment", F.lit("ALL")).alias("segment"),
-        F.col("lochierarchy").cast("int").alias("lochierarchy"),
-        # grouping() is only legal inside the rollup aggregate; the parent
-        # grain is equivalently "segment rolled up, nation kept", and the
-        # base columns are never NULL in the data, so NULL-ness of the
-        # rollup output identifies the grain exactly.
-        F.when(
-            F.col("segment").isNull() & F.col("n_name").isNotNull(),
-            F.col("n_name"),
-        )
-        .otherwise(F.lit(""))
-        .alias("parent"),
-        "margin_ratio",
-    )
-    w = Window.partitionBy(
-        "lochierarchy",
-        F.when(F.col("lochierarchy") == 0, F.col("nation")).otherwise(
-            F.col("parent")
-        ),
-    ).orderBy("margin_ratio", "nation", "segment")
-    return shaped.select(
-        "nation",
-        "segment",
-        "lochierarchy",
-        "margin_ratio",
-        F.row_number().over(w).cast("bigint").alias("rank_within_parent"),
-    )
 
 
 @query(
@@ -1730,9 +1558,9 @@ def ds_q38_triple_channel_customers(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@query(
+ds_q28_quantity_band_stats = sql_query(
     "ds_q28_quantity_band_stats",
-    oracle=f"""
+    f"""
     SELECT
       CASE WHEN l_quantity <= 8 THEN 'b1_q1_8'
            WHEN l_quantity <= 16 THEN 'b2_q9_16'
@@ -1748,36 +1576,11 @@ def ds_q38_triple_channel_customers(spark: SparkSession, sf_dir: str) -> DataFra
     GROUP BY 1
     """,
 )
-def ds_q28_quantity_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-band price statistics (TPC-DS q28's signature: six bucket-scoped
-    (avg list_price, count, count distinct list_price) triples that naive
-    SQL writes as six separate subqueries CROSS JOINed — restated as ONE
-    banded aggregation pass). Bands are quantity ranges.
-
-    avg = decimal-exact sum / exact count; distinct prices count integer
-    cents (never raw doubles). At 100 TB: one fact scan; the distinct
-    lands as a two-phase aggregate per band — 6 groups, no skew hazard.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    band = (
-        F.when(F.col("l_quantity") <= 8, "b1_q1_8")
-        .when(F.col("l_quantity") <= 16, "b2_q9_16")
-        .when(F.col("l_quantity") <= 24, "b3_q17_24")
-        .when(F.col("l_quantity") <= 32, "b4_q25_32")
-        .when(F.col("l_quantity") <= 40, "b5_q33_40")
-        .otherwise("b6_q41_up")
-    )
-    cents = F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")
-    return l.groupBy(band.alias("band")).agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        (dsum("l_extendedprice") / F.count(F.lit(1))).alias("avg_price"),
-        F.countDistinct(cents).alias("n_distinct_prices"),
-    )
 
 
-@query(
+ds_q97_channel_overlap = sql_query(
     "ds_q97_channel_overlap",
-    oracle="""
+    """
     WITH flags AS (
       SELECT o_custkey AS ck, l_partkey AS pk,
         MAX(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -1794,41 +1597,6 @@ def ds_q28_quantity_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM flags
     """,
 )
-def ds_q97_channel_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Channel-overlap census of (customer, part) purchase pairs (TPC-DS
-    q97's signature: store-only / catalog-only / both counts via a FULL
-    OUTER JOIN of two per-channel rollups — restated as ONE rollup with
-    per-channel presence flags, which never materializes the outer join
-    and scans the fact once). Channels ~ urgent-vs-normal priority.
-
-    Pure integer flags and counts. At 100 TB: one fact pass into the
-    (customer, part) rollup with map-side combine; the census is a 1-row
-    conditional aggregate over it.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    flags = (
-        l.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy(
-            F.col("o_custkey").alias("ck"), F.col("l_partkey").alias("pk")
-        )
-        .agg(
-            F.max(F.when(hi, 1).otherwise(0)).alias("in_hi"),
-            F.max(F.when(~hi, 1).otherwise(0)).alias("in_lo"),
-        )
-    )
-    return flags.agg(
-        F.count(F.when((F.col("in_hi") == 1) & (F.col("in_lo") == 0), 1)).alias(
-            "hi_only"
-        ),
-        F.count(F.when((F.col("in_hi") == 0) & (F.col("in_lo") == 1), 1)).alias(
-            "lo_only"
-        ),
-        F.count(F.when((F.col("in_hi") == 1) & (F.col("in_lo") == 1), 1)).alias(
-            "both_channels"
-        ),
-    )
 
 
 @query(
@@ -2164,9 +1932,9 @@ def ds_q59_weekly_yoy_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+ds_q98_type_revenue_share = sql_query(
     "ds_q98_type_revenue_share",
-    oracle="""
+    """
     WITH rolled AS (
       SELECT p_brand AS brand, p_type AS type,
         CAST(SUM(CAST(ROUND((l_extendedprice * (1 - l_discount)), 6)
@@ -2182,43 +1950,11 @@ def ds_q59_weekly_yoy_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM rolled
     """,
 )
-def ds_q98_type_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue per (brand, type) with each type's share of its brand's
-    total — TPC-DS q98's signature (class revenue ratio-to-category).
-
-    Determinism: the share divides the decimal-exact type revenue by a
-    DECIMAL window sum of the same exact decimals (order-insensitive),
-    rounded 6dp.
-
-    At 100 TB: one fact pass (AQE broadcasts part while it fits) into
-    the brand x type rollup; the share window partitions by brand over that rollup —
-    the ratio-to-report shape with zero extra scans.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part")
-    net = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
-    rolled = (
-        l.join(p, F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy(F.col("p_brand").alias("brand"), F.col("p_type").alias("type"))
-        .agg(
-            dsum(net).alias("revenue"),
-            F.sum(F.round(net, 6).cast("decimal(18,6)")).alias("revenue_dec"),
-        )
-    )
-    w = Window.partitionBy("brand")
-    return rolled.select(
-        "brand",
-        "type",
-        "revenue",
-        F.round(
-            F.col("revenue") / F.sum("revenue_dec").over(w).cast("double"), 6
-        ).alias("brand_share"),
-    )
 
 
-@query(
+ds_q27_segment_priority_avg_rollup = sql_query(
     "ds_q27_segment_priority_avg_rollup",
-    oracle="""
+    """
     SELECT
       COALESCE(c_mktsegment, 'ALL') AS segment,
       CASE WHEN c_mktsegment IS NULL THEN 'ALL'
@@ -2236,44 +1972,6 @@ def ds_q98_type_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ROLLUP (c_mktsegment, o_orderpriority)
     """,
 )
-def ds_q27_segment_priority_avg_rollup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Average quantity / price / discount by (segment, priority) with
-    ROLLUP subtotals — TPC-DS q27's signature (the demographic average
-    battery over a grouping hierarchy). NULL rollup labels render as
-    'ALL' (the inner COALESCE is nested in a CASE so a subtotal row
-    can't be confused with a genuine NULL group).
-
-    Determinism: every average is an exact decimal sum divided by the
-    exact count (identical operands both engines).
-
-    At 100 TB: one fact pass; ROLLUP expands 3 grouping sets in the same
-    aggregate (partial aggregation applies per set) — no re-scan per
-    level.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    joined = l.join(o, F.col("o_orderkey") == F.col("l_orderkey")).join(
-        c, F.col("c_custkey") == F.col("o_custkey")
-    )
-    rolled = joined.rollup("c_mktsegment", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        davg("l_quantity").alias("avg_qty"),
-        davg("l_extendedprice").alias("avg_price"),
-        davg("l_discount").alias("avg_discount"),
-    )
-    return rolled.select(
-        F.coalesce("c_mktsegment", F.lit("ALL")).alias("segment"),
-        F.when(F.col("c_mktsegment").isNull(), "ALL")
-        .otherwise(F.coalesce("o_orderpriority", F.lit("ALL")))
-        .alias("priority"),
-        "n_lines",
-        "avg_qty",
-        "avg_price",
-        "avg_discount",
-    )
 
 
 @query(

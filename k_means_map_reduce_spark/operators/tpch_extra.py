@@ -25,16 +25,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..registry import query, sql_query
 from ..sources import load_table
-from ._util import davg, dsum, sql_davg, sql_dsum
+from ._util import dsum, sql_davg, sql_dsum
 
 _N1, _N2 = "NATION_1", "NATION_2"
 
 
-@query(
+q7_volume_shipping = sql_query(
     "q7_volume_shipping",
-    oracle=f"""
+    f"""
     SELECT
       supp_nation,
       cust_nation,
@@ -59,48 +59,11 @@ _N1, _N2 = "NATION_1", "NATION_2"
     GROUP BY supp_nation, cust_nation, l_year
     """,
 )
-def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape. supplier/customer/nation broadcast; the only big
-    shuffle is lineitem⋈orders on orderkey. The symmetric nation disjunction
-    is applied AFTER the nation joins (it references both sides)."""
-    l = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate").between(
-            F.lit("1995-01-01").cast("timestamp_ntz"),
-            F.lit("1996-12-31").cast("timestamp_ntz"),
-        )
-    )
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    n1 = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
-    n2 = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation"))
-    both = (
-        l.join(s, F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
-        .where(
-            ((F.col("supp_nation") == _N1) & (F.col("cust_nation") == _N2))
-            | ((F.col("supp_nation") == _N2) & (F.col("cust_nation") == _N1))
-        )
-    )
-    return (
-        both.select(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").cast("int").alias("l_year"),
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("volume"),
-        )
-        .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(dsum("volume").alias("revenue"))
-    )
 
 
-@query(
+q8_market_share = sql_query(
     "q8_market_share",
-    oracle=f"""
+    f"""
     SELECT
       o_year,
       ROUND({sql_dsum(f"CASE WHEN nation = '{_N1}' THEN volume ELSE 0 END")}
@@ -125,48 +88,11 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_year
     """,
 )
-def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape: NATION_1's share of PROMO-part revenue sold into ASIA.
-
-    Numerator and denominator come out of ONE aggregation pass (conditional
-    decimal sum), not a self-join — at scale that halves the fact reads."""
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate").between(
-            F.lit("1995-01-01").cast("timestamp_ntz"),
-            F.lit("1996-12-31").cast("timestamp_ntz"),
-        )
-    )
-    p = load_table(spark, sf_dir, "part").where(F.col("p_type") == "PROMO")
-    s = load_table(spark, sf_dir, "supplier")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    n1 = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("nation"))
-    n2 = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_regionkey").alias("c_rk"))
-    all_nations = (
-        l.join(p, F.col("p_partkey") == F.col("l_partkey"))
-        .join(s, F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
-        .join(F.broadcast(r), F.col("r_regionkey") == F.col("c_rk"))
-        .select(
-            F.year("o_orderdate").cast("int").alias("o_year"),
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("volume"),
-            "nation",
-        )
-    )
-    nation_vol = F.when(F.col("nation") == _N1, F.col("volume")).otherwise(F.lit(0.0))
-    return all_nations.groupBy("o_year").agg(
-        F.round(dsum(nation_vol) / dsum("volume"), 6).alias("mkt_share")
-    )
 
 
-@query(
+q14_promo_revenue = sql_query(
     "q14_promo_revenue",
-    oracle=f"""
+    f"""
     SELECT
       ROUND(100.00 * {sql_dsum("CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0 END")}
             / {sql_dsum('l_extendedprice * (1 - l_discount)')}, 6) AS promo_revenue
@@ -176,19 +102,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_shipdate < TIMESTAMP '1995-10-01'
     """,
 )
-def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14: promo share of one month's revenue. part broadcasts; the
-    month filter is pushed to the lineitem scan (PushedFilters on
-    l_shipdate), so only ~1/80th of the fact is read."""
-    l = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1995-09-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1995-10-01").cast("timestamp_ntz"))
-    )
-    p = load_table(spark, sf_dir, "part")
-    j = l.join(p, F.col("l_partkey") == F.col("p_partkey"))
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type") == "PROMO", disc).otherwise(F.lit(0.0))
-    return j.agg(F.round(100.0 * dsum(promo) / dsum(disc), 6).alias("promo_revenue"))
 
 
 @query(
@@ -245,9 +158,9 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+q19_discounted_revenue = sql_query(
     "q19_discounted_revenue",
-    oracle=f"""
+    f"""
     SELECT
       {sql_dsum('l_extendedprice * (1 - l_discount)')} AS revenue
     FROM lineitem
@@ -258,39 +171,11 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
       OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 5 AND l_quantity >= 20 AND l_quantity <= 30)
     """,
 )
-def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19: disjunction of conjunctive groups spanning both join
-    sides. Catalyst extracts the common single-side residues (p_brand IN
-    (...) to the part scan, l_quantity BETWEEN 1 AND 30 to the lineitem
-    scan) so the broadcast join sees pre-filtered inputs; the exact
-    disjunction applies post-join."""
-    l = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part")
-    j = l.join(p, F.col("p_partkey") == F.col("l_partkey"))
-    grp = (
-        (
-            (F.col("p_brand") == "Brand#1")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(1, 11)
-        )
-        | (
-            (F.col("p_brand") == "Brand#2")
-            & F.col("p_size").between(1, 10)
-            & F.col("l_quantity").between(10, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#3")
-            & F.col("p_size").between(1, 5)
-            & F.col("l_quantity").between(20, 30)
-        )
-    )
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return j.where(grp).agg(dsum(disc).alias("revenue"))
 
 
-@query(
+q22_dormant_rich_customers = sql_query(
     "q22_dormant_rich_customers",
-    oracle=f"""
+    f"""
     SELECT
       c_mktsegment,
       COUNT(*) AS numcust,
@@ -306,24 +191,3 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c_mktsegment
     """,
 )
-def q22_dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape (no c_phone column → segment replaces cntrycode;
-    every customer has SOME order here, so dormancy = no order since
-    2000-01-01). Scalar threshold via deterministic decimal-avg — both
-    engines derive the identical double, so the > filter can't flip rows on
-    a 1-ulp difference. The threshold joins back as a broadcast 1-row
-    aggregate (same form as q11's fraction threshold) — one lazy plan, no
-    driver-side collect, no extra job. Anti-join prunes the orders side by
-    pushing the date filter to the scan."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp_ntz")
-    )
-    thresh = c.where(F.col("c_acctbal") > 0).agg(davg("c_acctbal").alias("_thresh"))
-    return (
-        c.crossJoin(F.broadcast(thresh))
-        .where(F.col("c_acctbal") > F.col("_thresh"))
-        .join(o, F.col("o_custkey") == F.col("c_custkey"), "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("numcust"), dsum("c_acctbal").alias("totacctbal"))
-    )

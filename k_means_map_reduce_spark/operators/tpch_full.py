@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..registry import query, sql_query
 from ..sources import load_table
 from ._util import dsum, sql_dsum
 
@@ -146,9 +146,9 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+q11_important_parts = sql_query(
     "q11_important_parts",
-    oracle="""
+    """
     WITH per_part AS (
       SELECT l_partkey,
         SUM(CAST(ROUND(l_extendedprice * (1 - l_discount), 6) AS DECIMAL(18,6))) AS value_dec
@@ -164,37 +164,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
           2.0 * (SELECT CAST(SUM(value_dec) AS DOUBLE) / COUNT(*) FROM per_part)
     """,
 )
-def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape: parts whose revenue through NATION_7 suppliers
-    exceeds 2× the mean per-part value (supplycost·availqty substituted with
-    discounted revenue; the original's fixed fraction is scale-dependent by
-    design — a mean-relative threshold keeps the result non-degenerate at
-    every SF). The global scalar subquery is a broadcast cross-join of a
-    1-row aggregate — no driver collect, so the plan stays fully lazy and
-    cluster-side at any scale. All sums are exact decimals; the threshold
-    compare happens on identically-derived doubles."""
-    l = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_7")
-    rev = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6).cast(
-        "decimal(18,6)"
-    )
-    per_part = (
-        l.join(s, F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy("l_partkey")
-        .agg(F.sum(rev).alias("value_dec"))
-    )
-    total = per_part.agg(
-        (F.sum("value_dec").cast("double") / F.count(F.lit(1))).alias("_mean")
-    )
-    return (
-        per_part.crossJoin(F.broadcast(total))
-        .where(F.col("value_dec").cast("double") > 2.0 * F.col("_mean"))
-        .select(
-            "l_partkey", F.col("value_dec").cast("double").alias("part_value")
-        )
-    )
 
 
 @query(
@@ -275,9 +244,9 @@ def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@query(
+q15_top_supplier = sql_query(
     "q15_top_supplier",
-    oracle="""
+    """
     WITH revenue AS (
       SELECT l_suppkey AS supplier_no,
         SUM(CAST(ROUND(l_extendedprice * (1 - l_discount), 6) AS DECIMAL(18,6))) AS total_dec
@@ -291,33 +260,6 @@ def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFra
     WHERE total_dec = (SELECT MAX(total_dec) FROM revenue)
     """,
 )
-def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15: supplier(s) with the maximum revenue in 1996Q1. The
-    max-revenue scalar subquery stays in exact decimals end-to-end, so the
-    equality join has identical tie semantics in both engines; the global
-    max is a broadcast cross-join (no collect). Date filter pushes to the
-    scan; one shuffle on suppkey."""
-    l = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp_ntz"))
-    )
-    rev = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6).cast(
-        "decimal(18,6)"
-    )
-    revenue = l.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.sum(rev).alias("total_dec")
-    )
-    mx = revenue.agg(F.max("total_dec").alias("_max"))
-    s = load_table(spark, sf_dir, "supplier")
-    return (
-        revenue.crossJoin(F.broadcast(mx))
-        .where(F.col("total_dec") == F.col("_max"))
-        .join(s, F.col("s_suppkey") == F.col("supplier_no"))
-        .select(
-            "s_suppkey", "s_name",
-            F.col("total_dec").cast("double").alias("total_revenue"),
-        )
-    )
 
 
 @query(
@@ -365,9 +307,9 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+q17_small_quantity_revenue = sql_query(
     "q17_small_quantity_revenue",
-    oracle="""
+    """
     SELECT CAST(SUM(CAST(ROUND(l_extendedprice, 6) AS DECIMAL(18,6))) AS DOUBLE)
            / 7.0 AS avg_yearly
     FROM lineitem
@@ -380,44 +322,11 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
     """,
 )
-def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17: revenue from small-quantity orders of one brand's SMALL
-    parts (container substituted with p_type). The correlated per-part avg
-    is a grouped aggregation joined back against the fact — both sides
-    hash-partition on partkey so the agg output feeds the join exchange-free.
-    Threshold math (exact decimal sum / count, × 0.2) is replayed identically
-    in DuckDB so the strict < can't flip on a ulp."""
-    l = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").where(
-        (F.col("p_brand") == "Brand#3") & (F.col("p_type") == "SMALL")
-    )
-    lp = l.join(p, F.col("p_partkey") == F.col("l_partkey"))
-    thresholds = l.groupBy(F.col("l_partkey").alias("_pk")).agg(
-        (
-            0.2
-            * (
-                F.sum(F.col("l_quantity").cast("decimal(18,6)")).cast("double")
-                / F.count("l_quantity")
-            )
-        ).alias("_avg_fifth")
-    )
-    return (
-        lp.join(thresholds, F.col("l_partkey") == F.col("_pk"))
-        .where(F.col("l_quantity") < F.col("_avg_fifth"))
-        .agg(
-            (
-                F.sum(F.round("l_extendedprice", 6).cast("decimal(18,6)")).cast(
-                    "double"
-                )
-                / 7.0
-            ).alias("avg_yearly")
-        )
-    )
 
 
-@query(
+q20_dominant_suppliers = sql_query(
     "q20_dominant_suppliers",
-    oracle="""
+    """
     WITH shipped AS (
       SELECT l_suppkey, l_partkey,
         SUM(CAST(l_quantity AS DECIMAL(18,6))) AS sp_qty
@@ -440,37 +349,6 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND CAST(sp_qty AS DOUBLE) > 0.3 * CAST(p_qty AS DOUBLE)
     """,
 )
-def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape: NATION_3 suppliers that dominated (>30% of shipped
-    quantity) some red part in 1996 — availqty-vs-half-shipped substituted
-    with a share-of-part threshold. Nested aggregation: per-(supp,part)
-    quantities roll up to per-part totals, rejoined on partkey (exchange
-    reused), then a broadcast dimension join and distinct projection."""
-    p = load_table(spark, sf_dir, "part").where(F.col("p_name").like("red%"))
-    l = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
-    )
-    shipped = (
-        l.join(p, F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy("l_suppkey", "l_partkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,6)")).alias("sp_qty"))
-    )
-    part_totals = shipped.groupBy(F.col("l_partkey").alias("_pk")).agg(
-        F.sum("sp_qty").alias("p_qty")
-    )
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_3")
-    return (
-        shipped.join(part_totals, F.col("l_partkey") == F.col("_pk"))
-        .where(
-            F.col("sp_qty").cast("double") > 0.3 * F.col("p_qty").cast("double")
-        )
-        .join(s, F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", "s_name")
-        .distinct()
-    )
 
 
 @query(

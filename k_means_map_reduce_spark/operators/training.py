@@ -124,15 +124,6 @@ def split_summary_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _gram5_hashes(text_col: Column) -> Column:
-    """Distinct xxhash64'd word 5-grams of normalized text. Caller must have
-    filtered to >= 5 tokens (F.sequence would go descending otherwise)."""
-    toks = F.filter(F.split(_NORM(text_col), " "), lambda t: t != "")
-    idx = F.sequence(F.lit(1), F.size(toks) - 4)
-    grams = F.transform(idx, lambda i: F.array_join(F.slice(toks, i, 5), " "))
-    return F.array_distinct(F.transform(grams, lambda g: F.xxhash64(g)))
-
-
 @query(
     "contamination_train_test_ngrams",
     oracle=f"""
@@ -175,20 +166,21 @@ def contamination_train_test_ngrams(spark: SparkSession, sf_dir: str) -> DataFra
     and ids are compared, never hash values.
     """
     d = load_table(spark, sf_dir, "documents")
-    base = (
-        d.where(F.size(F.filter(F.split(_NORM(F.col("text")), " "), lambda t: t != "")) >= 5)
-        .select(
-            "doc_id",
-            _bucket(F.col("doc_id")).alias("bucket"),
-            _gram5_hashes(F.col("text")).alias("gs"),
+    toks = F.filter(F.split(_NORM(F.col("text")), " "), lambda t: t != "")
+    base = d.select(
+        "doc_id", _bucket(F.col("doc_id")).alias("bucket"), toks.alias("toks")
+    ).where(F.size("toks") >= 5)
+    # distinct xxhash64'd word 5-grams (>= 5 tokens, so the sequence
+    # ascends). Exploding the expression directly keeps `toks` a projected
+    # column: a Project over it would be collapsed into the lambda.
+    gs = F.explode(
+        F.expr(
+            "array_distinct(transform(sequence(1, size(toks) - 4),"
+            " i -> xxhash64(array_join(slice(toks, i, 5), ' '))))"
         )
-    )
-    tr = base.where(F.col("bucket") < 90).select(
-        F.col("doc_id").alias("train_doc"), F.explode("gs").alias("g")
-    )
-    te = base.where(F.col("bucket") >= 95).select(
-        F.col("doc_id").alias("test_doc"), F.explode("gs").alias("g")
-    )
+    ).alias("g")
+    tr = base.where(F.col("bucket") < 90).select(F.col("doc_id").alias("train_doc"), gs)
+    te = base.where(F.col("bucket") >= 95).select(F.col("doc_id").alias("test_doc"), gs)
     keep = (
         tr.groupBy("g")
         .agg(F.count(F.lit(1)).alias("_df"))
@@ -763,18 +755,17 @@ def text_rag_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     d = d.repartition(spark.sparkContext.defaultParallelism)
     toks = F.filter(F.split(F.trim(F.lower("text")), r"\s+"), lambda t: t != "")
-    n = F.size(toks)
-    n_chunks = F.when(n <= 64, F.lit(1)).otherwise(
-        (F.lit(1) + F.ceil((n - 64) / F.lit(48.0))).cast("int")
+    # the lambda reads the projected `toks` column, so each chunk slices the
+    # token array instead of re-splitting the text
+    chunks = F.expr(
+        "transform(sequence(0, CASE WHEN size(toks) <= 64 THEN 0"
+        " ELSE CAST(ceil((size(toks) - 64) / 48.0) AS INT) END),"
+        " i -> named_struct('idx', i, 'n', least(64, size(toks) - i * 48),"
+        " 'h', md5(concat_ws(' ', slice(toks, i * 48 + 1, 64)))))"
     )
-    chunk = lambda i: F.struct(  # noqa: E731
-        i.alias("idx"),
-        F.least(F.lit(64), n - i * 48).alias("n"),
-        F.md5(F.concat_ws(" ", F.slice(toks, i * 48 + 1, 64))).alias("h"),
-    )
-    chunks = F.transform(F.sequence(F.lit(0), n_chunks - 1), chunk)
     return (
-        d.where(n > 0)
+        d.select("doc_id", toks.alias("toks"))
+        .where(F.size("toks") > 0)
         .select("doc_id", F.explode(chunks).alias("c"))
         .select(
             "doc_id",

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..registry import query, sql_query
 from ..sources import load_table
 from ._util import dsum, sql_dsum
 
@@ -112,9 +112,9 @@ def window_running_spend_per_customer(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
-@query(
+window_lag_lead_user_events = sql_query(
     "window_lag_lead_user_events",
-    oracle="""
+    """
     SELECT
       user_id,
       event_id,
@@ -125,19 +125,6 @@ def window_running_spend_per_customer(spark: SparkSession, sf_dir: str) -> DataF
     FROM events
     """,
 )
-def window_lag_lead_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag/lead over the per-user event sequence (event_id is unique → fully
-    deterministic frame order in both engines)."""
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    return e.select(
-        "user_id",
-        "event_id",
-        "value",
-        F.lag("value").over(w).alias("prev_value"),
-        F.lead("value").over(w).alias("next_value"),
-        (F.col("value") - F.lag("value").over(w)).alias("delta"),
-    )
 
 
 @query(
@@ -179,9 +166,9 @@ def window_range_frame_90d_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+window_distribution_functions = sql_query(
     "window_distribution_functions",
-    oracle="""
+    """
     SELECT
       o_orderkey,
       o_orderpriority,
@@ -197,29 +184,11 @@ def window_range_frame_90d_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)
     """,
 )
-def window_distribution_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution window functions (ntile / percent_rank / cume_dist /
-    first_value / last_value) per priority class. The ordering includes
-    o_orderkey so every rank-derived value is deterministic under ties.
-    last_value needs the explicit full frame (the default frame stops at
-    CURRENT ROW) — same rule in both engines."""
-    o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
-    w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return o.select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.ntile(4).over(w).cast("int").alias("quartile"),
-        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-        F.round(F.cume_dist().over(w), 6).alias("cume"),
-        F.first("o_orderkey").over(w).alias("cheapest_key"),
-        F.last("o_orderkey").over(w_full).alias("priciest_key"),
-    )
 
 
-@query(
+window_yoy_revenue_growth = sql_query(
     "window_yoy_revenue_growth",
-    oracle=f"""
+    f"""
     WITH yearly AS (
       SELECT c_mktsegment,
         CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
@@ -232,29 +201,6 @@ def window_distribution_functions(spark: SparkSession, sf_dir: str) -> DataFrame
     FROM yearly
     """,
 )
-def window_yoy_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS-style year-over-year growth: yearly revenue per segment, then
-    a lag window over the (tiny) aggregate. The window runs on segment×year
-    rows — never on the fact — so its sort is trivial at any scale; the
-    exact decimal revenue makes the growth ratio a deterministic division
-    of identical doubles (null for each segment's first year in both
-    engines)."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    yearly = (
-        o.join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .groupBy("c_mktsegment", F.year("o_orderdate").cast("int").alias("o_year"))
-        .agg(dsum("o_totalprice").alias("revenue"))
-    )
-    w = Window.partitionBy("c_mktsegment").orderBy("o_year")
-    return yearly.select(
-        "c_mktsegment",
-        "o_year",
-        "revenue",
-        F.round(F.col("revenue") / F.lag("revenue").over(w) - 1.0, 6).alias(
-            "yoy_growth"
-        ),
-    )
 
 
 @query(
@@ -454,9 +400,9 @@ def window_moving_corr_30d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+window_percent_rank_cume_dist = sql_query(
     "window_percent_rank_cume_dist",
-    oracle="""
+    """
     WITH ranked AS (
       SELECT c_custkey, c_mktsegment AS segment,
         ROW_NUMBER() OVER (
@@ -471,38 +417,3 @@ def window_moving_corr_30d(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked WHERE n >= 2
     """,
 )
-def window_percent_rank_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """percent_rank + cume_dist per customer within segment — the relative-
-    standing window pair (used for percentile badges / 'top X% of
-    customers').
-
-    Under a TOTAL order (integer cents, custkey tie-break) percent_rank
-    collapses to (rk-1)/(n-1) and cume_dist to rk/n — exact integer
-    fractions, so rather than relying on each engine's tie semantics,
-    BOTH sides compute the closed forms from ROW_NUMBER explicitly (the
-    registry's determinism contract applied to rank functions).
-
-    At 100 TB: one window sort per segment over the customer dimension.
-    """
-    c = load_table(spark, sf_dir, "customer")
-    cents = F.round(F.col("c_acctbal") * 100, 0).cast("bigint")
-    wseg = Window.partitionBy("c_mktsegment")
-    ranked = c.select(
-        "c_custkey",
-        F.col("c_mktsegment").alias("segment"),
-        F.row_number()
-        .over(wseg.orderBy(cents, F.col("c_custkey")))
-        .cast("bigint")
-        .alias("rk"),
-        F.count(F.lit(1)).over(wseg).cast("bigint").alias("n"),
-    )
-    return ranked.where(F.col("n") >= 2).select(
-        "c_custkey",
-        "segment",
-        F.round(
-            (F.col("rk") - 1).cast("double") / (F.col("n") - 1).cast("double"), 6
-        ).alias("pct_rank"),
-        F.round(F.col("rk").cast("double") / F.col("n").cast("double"), 6).alias(
-            "cume_dist"
-        ),
-    )

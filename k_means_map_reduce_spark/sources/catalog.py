@@ -30,6 +30,7 @@ results. Timestamp discipline:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -195,7 +196,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view for spark.sql queries."""
-    for name in TABLE_SCHEMAS:
+# Whole-word, case-insensitive catalog table names; a false match (a table
+# name inside a string literal or comment) only registers one more view.
+_TABLE_WORD = re.compile(r"\b(" + "|".join(TABLE_SCHEMAS) + r")\b", re.IGNORECASE)
+
+
+def register_views(
+    spark: SparkSession, sf_dir: str, sql: str, args: dict | None = None
+) -> DataFrame:
+    """Run `sql` on Spark over the catalog tables it names.
+
+    Only the tables the string names are registered as temp views (one
+    view costs ~17 ms; all ten ~0.2 s at sf0.1). Registering per call is safe
+    because ``spark.sql`` analyzes eagerly: a frame returned earlier keeps
+    the files of its own sf_dir after a later call re-points the views.
+    """
+    for name in {m.lower() for m in _TABLE_WORD.findall(sql)}:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+    return spark.sql(sql, args)

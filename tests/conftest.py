@@ -7,6 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from k_means_map_reduce_spark.registry import SQL_QUERIES  # noqa: E402
 from k_means_map_reduce_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -131,6 +132,10 @@ def pytest_collection_modifyitems(config, items):
             if base == "test_oracle_parity" and param:
                 if param in _PARITY_SAMPLE:
                     item.add_marker(pytest.mark.parity_sample)
+            # a SQL-registered query is its own oracle's text: its sf0.001
+            # parity is cheap and checks the catalog and both dialects
+            if base == "test_oracle_parity_small_sf" and param in SQL_QUERIES:
+                item.add_marker(pytest.mark.parity_sample)
         elif base in _SMOKE:
             item.add_marker(pytest.mark.smoke)
         if item.name in _SMOKE_PARAMS:

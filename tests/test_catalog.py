@@ -18,6 +18,7 @@ from k_means_map_reduce_spark.sources.catalog import (
     TABLE_NAMES,
     _events_ts_unit,
     load_table,
+    register_views,
 )
 
 from conftest import SF_DIR, SF_DIR_ORACLE
@@ -69,6 +70,29 @@ def test_events_ts_matches_pyarrow(spark, sf_dir):
 def test_events_ts_unit_sniff(sf_dir):
     unit = _events_ts_unit(os.path.join(sf_dir, "events.parquet"))
     assert unit in ("s", "ms", "us", "ns", "int64")
+
+
+def test_register_views_keeps_each_frame_on_its_sf_dir(spark):
+    """spark.sql analyzes eagerly, so a frame built at sf0.001 keeps reading
+    sf0.001 after the same SQL re-points the views at sf0.01."""
+    sql = "SELECT COUNT(*) AS n FROM orders"
+    small = register_views(spark, SF_DIR, sql)
+    big = register_views(spark, SF_DIR_ORACLE, sql)
+    want_small = load_table(spark, SF_DIR, "orders").count()
+    want_big = load_table(spark, SF_DIR_ORACLE, "orders").count()
+    assert want_small < want_big
+    assert small.collect()[0]["n"] == want_small
+    assert big.collect()[0]["n"] == want_big
+
+
+def test_register_views_registers_only_named_tables(spark, sf_dir):
+    """A SQL string registers the catalog tables it names and no others;
+    matching is whole-word and case-insensitive."""
+    for name in TABLE_NAMES:
+        spark.catalog.dropTempView(name)
+    register_views(spark, sf_dir, "SELECT l_orderkey, l_partkey FROM LineItem")
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    assert views & set(TABLE_NAMES) == {"lineitem"}
 
 
 def test_all_tables_load(spark, sf_dir):

@@ -180,6 +180,38 @@ def test_arrow_single_task_equals_distributed(spark, sf_dir, monkeypatch):
     assert diff < 1e-9, f"physical paths diverged by {diff}"
 
 
+def test_arrow_degenerate_sample_falls_back_and_equals_native(spark, monkeypatch):
+    """When the 4k oversample holds fewer than k distinct vectors, the
+    one-task path hands the fit to the distributed loop, whose init draws
+    from distinct() instead. With exactly k distinct points both kmeans_arrow
+    and kmeans_native must end on those points with the same sizes."""
+    from k_means_map_reduce_spark import kmeans as K
+
+    k = 3
+    rows = [(i, [0.0, 0.0]) for i in range(998)]
+    rows += [(998, [5.0, 5.0]), (999, [-5.0, 5.0])]
+    df = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+
+    draws: list[int] = []
+    take_sample = K._take_sample
+
+    def spy(frame, num, seed):
+        draws.append(num)
+        return take_sample(frame, num, seed)
+
+    monkeypatch.setattr(K, "_take_sample", spy)
+    arrow = K.kmeans_arrow(df, k=k, max_iter=5, tol=1e-9, seed=42)
+    assert draws == [4 * k, k], f"distributed fallback not reached: {draws}"
+    native = K.kmeans_native(df, k=k, max_iter=5, tol=1e-9, seed=42)
+
+    def fit(r):
+        return sorted((tuple(c), r.sizes[cid]) for cid, c in enumerate(r.centers))
+
+    assert fit(arrow) == fit(native) == [
+        ((-5.0, 5.0), 1), ((0.0, 0.0), 998), ((5.0, 5.0), 1)
+    ]
+
+
 def test_kmeans_parallel_init_recovers_blobs(spark):
     """k-means|| init + Lloyd recovers well-separated blobs exactly (one
     center per blob) and is deterministic per seed. Random init promises
