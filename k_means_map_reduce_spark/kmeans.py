@@ -597,16 +597,20 @@ def kmeans_arrow(
     an adaptive physical strategy — the same decision Catalyst makes between
     broadcast and shuffle joins, applied to an iterative job:
 
-    - dense size ≤ SPARK_GRAFT_KMEANS_LOCAL_BYTES (default 64 MB): the whole
-      loop runs INSIDE one executor task over the coalesced block — ONE Spark
-      job for all iterations instead of one per iteration. An iterative
+    - Catalyst's size estimate of the input plan ≤
+      SPARK_GRAFT_KMEANS_LOCAL_BYTES (default 64 MB): the whole loop runs
+      INSIDE one executor task over the coalesced block — ONE Spark job for
+      all iterations instead of one per iteration. The choice is made from
+      the plan estimate alone, before any job runs. An iterative
       driver loop over a 1 MB input pays ~250 ms of job-scheduling floor per
       iteration for microseconds of math; running the loop where the data is
       removes that floor entirely. (Data never lands on the driver — this is
       mapPartitions, not collect; precedent: MLlib runs LocalKMeans for the
       k-means|| refine the same way, clustering/LocalKMeans.scala.)
-    - larger inputs: per-iteration treeAggregate over a cached RDD of dense
-      per-partition matrices:
+    - estimate over the limit or unknown (non-file plans report Long.Max),
+      and inputs whose 4k init oversample holds fewer than k distinct
+      vectors: per-iteration treeAggregate over a cached RDD of dense
+      per-partition matrices, even when the data would fit one task:
 
         executors: cached numpy block → |x|²+|c|²-2XCᵀ argmin (BLAS)
                    → (count, Σvec, Σdist²) partials, tree-combined
@@ -635,8 +639,9 @@ def kmeans_arrow(
     )
     # Size the input from Catalyst plan statistics — no job spent; this is
     # the same estimate autoBroadcastJoinThreshold uses to pick broadcast
-    # joins. Unknown stats (non-file plans) report Long.Max and route to the
-    # distributed path, which then counts exactly.
+    # joins. Unknown stats (non-file plans) report Long.Max, and an
+    # overestimate exceeds the limit too: both run the distributed loop
+    # below, even when the dense data would fit one task.
     try:
         est_bytes = int(
             base._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()

@@ -202,6 +202,8 @@ def _spark_dsum_sql(expr: str) -> str:
     return f"CAST(SUM(CAST(ROUND(({expr}), 6) AS DECIMAL(18,6))) AS DOUBLE)"
 
 
+# A flag whose quantities are all equal has a zero denominator: the CASE
+# gives NULL in both engines where ANSI Spark would throw DIVIDE_BY_ZERO.
 stats_regression_by_flag = sql_query(
     "stats_regression_by_flag",
     f"""
@@ -215,8 +217,11 @@ stats_regression_by_flag = sql_query(
       FROM lineitem GROUP BY l_returnflag
     )
     SELECT l_returnflag, n,
-      ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS slope,
-      ROUND((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n, 6) AS intercept
+      CASE WHEN n * sxx - sx * sx <> 0
+           THEN ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) END AS slope,
+      CASE WHEN n * sxx - sx * sx <> 0
+           THEN ROUND((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n, 6)
+      END AS intercept
     FROM sums
     """,
 )
@@ -621,6 +626,9 @@ orders_chi2_priority_status = sql_query(
 )
 
 
+# Constant or collinear features make the determinant 0. ANSI Spark throws
+# DIVIDE_BY_ZERO on double / 0 where DuckDB yields NULL, so the CASE gives
+# NULL betas (and a NULL intercept) in both engines.
 stats_multiple_regression = sql_query(
     "stats_multiple_regression",
     """
@@ -646,13 +654,18 @@ stats_multiple_regression = sql_query(
              s2 / CAST(n AS DOUBLE) AS m2,
              sy / CAST(n AS DOUBLE) AS my
       FROM m
+    ), b AS (
+      SELECT n, m1, m2, my,
+             CASE WHEN v11 * v22 - v12 * v12 <> 0
+                  THEN (v1y * v22 - v2y * v12) / (v11 * v22 - v12 * v12) END AS b1,
+             CASE WHEN v11 * v22 - v12 * v12 <> 0
+                  THEN (v2y * v11 - v1y * v12) / (v11 * v22 - v12 * v12) END AS b2
+      FROM c
     )
     SELECT n,
-           ROUND((v1y * v22 - v2y * v12) / (v11 * v22 - v12 * v12), 6) AS beta_quantity,
-           ROUND((v2y * v11 - v1y * v12) / (v11 * v22 - v12 * v12), 6) AS beta_discount,
-           ROUND(my - ((v1y * v22 - v2y * v12) / (v11 * v22 - v12 * v12)) * m1
-                    - ((v2y * v11 - v1y * v12) / (v11 * v22 - v12 * v12)) * m2,
-                 4) AS intercept
-    FROM c
+           ROUND(b1, 6) AS beta_quantity,
+           ROUND(b2, 6) AS beta_discount,
+           ROUND(my - b1 * m1 - b2 * m2, 4) AS intercept
+    FROM b
     """,
 )

@@ -430,9 +430,9 @@ def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+topn_nations_with_other = sql_query(
     "topn_nations_with_other",
-    oracle="""
+    """
     WITH rev AS (
       SELECT n_name,
         CAST(SUM(CAST(ROUND(o_totalprice, 6) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
@@ -455,44 +455,6 @@ def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     """,
 )
-def topn_nations_with_other(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The classic BI report: top-5 nations by revenue, everything else
-    collapsed into an 'OTHER' bucket, with percent-of-total — rank +
-    unordered total window over the tiny nation rollup, then a regroup.
-    Deterministic top-N via the (revenue DESC, name) tie-break."""
-    from pyspark.sql import Window as W
-
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    rev = (
-        o.join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n), F.col("n_nationkey") == F.col("c_nationkey"))
-        .groupBy("n_name")
-        .agg(dsum("o_totalprice").alias("revenue"))
-    )
-    dec = F.col("revenue").cast("decimal(18,6)")
-    ranked = rev.select(
-        "n_name",
-        "revenue",
-        F.row_number()
-        .over(W.orderBy(F.col("revenue").desc(), "n_name"))
-        .alias("rnk"),
-        F.sum(dec).over(W.partitionBy()).cast("double").alias("total"),
-    )
-    return (
-        ranked.groupBy(
-            F.when(F.col("rnk") <= 5, F.col("n_name"))
-            .otherwise("OTHER")
-            .alias("nation")
-        )
-        .agg(
-            F.sum(dec).cast("double").alias("revenue"),
-            F.round(
-                F.sum(dec).cast("double") / F.max("total"), 6
-            ).alias("pct_of_total"),
-        )
-    )
 
 
 @query(
@@ -675,9 +637,9 @@ def features_pit_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@query(
+events_value_mad_outliers = sql_query(
     "events_value_mad_outliers",
-    oracle="""
+    """
     WITH med AS (
       SELECT event_type, median(value) AS med_v FROM events GROUP BY 1
     ),
@@ -703,55 +665,6 @@ def features_pit_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame
     GROUP BY d.event_type, m.med_v, m.mad_v
     """,
 )
-def events_value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust outlier counts via MAD (median absolute deviation): the
-    3.5-sigma-equivalent cut 1.4826·MAD that a single corrupt batch cannot
-    drag (unlike events_value_outliers' mean/stddev 3σ, which outliers
-    inflate until they hide themselves — the breakdown-point argument for
-    robust statistics in data validation).
-
-    Two grouped exact medians (each one shuffle of (type, value) pairs)
-    + a broadcast of the 5-row threshold table back onto the fact. At
-    100 TB swap exact medians for approx_percentile sketches; the cut
-    logic is unchanged.
-    """
-    e = load_table(spark, sf_dir, "events").select("event_type", "value")
-    med = e.groupBy("event_type").agg(
-        F.percentile("value", F.lit(0.5)).alias("med_v")
-    )
-    dev = e.join(F.broadcast(med), "event_type").withColumn(
-        "absdev", F.abs(F.col("value") - F.col("med_v"))
-    )
-    mad = dev.groupBy("event_type").agg(
-        F.max("med_v").alias("med_v"),
-        F.percentile("absdev", F.lit(0.5)).alias("mad_v"),
-    )
-    return (
-        dev.drop("med_v")
-        .join(F.broadcast(mad), "event_type")
-        .groupBy("event_type", "med_v", "mad_v")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.count(
-                F.when(
-                    (F.col("mad_v") > 0)
-                    & (
-                        F.abs(F.col("value") - F.col("med_v"))
-                        / (1.4826 * F.col("mad_v"))
-                        > 3.5
-                    ),
-                    1,
-                )
-            ).alias("n_outliers"),
-        )
-        .select(
-            "event_type",
-            "n_events",
-            F.round("med_v", 6).alias("median_value"),
-            F.round("mad_v", 6).alias("mad_value"),
-            "n_outliers",
-        )
-    )
 
 
 @query(
@@ -1242,9 +1155,9 @@ def events_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+timeseries_autocorr_daily_revenue = sql_query(
     "timeseries_autocorr_daily_revenue",
-    oracle="""
+    """
     WITH daily AS (
       SELECT
         date_trunc('day', CAST(o_orderdate AS TIMESTAMP)) AS day,
@@ -1277,57 +1190,6 @@ def events_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM moments
     """,
 )
-def timeseries_autocorr_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lag-1 autocorrelation of the daily revenue series — the standard
-    persistence diagnostic (is today's revenue predictive of tomorrow's?),
-    computed closed-form from exact decimal power sums exactly like
-    stats_regression_by_flag: Pearson r over (rev_t, rev_{t-1}) pairs.
-
-    Scale shape: the fact reduces to one row per DAY before anything
-    else; the lag window and the five power sums run over that tiny
-    series. Products are pre-scaled by 1e6 to keep the decimal
-    accumulator in range; sqrt is IEEE-correctly-rounded so the final
-    division agrees bit-for-bit across engines before the round.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.date_trunc("day", "o_orderdate").alias("day")).agg(
-        dsum("o_totalprice").alias("rev")
-    )
-    w = Window.orderBy("day")
-    lagged = daily.select("rev", F.lag("rev").over(w).alias("prev")).where(
-        F.col("prev").isNotNull()
-    )
-
-    def dsum28(c):
-        return F.sum(F.round(c, 4).cast("decimal(28,4)")).cast("double")
-
-    m = lagged.agg(
-        F.count(F.lit(1)).alias("n"),
-        dsum28(F.col("rev")).alias("sx"),
-        dsum28(F.col("prev")).alias("sy"),
-        dsum28(F.col("rev") * F.col("prev") / 1000000.0).alias("sxy"),
-        dsum28(F.col("rev") * F.col("rev") / 1000000.0).alias("sxx"),
-        dsum28(F.col("prev") * F.col("prev") / 1000000.0).alias("syy"),
-    )
-    # constant series ⇒ a variance term is 0 ⇒ /0: ANSI Spark throws where
-    # DuckDB yields NULL — guard so both emit NULL (advisor-flagged class).
-    # The cut is an EPSILON relative to the power-sum magnitude, not a
-    # strict > 0: on a near-constant series the subtraction cancels to
-    # rounding noise whose SIGN could differ between engines' evaluation
-    # orders, and a sign-based guard would then flake; no genuine variance
-    # lands within 1e-9·|sxx| of zero, so both engines always agree on
-    # which side of the epsilon they are (mirrored in the oracle SQL).
-    vx = F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n") / 1000000.0
-    vy = F.col("syy") - F.col("sy") * F.col("sy") / F.col("n") / 1000000.0
-    eps_x = F.lit(1e-9) * F.greatest(F.abs(F.col("sxx")), F.lit(1.0))
-    eps_y = F.lit(1e-9) * F.greatest(F.abs(F.col("syy")), F.lit(1.0))
-    num = F.col("sxy") - F.col("sx") * F.col("sy") / F.col("n") / 1000000.0
-    return m.select(
-        "n",
-        F.round(
-            F.when((vx > eps_x) & (vy > eps_y), num / F.sqrt(vx) / F.sqrt(vy)), 6
-        ).alias("lag1_autocorr"),
-    )
 
 
 @query(
@@ -2416,9 +2278,12 @@ def geo_radius_join_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("dist_km") <= 500.0)
 
 
-@query(
+# Saturated conversion (pooled rate 0 or 1) zeroes the pooled variance:
+# ANSI Spark throws DIVIDE_BY_ZERO where DuckDB yields NULL, so the CASE
+# gives a NULL z in both engines.
+ab_test_conversion_ztest = sql_query(
     "ab_test_conversion_ztest",
-    oracle="""
+    """
     WITH assign AS (
       SELECT user_id, CAST(user_id % 2 AS INT) AS variant,
              MAX(CASE WHEN event_type = 'purchase' AND value > 200.0
@@ -2436,75 +2301,24 @@ def geo_radius_join_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
         MAX(CASE WHEN variant = 1 THEN n_users END) AS n_b,
         MAX(CASE WHEN variant = 1 THEN n_converted END) AS c_b
       FROM arms
+    ), p AS (
+      SELECT n_a, c_a, n_b, c_b,
+             CAST(c_a AS DOUBLE) / CAST(n_a AS DOUBLE) AS p_a,
+             CAST(c_b AS DOUBLE) / CAST(n_b AS DOUBLE) AS p_b,
+             SQRT(
+               (CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
+               * (1.0 - CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
+               * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE))
+             ) AS se
+      FROM wide
     )
     SELECT n_a, c_a, n_b, c_b,
-           ROUND(CAST(c_a AS DOUBLE) / CAST(n_a AS DOUBLE), 6) AS rate_a,
-           ROUND(CAST(c_b AS DOUBLE) / CAST(n_b AS DOUBLE), 6) AS rate_b,
-           ROUND(
-             (CAST(c_a AS DOUBLE) / CAST(n_a AS DOUBLE)
-              - CAST(c_b AS DOUBLE) / CAST(n_b AS DOUBLE))
-             / SQRT(
-                 (CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-                 * (1.0 - CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-                 * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE))
-               ), 6) AS z_score
-    FROM wide
+           ROUND(p_a, 6) AS rate_a,
+           ROUND(p_b, 6) AS rate_b,
+           CASE WHEN se <> 0 THEN ROUND((p_a - p_b) / se, 6) END AS z_score
+    FROM p
     """,
 )
-def ab_test_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-proportion z-test of high-value conversion (a purchase
-    over 200 — plain any-purchase saturates at 100% on this data, making
-    the pooled variance zero) between a hash-split A/B assignment
-    (user_id parity — the deterministic stand-in for an
-    experiment-assignment column): pooled-variance z, the
-    experimentation-platform primitive. Everything derives from integer
-    counts; the one transcendental is sqrt — the ONLY libm call that is
-    exactly correctly rounded everywhere (NEXT.md lesson 3), so the score
-    is bit-identical cross-engine even before rounding.
-
-    Scale shape: one user-grain rollup off the fact, then a 2-row arm
-    aggregate — the same envelope as any per-user feature; significance
-    thresholds stay driver-side (the z-score is the deliverable).
-    """
-    e = load_table(spark, sf_dir, "events")
-    assign = e.groupBy("user_id").agg(
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.col("value") > 200.0), 1
-            ).otherwise(0)
-        ).alias("converted")
-    ).select(
-        (F.col("user_id") % 2).cast("int").alias("variant"), "converted"
-    )
-    arms = assign.groupBy("variant").agg(
-        F.count(F.lit(1)).cast("long").alias("n_users"),
-        F.sum("converted").cast("long").alias("n_converted"),
-    )
-    wide = arms.agg(
-        F.max(F.when(F.col("variant") == 0, F.col("n_users"))).alias("n_a"),
-        F.max(F.when(F.col("variant") == 0, F.col("n_converted"))).alias("c_a"),
-        F.max(F.when(F.col("variant") == 1, F.col("n_users"))).alias("n_b"),
-        F.max(F.when(F.col("variant") == 1, F.col("n_converted"))).alias("c_b"),
-    )
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    p_a, p_b = d("c_a") / d("n_a"), d("c_b") / d("n_b")
-    pooled = (d("c_a") + d("c_b")) / (d("n_a") + d("n_b"))
-    # Saturated conversion (pooled 0 or 1) zeroes the pooled variance:
-    # ANSI Spark throws DIVIDE_BY_ZERO on double/0 while DuckDB returns
-    # NULL (advisor finding) — guard so both engines emit NULL z.
-    se = F.sqrt(
-        pooled * (F.lit(1.0) - pooled) * (F.lit(1.0) / d("n_a") + F.lit(1.0) / d("n_b"))
-    )
-    z = F.when(se != 0.0, (p_a - p_b) / se)
-    return wide.select(
-        "n_a",
-        "c_a",
-        "n_b",
-        "c_b",
-        F.round(p_a, 6).alias("rate_a"),
-        F.round(p_b, 6).alias("rate_b"),
-        F.round(z, 6).alias("z_score"),
-    )
 
 
 @query(

@@ -152,9 +152,9 @@ def events_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+events_type_value_distribution = sql_query(
     "events_type_value_distribution",
-    oracle="""
+    """
     SELECT
       event_type,
       COUNT(*) AS n,
@@ -166,14 +166,6 @@ def events_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     """,
 )
-def events_type_value_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    return e.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.min("value"), 6).alias("min_value"),
-        F.round(F.max("value"), 6).alias("max_value"),
-        (dsum("value") / F.count("value")).alias("avg_value"),
-    )
 
 
 _FUNNEL_SQL = """
@@ -263,9 +255,9 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+events_value_outliers = sql_query(
     "events_value_outliers",
-    oracle=f"""
+    f"""
     WITH stats AS (
       SELECT event_type,
         COUNT(*) AS n,
@@ -282,38 +274,6 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY e.event_type
     """,
 )
-def events_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3σ outlier counts per event type — the monitoring/data-quality shape.
-
-    Mean and sample stddev come from exact decimal power sums (never the
-    engine's streaming stddev, whose partial-merge order perturbs the last
-    ulps differently per engine/partitioning), so the 3σ cut is a
-    deterministic comparison of identically-derived doubles. Plan: one
-    aggregation for the per-type moments, broadcast back onto the fact, one
-    filtered count — the fact is scanned twice but shuffled never (the
-    moments table is k rows)."""
-    e = load_table(spark, sf_dir, "events")
-    stats = e.groupBy(F.col("event_type").alias("_et")).agg(
-        F.count(F.lit(1)).alias("n"),
-        dsum("value").alias("sx"),
-        dsum(F.col("value") * F.col("value")).alias("sxx"),
-    )
-    mean = F.col("sx") / F.col("n")
-    std = F.sqrt(
-        (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-        / (F.col("n") * (F.col("n") - 1.0))
-    )
-    return (
-        e.join(F.broadcast(stats), F.col("event_type") == F.col("_et"))
-        .where(F.abs(F.col("value") - mean) > 3.0 * std)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_outliers"),
-            F.round(F.count(F.lit(1)).cast("double") / F.any_value("n"), 6).alias(
-                "outlier_share"
-            ),
-        )
-    )
 
 
 @query(

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .._memo import SessionMemo
-from ..registry import query
+from ..registry import query, sql_query
 from ..sources import load_table
 
 _DAMPING = 0.85
@@ -321,9 +321,9 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sim_suppliers_by_parts = sql_query(
     "sim_suppliers_by_parts",
-    oracle="""
+    """
     WITH sp AS (
       SELECT DISTINCT l_suppkey AS s, l_partkey AS p FROM lineitem
     ), deg AS (
@@ -343,51 +343,6 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 20
     """,
 )
-def sim_suppliers_by_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity similarity by shared features — the bipartite projection:
-    the 20 most part-set-similar supplier pairs by Jaccard — the
-    collaborative-filtering neighborhood computation (users-by-items,
-    docs-by-shingles, suppliers-by-parts are all this query). Top-k
-    rather than a fixed similarity cut because absolute Jaccard shrinks
-    as feature sets grow with corpus density — a threshold that fires at
-    one scale is empty at another; ties at the boundary break on the key
-    pair so both engines keep the identical set.
-
-    Scale shape: the classic inverted-index set-similarity join — pair
-    candidates are generated PER PART (posting list), so the work is
-    sum over parts of C(suppliers_carrying_it, 2), never |S|². At web
-    scale a stop-feature cap bounds hot postings (the relative cap
-    join_fuzzy_part_names and contamination_train_test_ngrams already
-    apply); this corpus' postings are naturally bounded, so the plain
-    projection is exact. Degrees broadcast onto the pair aggregate for
-    the Jaccard denominator.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    sp = li.select(F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")).distinct()
-    deg = sp.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
-    a, b = sp.alias("a"), sp.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.p") == F.col("b.p")) & (F.col("a.s") < F.col("b.s")))
-        .groupBy(F.col("a.s").alias("s1"), F.col("b.s").alias("s2"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    d1 = deg.select(F.col("s").alias("s1"), F.col("d").alias("d1"))
-    d2 = deg.select(F.col("s").alias("s2"), F.col("d").alias("d2"))
-    jac = F.col("shared").cast("double") / (F.col("d1") + F.col("d2") - F.col("shared"))
-    return (
-        pairs.join(d1, "s1")
-        .join(d2, "s2")
-        .select(
-            "s1",
-            "s2",
-            F.col("shared").cast("long").alias("shared_parts"),
-            F.round(jac, 6).alias("jaccard"),
-            jac.alias("_j"),
-        )
-        .orderBy(F.col("_j").desc(), "s1", "s2")
-        .limit(20)
-        .drop("_j")
-    )
 
 
 def _pagerank_oracle_sql(rounds: int) -> str:

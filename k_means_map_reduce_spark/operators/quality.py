@@ -147,9 +147,9 @@ def snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+privacy_k_anonymity_check = sql_query(
     "privacy_k_anonymity_check",
-    oracle="""
+    """
     WITH cells AS (
       SELECT
         c_nationkey,
@@ -165,27 +165,6 @@ def snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE n < 5
     """,
 )
-def privacy_k_anonymity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity audit (k=5) over the quasi-identifier tuple
-    (nation, market segment, account-balance band): every equivalence
-    class smaller than k is a re-identification risk and must be
-    generalized or suppressed before the table is shared — the standard
-    privacy gate in data-release pipelines.
-
-    Scale shape: one hash aggregation at quasi-identifier grain (map-side
-    partials), one filter; cells are bounded by the QI domain product, not
-    row count. The balance band is floor-division — integer-exact in both
-    engines.
-    """
-    c = load_table(spark, sf_dir, "customer")
-    cells = c.groupBy(
-        "c_nationkey",
-        "c_mktsegment",
-        F.floor(F.col("c_acctbal") / 1000.0).cast("long").alias("bal_band"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    return cells.where(F.col("n") < 5).select(
-        "c_nationkey", "c_mktsegment", "bal_band", F.col("n").cast("long").alias("n")
-    )
 
 
 @query(
@@ -327,9 +306,9 @@ def dq_name_key_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+dq_orders_lineitem_reconciliation = sql_query(
     "dq_orders_lineitem_reconciliation",
-    oracle="""
+    """
     WITH li AS (
       SELECT l_orderkey,
              CAST(COUNT(*) AS BIGINT) AS n_lines,
@@ -357,62 +336,6 @@ def dq_name_key_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM j GROUP BY status
     """,
 )
-def dq_orders_lineitem_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Header-vs-detail reconciliation — the finance-closing control every
-    warehouse runs nightly: does each order's header total equal the sum
-    of its lines' charges (price x (1-disc) x (1+tax)), within a
-    per-line rounding allowance? Orders bucket into reconciled /
-    mismatch / no_lines with the total absolute gap per bucket.
-
-    All money stays DECIMAL(18,6): the per-line charge (2dp x 2dp x 2dp
-    operands) is EXACTLY representable at scale 6, so ROUND is the
-    identity and no engine hits a rounding tie (rounding to cents does —
-    .005 ties resolve differently across engines, the dsum lesson); the
-    one double is the tolerance comparison, identical both engines.
-
-    Scale shape: one map-side-partial rollup of lineitem to per-order
-    (count, charge), one orderkey-colocated LEFT join against the header,
-    then a 3-key rollup — the same single-fact-shuffle shape as q18.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    li = l.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
-        F.sum(
-            F.round(
-                F.col("l_extendedprice")
-                * (F.lit(1.0) - F.col("l_discount"))
-                * (F.lit(1.0) + F.col("l_tax")),
-                6,
-            ).cast("decimal(18,6)")
-        ).alias("charge"),
-    )
-    header = F.round("o_totalprice", 6).cast("decimal(18,6)")
-    j = o.join(li, o.o_orderkey == li.l_orderkey, "left").select(
-        header.alias("header_total"),
-        "n_lines",
-        "charge",
-        F.when(F.col("l_orderkey").isNull(), "no_lines")
-        .when(
-            F.abs((header - F.col("charge")).cast("double"))
-            <= F.lit(0.01) * F.col("n_lines").cast("double"),
-            "reconciled",
-        )
-        .otherwise("mismatch")
-        .alias("status"),
-    )
-    return j.groupBy("status").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum(
-            F.abs(
-                F.coalesce(
-                    F.col("header_total") - F.col("charge"), F.col("header_total")
-                )
-            ).cast("decimal(18,6)")
-        )
-        .cast("double")
-        .alias("total_abs_gap"),
-    )
 
 
 @query(

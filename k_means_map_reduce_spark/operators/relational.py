@@ -173,9 +173,9 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query(
+join_left_outer_customer_orders = sql_query(
     "join_left_outer_customer_orders",
-    oracle=f"""
+    f"""
     SELECT
       c_custkey,
       c_name,
@@ -187,17 +187,6 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c_custkey, c_name
     """,
 )
-def join_left_outer_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "MACHINERY")
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey", "c_name")
-        .agg(
-            F.count("o_orderkey").alias("n_orders"),
-            F.coalesce(dsum("o_totalprice"), F.lit(0.0)).alias("total_spent"),
-        )
-    )
 
 
 join_semi_customers_with_big_orders = sql_query(
@@ -312,9 +301,9 @@ def agg_rollup_nation_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+agg_cube_status_priority = sql_query(
     "agg_cube_status_priority",
-    oracle=f"""
+    f"""
     SELECT
       COALESCE(o_orderstatus, 'ALL') AS status,
       COALESCE(o_orderpriority, 'ALL') AS priority,
@@ -324,21 +313,6 @@ def agg_rollup_nation_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
 )
-def agg_cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            dsum("o_totalprice").alias("sum_total"),
-        )
-        .select(
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("status"),
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("priority"),
-            "n_orders",
-            "sum_total",
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -678,9 +652,9 @@ agg_exact_mode_by_segment = sql_query(
 )
 
 
-@query(
+agg_max_by_min_by_injective = sql_query(
     "agg_max_by_min_by_injective",
-    oracle="""
+    """
     SELECT n_nationkey,
       max_by(c_custkey,
              CAST(ROUND(c_acctbal * 100, 0) AS BIGINT) * 10000000 + c_custkey)
@@ -696,31 +670,3 @@ agg_exact_mode_by_segment = sql_query(
     GROUP BY n_nationkey
     """,
 )
-def agg_max_by_min_by_injective(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """max_by / min_by (argmax / argmin aggregates) made deterministic:
-    richest and poorest customer per nation. Raw max_by(key, acctbal) is
-    nondeterministic on balance ties in BOTH engines, so the ordering
-    value is the INJECTIVE composite cents*1e7 + custkey (custkey < 1e7
-    by catalog contract) — ties then break on customer key in the value
-    itself, with no window needed. The standard trick for making
-    arg-extrema aggregates oracle-able.
-
-    At 100 TB: a single map-side-combining aggregate per nation — the
-    cheapest argmax plan there is (no sort, no window).
-    """
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    cents = F.round(F.col("c_acctbal") * 100, 0).cast("bigint")
-    key = cents * F.lit(10000000).cast("bigint") + F.col("c_custkey")
-    return (
-        c.join(F.broadcast(n), F.col("n_nationkey") == F.col("c_nationkey"))
-        .groupBy("n_nationkey")
-        .agg(
-            F.max_by("c_custkey", key).alias("richest_custkey"),
-            F.min_by("c_custkey", key).alias("poorest_custkey"),
-            F.max(cents).cast("bigint").alias("max_bal_cents"),
-            F.min(cents).cast("bigint").alias("min_bal_cents"),
-        )
-    )

@@ -3842,6 +3842,8 @@ def stats_conover_squared_ranks(
     )
 
 
+# One priority level zeroes the score variance: the CASE gives NULL in both
+# engines where ANSI Spark would throw DIVIDE_BY_ZERO.
 stats_cuzick_trend_priority = sql_query(
     "stats_cuzick_trend_priority",
     f"""
@@ -3865,7 +3867,9 @@ stats_cuzick_trend_priority = sql_query(
       FROM ranked
     )
     SELECT n, t,
-      CASE WHEN n >= 2 THEN ROUND(
+      CASE WHEN n >= 2
+            AND CAST(n AS DOUBLE) * CAST(ss2 AS DOUBLE)
+                - CAST(ss AS DOUBLE) * CAST(ss AS DOUBLE) > 0 THEN ROUND(
         (CAST(t AS DOUBLE)
          - CAST(ss AS DOUBLE) * CAST(n + 1 AS DOUBLE) / 2.0)
         / sqrt(CAST(n + 1 AS DOUBLE) / 12.0

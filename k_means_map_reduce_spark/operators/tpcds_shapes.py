@@ -771,9 +771,9 @@ def ds_q93_returns_adjusted_sales(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@query(
+ds_q34_trip_size_bands = sql_query(
     "ds_q34_trip_size_bands",
-    oracle="""
+    """
     WITH trip AS (
       SELECT l_orderkey, COUNT(*) AS n_lines
       FROM lineitem GROUP BY 1
@@ -791,36 +791,6 @@ def ds_q93_returns_adjusted_sales(spark: SparkSession, sf_dir: str) -> DataFrame
     WHERE n_big_trips >= 2
     """,
 )
-def ds_q34_trip_size_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q34/q73's signature: count items per TRIP (order), keep trips
-    whose size falls in a band (5-7 lines — the 'bulk shopper' band in
-    this schema's 1-7 line range), and report customers with repeated
-    banded trips. The group-size-as-filter pattern: the fact aggregates
-    to trip grain FIRST, the band filter runs on the tiny rollup, and
-    only banded trips join the customer dim.
-
-    Scale shape: one fact pass to the (order, count) rollup (map-side
-    partials on the fact's natural key), the orders join is keyed on the
-    rollup's grain, and the customer join happens after the >= 2-trip
-    filter has shrunk rows to the report set. Integer counts only.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    trip = l.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("n_lines"))
-    big = (
-        trip.where(F.col("n_lines").between(5, 7))
-        .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy("o_custkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_big_trips"),
-            F.sum("n_lines").alias("big_trip_lines"),
-        )
-        .where(F.col("n_big_trips") >= 2)
-    )
-    return big.join(c, F.col("c_custkey") == F.col("o_custkey")).select(
-        "c_custkey", "c_name", "c_mktsegment", "n_big_trips", "big_trip_lines"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1504,9 +1474,9 @@ ds_q36_margin_hierarchy = sql_query(
 )
 
 
-@query(
+ds_q38_triple_channel_customers = sql_query(
     "ds_q38_triple_channel_customers",
-    oracle="""
+    """
     WITH tiers AS (
       SELECT o_custkey,
         CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 'hi'
@@ -1524,38 +1494,6 @@ ds_q36_margin_hierarchy = sql_query(
     GROUP BY n_name
     """,
 )
-def ds_q38_triple_channel_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customers active in ALL THREE channels (TPC-DS q38's signature:
-    INTERSECT of three per-channel customer sets, restated as ONE
-    grouped scan with HAVING COUNT(DISTINCT channel) = 3 — the rewrite
-    every engine's optimizer wants, since a literal 3-way INTERSECT
-    scans the fact three times and shuffles full rows). Channels ~
-    priority tiers; reported per customer nation.
-
-    Pure integer counting end to end. At 100 TB: one fact pass to the
-    (customer, distinct-tier) rollup (map-side partials), the survivor
-    set joins the customer dim once, nation broadcasts.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    tier = (
-        F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "hi")
-        .when(F.col("o_orderpriority") == "3-MEDIUM", "mid")
-        .otherwise("lo")
-    )
-    triple = (
-        o.select("o_custkey", tier.alias("tier"))
-        .groupBy("o_custkey")
-        .agg(F.countDistinct("tier").alias("nt"))
-        .where(F.col("nt") == 3)
-    )
-    return (
-        triple.join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n), F.col("n_nationkey") == F.col("c_nationkey"))
-        .groupBy("n_name")
-        .agg(F.count(F.lit(1)).alias("n_triple_customers"))
-    )
 
 
 ds_q28_quantity_band_stats = sql_query(

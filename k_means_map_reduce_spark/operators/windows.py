@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query, sql_query
 from ..sources import load_table
-from ._util import dsum, sql_dsum
+from ._util import sql_dsum
 
 
 @query(
@@ -203,9 +203,9 @@ window_yoy_revenue_growth = sql_query(
 )
 
 
-@query(
+window_ratio_to_report_nation = sql_query(
     "window_ratio_to_report_nation",
-    oracle=f"""
+    f"""
     WITH per_nation AS (
       SELECT r_name, n_name, {sql_dsum('o_totalprice')} AS revenue
       FROM orders
@@ -219,31 +219,6 @@ window_yoy_revenue_growth = sql_query(
     FROM per_nation
     """,
 )
-def window_ratio_to_report_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ratio-to-report (TPC-DS q3/q36 idiom): each nation's share of its
-    region's revenue via an unordered window sum over the aggregate. The
-    whole-partition SUM needs no ORDER BY (no frame sort); shares divide
-    identically-derived doubles, so they hash-match across engines."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    per_nation = (
-        o.join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n), F.col("n_nationkey") == F.col("c_nationkey"))
-        .join(F.broadcast(r), F.col("r_regionkey") == F.col("n_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(dsum("o_totalprice").alias("revenue"))
-    )
-    w = Window.partitionBy("r_name")
-    return per_nation.select(
-        "r_name",
-        "n_name",
-        "revenue",
-        F.round(F.col("revenue") / F.sum("revenue").over(w), 6).alias(
-            "region_share"
-        ),
-    )
 
 
 @query(

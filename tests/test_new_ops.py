@@ -510,9 +510,10 @@ def test_rebate_allocation_sums_exact(spark, sf_dir):
 
 def test_stats_family_degenerate_constant_series(spark, tmp_path):
     """Constant data zeroes variances/determinants: ANSI Spark must yield
-    NULL (via when-guards) exactly where DuckDB's /0 yields NULL, not
-    throw DIVIDE_BY_ZERO — the advisor-flagged latent class, pinned on a
-    synthetic constant-value events table."""
+    NULL (via when-guards, or CASE guards in a query that runs its oracle
+    SQL) exactly where DuckDB's /0 yields NULL, not throw DIVIDE_BY_ZERO.
+    Pinned on synthetic constant-value events, orders and lineitem
+    tables."""
     from k_means_map_reduce_spark.oracle import compare_query
 
     t0 = dt.datetime(2024, 4, 1, 12, 0, 0)
@@ -542,7 +543,33 @@ def test_stats_family_degenerate_constant_series(spark, tmp_path):
         }
     )
     pq.write_table(orders, str(tmp_path / "orders.parquet"))
+    # one l_discount value: the regression's 2x2 determinant is 0; the
+    # 'R' lines share one l_quantity, so that flag's slope has a 0 divisor
+    lineitem = pa.table(
+        {
+            "l_orderkey": pa.array(list(range(20)), pa.int64()),
+            "l_partkey": pa.array([1] * 20, pa.int64()),
+            "l_suppkey": pa.array([1] * 20, pa.int64()),
+            "l_linenumber": pa.array([1] * 20, pa.int32()),
+            "l_quantity": pa.array(
+                [float(1 + i % 7) if i < 10 else 5.0 for i in range(20)], pa.float64()
+            ),
+            "l_extendedprice": pa.array([100.0 + 3 * i for i in range(20)], pa.float64()),
+            "l_discount": pa.array([0.05] * 20, pa.float64()),
+            "l_tax": pa.array([0.02] * 20, pa.float64()),
+            "l_returnflag": pa.array(["N"] * 10 + ["R"] * 10, pa.string()),
+            "l_linestatus": pa.array(["O"] * 20, pa.string()),
+            "l_shipdate": pa.array([t0] * 20, pa.timestamp("us")),
+        }
+    )
+    pq.write_table(lineitem, str(tmp_path / "lineitem.parquet"))
     for name in (
+        "stats_multiple_regression",
+        "stats_regression_by_flag",
+        # one priority level
+        "stats_cuzick_trend_priority",
+        # no purchase over 200: pooled conversion 0, zero variance
+        "ab_test_conversion_ztest",
         "timeseries_autocorr_daily_revenue",
         "events_anomaly_daily_zscore",
         "events_runs_test_daily",
@@ -554,6 +581,20 @@ def test_stats_family_degenerate_constant_series(spark, tmp_path):
     ):
         r = compare_query(spark, name, str(tmp_path))
         assert r.ok, f"{name}: {r.detail}"
+    (reg,) = QUERIES["stats_multiple_regression"](spark, str(tmp_path)).collect()
+    assert reg["n"] == 20
+    assert reg["beta_quantity"] is None and reg["beta_discount"] is None
+    assert reg["intercept"] is None
+    by_flag = {
+        r["l_returnflag"]: r
+        for r in QUERIES["stats_regression_by_flag"](spark, str(tmp_path)).collect()
+    }
+    assert by_flag["N"]["slope"] is not None
+    assert by_flag["R"]["slope"] is None and by_flag["R"]["intercept"] is None
+    (cz,) = QUERIES["stats_cuzick_trend_priority"](spark, str(tmp_path)).collect()
+    assert cz["z_stat"] is None
+    (ab,) = QUERIES["ab_test_conversion_ztest"](spark, str(tmp_path)).collect()
+    assert ab["n_a"] >= 1 and ab["n_b"] >= 1 and ab["z_score"] is None
     got = QUERIES["timeseries_autocorr_daily_revenue"](spark, str(tmp_path)).collect()
     assert got[0]["lag1_autocorr"] is None  # constant series: undefined, NULL
     z = QUERIES["events_runs_test_daily"](spark, str(tmp_path)).collect()
