@@ -21,10 +21,10 @@ Two implementations:
                                                     one argmin expression
                                                     (broadcast, zero shuffle)
    hash partition by cid % R (mapper.py:32-38)    → Spark hash shuffle (implicit)
-   group-by-key (reducer.py:58-61)                → ``groupBy("cid")``
+   group-by-key (reducer.py:58-61)                → ``GROUP BY b.cid``
    per-group vector mean (reducer.py:19-30)       → per-dimension ``avg`` with
                                                     map-side partial aggregation
-   gather (master.py:238-247)                     → ``collect()`` of k×dim rows
+   gather (master.py:238-247)                     → ``collect()`` of k rows
    convergence ε=1e-6 (master.py:97-103)          → max centroid shift, joined
                                                     BY ID (fixes the reference's
                                                     positional-zip bug)
@@ -37,16 +37,22 @@ Two implementations:
    - Ties broken deterministically toward the lowest centroid id (reference
      keeps first-in-iteration-order, mapper.py:64 — same outcome).
 
-Scale notes: the per-iteration plan is scan(cached) → project(argmin expr) →
-partial agg → single k×dim shuffle → final agg → collect(k rows). No cross
-join, no window, no Python on the hot path. Centroids ride into executors as
-literals compiled into the plan. For k·dim ≤ FUSED_ASSIGN_MAX_KDIM (the
-reference's k=5 2-D job) the map step is flat whole-stage codegen: unrolled
-distance chains and a ``least`` argmin, a handful of flops per point. Above
-the gate it is a literal centroid array under higher-order functions
+Scale notes: each iteration is ONE SQL statement (`_lloyd_step`) and one
+job: scan of the fit's cache → project(argmin expr) → partial agg → one
+shuffle of k partial rows → final agg → collect(k rows), summed on the driver
+in cid order. No cross join, no window, no Python on the hot path. Centroids
+ride into executors as literals compiled into the plan, so every iteration
+compiles a new class. For k·dim ≤ FUSED_ASSIGN_MAX_KDIM (the reference's k=5
+2-D job) the fit caches one flat double column per coordinate once init has
+fixed the dimension, and the map step is flat whole-stage codegen over those
+columns: unrolled distance chains and a ``least`` argmin, a handful of flops
+per point, no array decoded. Above the gate it reads the ``vec`` cache with a
+literal centroid array under higher-order functions
 (``transform``/``array_sort``/``aggregate``), whose lambdas are interpreted
 per element (fine for k·dim ≤ ~64k; beyond that, swap the literal for a
-broadcast join — interface unchanged).
+broadcast join — interface unchanged). Centroids in a one-row cross join are
+no way out: the optimizer folds them back into literals, and the join costs
+a broadcast job per iteration (NEXT.md lesson 58).
 """
 
 from __future__ import annotations
@@ -55,6 +61,7 @@ import math
 import os
 import random
 import sys
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.core.rdd import RDD
@@ -62,7 +69,6 @@ from pyspark.rddsampler import RDDSampler
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.vectors import sq_euclidean
 from .session import scoped_conf
 
 
@@ -75,73 +81,75 @@ class KMeansResult:
     sizes: dict[int, int] = field(default_factory=dict)  # cluster id -> |points| at final assignment
 
 
-def _centroid_literal(centroids: list[list[float]]) -> Column:
-    """Centroids as a literal array<struct<cid:int, cvec:array<double>>>.
+def _centroid_sql(centroids: list[list[float]]) -> str:
+    """Centroids as a SQL literal, array<struct<cid:int, cvec:array<double>>>.
 
-    Built as ONE SQL expression string parsed JVM-side: constructing k·dim
-    nested F.lit Columns costs hundreds of py4j round-trips per iteration
-    (~0.3 s at k=8, dim=64), which would dominate small-batch iterations.
-    repr(float) is the shortest exact round-trip form, so no precision loss.
+    One expression string parsed JVM-side: constructing k·dim nested F.lit
+    Columns costs hundreds of py4j round-trips per iteration (~0.3 s at k=8,
+    dim=64), which would dominate small-batch iterations. repr(float) is the
+    shortest exact round-trip form, so no precision loss.
     """
     parts = []
     for cid, vec in enumerate(centroids):
         arr = ",".join(f"{float(x)!r}D" for x in vec)
         parts.append(f"named_struct('cid', {cid}, 'cvec', array({arr}))")
-    return F.expr("array(" + ",".join(parts) + ")")
+    return "array(" + ",".join(parts) + ")"
 
 
-def _fused_argmin(centroids: list[list[float]], vec_col: str) -> Column:
-    """The argmin of `assign_clusters` as one flat codegen expression.
+def _centroid_literal(centroids: list[list[float]]) -> Column:
+    """`_centroid_sql` as a Column."""
+    return F.expr(_centroid_sql(centroids))
 
-    Per centroid, the fold's additions unrolled in the fold's order:
-    ``((0.0D + (v[1]-c1)*(v[1]-c1)) + (v[2]-c2)*(v[2]-c2)) + …`` — the same
-    IEEE operations on the same values, so bit-identical (functions/vectors.py
-    UNROLL_DIM comment). It sits under a ``size(v) = dim`` guard; on any other
-    length (or a NULL array) the fold yields NULL (zip_with pads with NULL and
-    NULL absorbs the sum), so the guard's implicit ELSE NULL is the fold's
-    value there, and element_at never reads out of bounds. ``least`` over
-    struct(dist2, cid) orders exactly like array_sort: NULL dist2 first, NaN
-    after every number, ties to the lower cid.
 
-    Built as ONE SQL string parsed JVM-side, like `_centroid_literal`: the
-    same tree from nested F.* Columns costs a py4j round-trip per node, in
-    every iteration.
+def _fused_argmin(centroids: list[list[float]], coords: list[str], size: str) -> str:
+    """The argmin as one flat codegen SQL expression, struct(dist2, cid).
+
+    `coords` are the SQL expressions of the point's coordinates and `size`
+    that of its length. Per centroid, the fold's additions unrolled in the
+    fold's order: ``((0.0D + (x1-c1)*(x1-c1)) + (x2-c2)*(x2-c2)) + …`` —
+    the same IEEE operations on the same values, so bit-identical to
+    `_folded_argmin` (functions/vectors.py UNROLL_DIM comment). It sits
+    under a ``size = dim`` guard; on any other length (or a NULL array) the
+    fold yields NULL (zip_with pads with NULL and NULL absorbs the sum), so
+    the guard's implicit ELSE NULL is the fold's value there, and a
+    coordinate read from the array is never evaluated out of bounds.
+    ``least`` over struct(dist2, cid) orders exactly like array_sort: NULL
+    dist2 first, NaN after every number, ties to the lower cid.
+
+    Built as ONE SQL string parsed JVM-side, like `_centroid_sql`: the same
+    tree from nested F.* Columns costs a py4j round-trip per node, in every
+    iteration.
     """
-    v = "`" + vec_col.replace("`", "``") + "`"
     structs = []
     for cid, cvec in enumerate(centroids):
         dist2 = "0.0D"
-        for i, c in enumerate(cvec, start=1):
-            diff = f"(CAST(element_at({v}, {i}) AS DOUBLE) - {float(c)!r}D)"
+        for x, c in zip(coords, cvec):
+            diff = f"({x} - {float(c)!r}D)"
             dist2 = f"({dist2} + {diff} * {diff})"
-        guarded = f"CASE WHEN size({v}) = {len(cvec)} THEN {dist2} END"
+        guarded = f"CASE WHEN {size} = {len(cvec)} THEN {dist2} END"
         structs.append(f"named_struct('dist2', {guarded}, 'cid', {cid})")
     if len(structs) == 1:  # least() takes two or more arguments
-        return F.expr(structs[0])
-    return F.expr("least(" + ", ".join(structs) + ")")
+        return structs[0]
+    return "least(" + ", ".join(structs) + ")"
 
 
-def _folded_argmin(centroids: list[list[float]], vec_col: str) -> Column:
-    """The argmin over the centroid literal with higher-order functions:
-    transform each centroid to struct(dist2, cid), array_sort (struct
-    ordering is lexicographic, so ties break toward the lowest cid), take the
-    head. Every lambda is interpreted per element (CodegenFallback)."""
-    cents = _centroid_literal(centroids)
-    return F.element_at(
-        F.array_sort(
-            F.transform(
-                cents,
-                lambda c: F.struct(
-                    sq_euclidean(F.col(vec_col), c["cvec"]).alias("dist2"),
-                    c["cid"].alias("cid"),
-                ),
-            )
-        ),
-        1,
+def _folded_argmin(centroids: list[list[float]], vec: str) -> str:
+    """The argmin over the centroid literal with higher-order functions, as
+    SQL: transform each centroid to struct(dist2, cid) with the squared
+    distance of functions/vectors.py `sq_euclidean`, array_sort (struct
+    ordering is lexicographic, so ties break toward the lowest cid), take
+    the head. Every lambda is interpreted per element (CodegenFallback)."""
+    dist2 = (
+        f"aggregate(zip_with(CAST({vec} AS ARRAY<DOUBLE>), _c.cvec, "
+        "(_x, _y) -> (_x - _y) * (_x - _y)), 0.0D, (_acc, _t) -> _acc + _t)"
+    )
+    return (
+        f"element_at(array_sort(transform({_centroid_sql(centroids)}, "
+        f"_c -> named_struct('dist2', {dist2}, 'cid', _c.cid))), 1)"
     )
 
 
-# Largest k·dim for which assign_clusters takes the fused expression. The
+# Largest k·dim for which the assignment takes the fused expression. The
 # fused tree's Catalyst/compile cost grows with k·dim, and once its generated
 # method is too big for the JVM to JIT-compile it runs interpreted; its win
 # is per row. kmeans_native fit time, 10 iterations, 3 input partitions,
@@ -155,6 +163,11 @@ def _folded_argmin(centroids: list[list[float]], vec_col: str) -> Column:
 FUSED_ASSIGN_MAX_KDIM = 16
 
 
+def _fuses(centroids: list[list[float]]) -> bool:
+    """Whether the assignment against `centroids` takes the fused argmin."""
+    return bool(centroids) and len(centroids) * len(centroids[0]) <= FUSED_ASSIGN_MAX_KDIM
+
+
 def assign_clusters(
     df: DataFrame, centroids: list[list[float]], vec_col: str = "vec"
 ) -> DataFrame:
@@ -166,31 +179,49 @@ def assign_clusters(
     above it, the higher-order-function fold (`_folded_argmin`). Both give
     bit-identical cid and dist2, ties broken toward the lowest cid.
     """
-    if centroids and len(centroids) * len(centroids[0]) <= FUSED_ASSIGN_MAX_KDIM:
-        best = _fused_argmin(centroids, vec_col)
+    v = "`" + vec_col.replace("`", "``") + "`"
+    if _fuses(centroids):
+        coords = [
+            f"CAST(element_at({v}, {i}) AS DOUBLE)"
+            for i in range(1, len(centroids[0]) + 1)
+        ]
+        best = F.expr(_fused_argmin(centroids, coords, f"size({v})"))
     else:
-        best = _folded_argmin(centroids, vec_col)
+        best = F.expr(_folded_argmin(centroids, v))
     return df.withColumn("cid", best["cid"]).withColumn("dist2", best["dist2"])
 
 
-def _mean_by_cluster(assigned: DataFrame, dim: int) -> list[tuple[int, int, list[float], float]]:
-    """groupBy(cid) → per-dimension avg + count + sum(dist2); single shuffle.
+def _lloyd_step(
+    spark: SparkSession, table: str, centroids: list[list[float]]
+) -> list[tuple[int, int, list[float], float]]:
+    """One Lloyd iteration (reference ops #7-#13) as ONE SQL statement:
 
-    Returns [(cid, n, mean_vec, sum_dist2)]. Catalyst plans this as partial
-    (map-side) + final aggregation: the shuffle carries k×(dim+2) partials per
-    input partition, not data rows — the same asymptotics as the reference's
-    combiner-less reducer, minus the materialized partition files
-    (/root/reference/mapper.py:72-84).
+        SELECT b.cid, count(1) AS n, sum(b.dist2) AS sum_dist2, avg(x0) AS m0, …
+        FROM (SELECT *, <argmin> AS b FROM table) GROUP BY b.cid
+
+    Returns [(cid, n, mean_vec, sum_dist2)] in cid order. Below the gate
+    (`_fuses`) ``table`` is the fit's flat cache (``sz``, ``x0``, ``x1``, …)
+    and the argmin is `_fused_argmin` over those columns; above it the
+    table holds ``vec``, read with the fold and ``element_at``. Catalyst
+    plans the GROUP BY as partial (map-side) + final aggregation: the
+    shuffle carries k×(dim+2) partials per input partition, not data rows —
+    the reference's combiner-less reducer minus the materialized partition
+    files (/root/reference/mapper.py:72-84).
     """
-    aggs = [F.count(F.lit(1)).alias("n"), F.sum("dist2").alias("sum_dist2")]
-    aggs += [
-        F.avg(F.element_at(F.col("vec"), i + 1)).alias(f"m{i}") for i in range(dim)
-    ]
-    rows = assigned.groupBy("cid").agg(*aggs).collect()
-    return [
-        (r["cid"], r["n"], [r[f"m{i}"] for i in range(dim)], r["sum_dist2"])
-        for r in rows
-    ]
+    dim = len(centroids[0])
+    if _fuses(centroids):
+        xs = [f"x{i}" for i in range(dim)]
+        best = _fused_argmin(centroids, xs, "sz")
+    else:
+        xs = [f"element_at(vec, {i})" for i in range(1, dim + 1)]
+        best = _folded_argmin(centroids, "vec")
+    means = ", ".join(f"avg({x}) AS m{i}" for i, x in enumerate(xs))
+    q = (
+        f"SELECT b.cid, count(1) AS n, sum(b.dist2) AS sum_dist2, {means} "
+        f"FROM (SELECT *, {best} AS b FROM {table}) GROUP BY b.cid"
+    )
+    rows = sorted(spark.sql(q).collect(), key=lambda r: r[0])
+    return [(r[0], r[1], list(r[3:]), r[2]) for r in rows]
 
 
 def _replay_take_sample(counts: dict[int, int], num: int, seed: int) -> list[tuple[int, int]]:
@@ -409,18 +440,29 @@ def kmeans_native(
     centroids in one cluster can leave a centre spanning two. Use "k||" when
     recovering the true clusters matters.
 
-    Each iteration is one job: the fit turns AQE off (AQE runs each shuffle
-    stage as its own job) and caps ``spark.sql.shuffle.partitions`` at k, as
-    reducers beyond k get no key (the reference routes ``cid % R``). Centers
-    and sizes do not depend on the reducer count; each WSSSE's last bits do,
-    as it sums the per-cluster partials in collected order. Both confs are
-    restored on exit, but they are session-wide: the fit is not safe
-    alongside concurrent queries on the same session."""
+    Each iteration is one job running one SQL statement (`_lloyd_step`):
+    a scan of the fit's cache, the argmin projection, the partial
+    aggregate, one shuffle of k partial rows, the final aggregate, then the
+    collect of k rows. The input is cached as ``vec`` (init samples from
+    it); once init has fixed ``dim``, and when k·dim ≤
+    FUSED_ASSIGN_MAX_KDIM, the loop reads a second, flat cache of one
+    double column per coordinate, filled inside the first iteration's job,
+    so no iteration decodes the array. The loop names its cache through a
+    temp view that lives as long as the fit. The fit turns AQE off (AQE
+    runs each shuffle stage as its own job) and caps
+    ``spark.sql.shuffle.partitions`` at k, as reducers beyond k get no key
+    (the reference routes ``cid % R``). Centers, sizes and WSSSE (summed in
+    cid order) do not depend on the reducer count. On every exit the confs
+    are restored, the view dropped and both caches released, but the
+    confs are session-wide: the fit is not safe alongside concurrent
+    queries on the same session."""
     pts = (
         df.select(F.col(vec_col).cast("array<double>").alias("vec"))
         .where(F.col("vec").isNotNull() & (F.size("vec") > 0))
         .cache()  # planned here, under the caller's confs: fixes the sample's partitions
     )
+    caches = [pts]
+    view = f"kmeans_native_{uuid.uuid4().hex}"
     spark = df.sparkSession
     reducers = min(int(spark.conf.get("spark.sql.shuffle.partitions")), k)
     one_job = {
@@ -436,14 +478,22 @@ def kmeans_native(
             else:
                 raise ValueError(f"unknown init {init!r}")
             dim = len(centroids[0])
+            frame = pts
+            if _fuses(centroids):
+                xs = (f"element_at(vec, {i + 1}) AS x{i}" for i in range(dim))
+                frame = pts.selectExpr("size(vec) AS sz", *xs).cache()
+                caches.append(frame)
+            # A view for the whole fit: spark.sql(q, pts=frame) would drop
+            # its per-call view after each statement, and dropping a view
+            # uncaches the frame it names (NEXT.md lesson 58).
+            frame.createTempView(view)
 
             wssse_history: list[float] = []
             converged = False
             it = 0
             sizes: dict[int, int] = {}
             for it in range(1, max_iter + 1):
-                assigned = assign_clusters(pts, centroids, "vec")
-                stats = _mean_by_cluster(assigned, dim)
+                stats = _lloyd_step(spark, view, centroids)
                 new_centroids = list(centroids)  # empty clusters keep old centroid
                 sizes = {cid: 0 for cid in range(k)}
                 for cid, n, mean_vec, _sd in stats:
@@ -461,7 +511,9 @@ def kmeans_native(
                     converged = True
                     break
         finally:
-            pts.unpersist()
+            spark.catalog.dropTempView(view)
+            for cache in caches:
+                cache.unpersist()
     return KMeansResult(centroids, it, converged, wssse_history, sizes)
 
 

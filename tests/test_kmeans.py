@@ -409,29 +409,155 @@ def test_native_fit_one_job_per_iteration(spark):
 
 def test_native_fit_restores_confs(spark, monkeypatch):
     """The fit runs with AQE off and at most k shuffle partitions, and puts
-    both confs back after a normal fit and after a failing one."""
+    both confs back after a normal fit and after a failing one. Neither
+    leaves a cached RDD or a temp view behind."""
     from k_means_map_reduce_spark import kmeans as K
     from k_means_map_reduce_spark.session import scoped_conf
 
     keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     df = _blobs(spark, [[0.0, 0.0], [5.0, 5.0]], n_per=20)
+    step = K._lloyd_step
+    jsc = spark.sparkContext._jsc.sc()
+
+    def stored():
+        return {info.id() for info in jsc.getRDDStorageInfo()}
+
+    held = stored()
+
+    def fit_leftovers():
+        """RDDs holding blocks that were not held before the fit, and the
+        fit's temp views."""
+        views = {t.name for t in spark.catalog.listTables() if t.name.startswith("kmeans_native_")}
+        return (stored() - held) | views
+
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": "7"}):
         before = [spark.conf.get(key) for key in keys]
         K.kmeans_native(df, vec_col="vec", k=3, max_iter=3, seed=42)
         assert [spark.conf.get(key) for key in keys] == before
+        assert fit_leftovers() == set()
 
         seen = []
 
-        def fail(assigned, dim):
+        def fail(*args):
             seen.append([spark.conf.get(key) for key in keys])
             raise RuntimeError("injected")
 
-        monkeypatch.setattr(K, "_mean_by_cluster", fail)
+        monkeypatch.setattr(K, "_lloyd_step", fail)
         with pytest.raises(RuntimeError, match="injected"):
             K.kmeans_native(df, vec_col="vec", k=3, max_iter=3, seed=42)
         assert seen == [["false", "3"]]
         assert [spark.conf.get(key) for key in keys] == before
+        assert fit_leftovers() == set()
+
+        # fails after one real iteration, so both of the fit's caches hold blocks
+        steps: list = []
+
+        def fail_second(*args):
+            if steps:
+                raise RuntimeError("injected")
+            steps.append(args)
+            return step(*args)
+
+        monkeypatch.setattr(K, "_lloyd_step", fail_second)
+        with pytest.raises(RuntimeError, match="injected"):
+            K.kmeans_native(df, vec_col="vec", k=3, max_iter=3, seed=42)
+        assert len(steps) == 1
+        assert [spark.conf.get(key) for key in keys] == before
+        assert fit_leftovers() == set()
     # a key that had no value is unset again, not left at the scoped value
     with scoped_conf(spark, {"spark.kmmr.test.scoped": "1"}):
         assert spark.conf.get("spark.kmmr.test.scoped") == "1"
     assert spark.conf.get("spark.kmmr.test.scoped", None) is None
+
+
+def _parallelized(spark, vecs, slices=3):
+    """A frame of vectors in a fixed number of partitions, whatever the core
+    count, so random init draws the same sample on every box."""
+    rdd = spark.sparkContext.parallelize([(v,) for v in vecs], slices)
+    return spark.createDataFrame(rdd, "vec ARRAY<DOUBLE>")
+
+
+def test_wssse_independent_of_reducers(spark):
+    """Each WSSSE sums the per-cluster partials in cid order, so its bits do
+    not depend on how many reducers the k aggregate rows land in."""
+    from k_means_map_reduce_spark.session import scoped_conf
+
+    rng = random.Random(17)
+    vecs = [
+        [c + rng.gauss(0, 10.0 ** e) for c in (40.0 * e, -7.0 * e)]
+        for e in range(-3, 3)
+        for _ in range(80)
+    ]
+    df = _parallelized(spark, vecs)
+    hists = {}
+    for reducers in ("1", "2", "5"):
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": reducers}):
+            r = kmeans_native(df, vec_col="vec", k=5, max_iter=6, tol=0.0, seed=3)
+        hists[reducers] = [x.hex() for x in r.wssse_history]
+    assert hists["1"] == hists["2"] == hists["5"], hists
+
+
+def test_fold_fit_equals_fused_fit(spark, monkeypatch):
+    """The fused step over the flat cache and the fold over ``vec`` give the
+    same fit, bit for bit, through distance ties and duplicated points. The
+    start is fixed so that (1, 0), (0, 1) and (1, 1) tie between centroids."""
+    from k_means_map_reduce_spark import kmeans as K
+
+    start = [[0.0, 0.0], [2.0, 0.0], [0.0, 2.0]]
+    monkeypatch.setattr(K, "_init_random", lambda pts, k, seed: [list(c) for c in start])
+    rng = random.Random(23)
+    vecs = [[1.0, 0.0]] * 7 + [[0.0, 1.0]] * 5 + [[1.0, 1.0]] * 3
+    for c in start:
+        blob = [[x + rng.uniform(-0.4, 0.4) for x in c] for _ in range(30)]
+        vecs += blob + blob[:10]  # duplicated points
+    df = _parallelized(spark, vecs)
+
+    folds = []
+    folded = K._folded_argmin
+
+    def spy(centroids, vec):
+        folds.append(vec)
+        return folded(centroids, vec)
+
+    monkeypatch.setattr(K, "_folded_argmin", spy)
+    fused = kmeans_native(df, vec_col="vec", k=3, max_iter=8, tol=0.0, seed=42)
+    assert folds == []
+    monkeypatch.setattr(K, "FUSED_ASSIGN_MAX_KDIM", 0)
+    fold = kmeans_native(df, vec_col="vec", k=3, max_iter=8, tol=0.0, seed=42)
+    assert len(folds) == 8
+    assert fused.centers == fold.centers
+    assert fused.sizes == fold.sizes
+    assert fused.wssse_history == fold.wssse_history
+    assert sum(fused.sizes.values()) == len(vecs)
+
+
+# repr of (centers, sorted sizes, wssse_history) of test_native_fit_pinned's
+# fit; WSSSE summed in cid order.
+PINNED_FIT = (
+    "[[-23.596311862223548, -25.804905955535578], "
+    "[-10.012836322136867, 21.07755054854532], "
+    "[-2.1138394051314413, 23.080651894098953], "
+    "[-19.539473918467955, 38.53000212084774], "
+    "[31.37286907417657, -0.18209561606243913]]",
+    "[(0, 400), (1, 378), (2, 420), (3, 402), (4, 400)]",
+    "[161078.93756154392, 78952.84458336543, 60740.705895412764, "
+    "58573.493720710016, 58040.67379494089, 57897.35622759145, "
+    "57852.86780793437, 57844.52271961292, 57841.52731901757, "
+    "57838.52042079552]",
+)
+
+
+def test_native_fit_pinned(spark):
+    """A fixed, seeded 2,000-point, 5-blob fit at k=5 with 2 reducers (the
+    reference CLI shape) gives these exact floats. A change to the step's
+    arithmetic, its summation order or the init's draw moves them."""
+    from k_means_map_reduce_spark.session import scoped_conf
+
+    rng = random.Random(2024)
+    sites = [[rng.uniform(-50, 50), rng.uniform(-50, 50)] for _ in range(5)]
+    vecs = [[x + rng.gauss(0, 4.0) for x in sites[i % 5]] for i in range(2000)]
+    df = _parallelized(spark, vecs)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "2"}):
+        r = kmeans_native(df, vec_col="vec", k=5, max_iter=10, tol=0.0, seed=42)
+    got = (repr(r.centers), repr(sorted(r.sizes.items())), repr(r.wssse_history))
+    assert got == PINNED_FIT, got

@@ -641,6 +641,38 @@ def test_kmeans_assignment_fused_below_gate(spark):
     assert "array_sort" in r.text and "lambdafunction" in r.text.lower()
 
 
+def test_kmeans_iteration_reads_flat_cache(spark, monkeypatch):
+    """At the benchmark shape (k=5, dim=2) each Lloyd iteration is one SQL
+    statement over the fit's flat cache: its executed plan scans the cached
+    ``sz``/``x0``/``x1`` columns, and nothing above that scan decodes the
+    array (no ``element_at``) or runs a CodegenFallback lambda."""
+    from pyspark.sql import SparkSession
+
+    from k_means_map_reduce_spark.kmeans import kmeans_native
+
+    steps = []
+    sql = SparkSession.sql
+
+    def spy(self, query, *args, **kwargs):
+        df = sql(self, query, *args, **kwargs)
+        if "GROUP BY b.cid" in query:
+            steps.append(df)
+        return df
+
+    monkeypatch.setattr(SparkSession, "sql", spy)
+    rows = [([float(i % 11), float(i % 7)],) for i in range(300)]
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), "vec array<double>")
+    r = kmeans_native(df, vec_col="vec", k=5, max_iter=3, tol=0.0, seed=42)
+    assert len(steps) == r.iterations == 3
+    for step in steps:
+        plan = step._jdf.queryExecution().executedPlan().toString()
+        above, scan = plan.split("InMemoryTableScan", 1)
+        scan_cols = scan.splitlines()[0]
+        assert re.search(r"\[sz#\d+, x0#\d+, x1#\d+\]", scan_cols), plan
+        assert "least(" in above, plan
+        assert "element_at" not in above and "lambdafunction" not in above.lower(), plan
+
+
 def test_geo_proximity_joins_on_raw_cell_columns(spark, sf_dir):
     """geo_grid_proximity_join must join on the raw (cx, cy) longs, never
     the interleaved Morton key: a wide expression as an equi-join key is
